@@ -47,11 +47,18 @@ object Engine {
 
   /** The reference's download step (building-inspector.js:337-369):
     * sequential, rate-limited driver-side ingest of the three datasets
-    * to landing files — consolidated paginated to NDJSON (read back
-    * parallel via [[graft.sources.GeoJson.featuresNdjson]]), toponyms
-    * and sheets single-shot. `extractFeatures` parses one page body
-    * into its features (injected: keeps this module HTTP-client-pure
-    * and lets tests drive the loop offline).
+    * to landing files — consolidated paginated to
+    * `consolidated.ndjson` (one Feature per line), toponyms and sheets
+    * single-shot to their upstream FeatureCollection bodies.
+    * `extractFeatures` parses one page body into its features
+    * (injected: keeps this module HTTP-client-pure and lets tests
+    * drive the loop offline).
+    *
+    * [[transform]] reads these files as landed: point
+    * `Dirs.consolidated` at `consolidated.ndjson` and
+    * [[graft.sources.GeoJson.consolidated]] sees from the file's head
+    * that it is NDJSON, reading it in parallel through
+    * [[graft.sources.GeoJson.featuresNdjson]].
     */
   def download(
       baseUrl: String,

@@ -61,89 +61,6 @@ object GeoUtil {
       py >= math.min(y1, y2) && py <= math.max(y1, y2)
   }
 
-  /** Materialize Catalyst ring data as JVM-primitive nested arrays
-    * (Java-serializable, for broadcast indices).
-    */
-  def toRawRings(rings: ArrayData): Array[Array[Array[Double]]] =
-    Array.tabulate(rings.numElements()) { r =>
-      val ring = rings.getArray(r)
-      Array.tabulate(ring.numElements()) { i =>
-        ring.getArray(i).toDoubleArray()
-      }
-    }
-
-  /** [[containsXY]] over primitive ring arrays. */
-  def containsRawXY(rings: Array[Array[Array[Double]]], px: Double, py: Double): Boolean = {
-    var crossings = 0
-    var r = 0
-    while (r < rings.length) {
-      val ring = rings(r)
-      val n = ring.length
-      var i = 0
-      var j = n - 1
-      while (i < n) {
-        val xi = ring(i)(0); val yi = ring(i)(1)
-        val xj = ring(j)(0); val yj = ring(j)(1)
-        if (onSegment(px, py, xi, yi, xj, yj)) return true
-        if ((yi > py) != (yj > py)) {
-          val xCross = (xj - xi) * (py - yi) / (yj - yi) + xi
-          if (px < xCross) crossings += 1
-        }
-        j = i
-        i += 1
-      }
-      r += 1
-    }
-    (crossings & 1) == 1
-  }
-
-  /** [[bbox]] over primitive ring arrays. */
-  def bboxRaw(rings: Array[Array[Array[Double]]]): Array[Double] = {
-    var xmin = java.lang.Double.POSITIVE_INFINITY
-    var ymin = java.lang.Double.POSITIVE_INFINITY
-    var xmax = java.lang.Double.NEGATIVE_INFINITY
-    var ymax = java.lang.Double.NEGATIVE_INFINITY
-    if (rings.nonEmpty) {
-      val ring = rings(0)
-      var i = 0
-      while (i < ring.length) {
-        val x = ring(i)(0); val y = ring(i)(1)
-        if (x < xmin) xmin = x
-        if (y < ymin) ymin = y
-        if (x > xmax) xmax = x
-        if (y > ymax) ymax = y
-        i += 1
-      }
-    }
-    Array(xmin, ymin, xmax, ymax)
-  }
-
-  /** Bbox of a GeoJSON Polygon's exterior ring as [xmin, ymin, xmax,
-    * ymax]; the cheap prefilter standing in for the reference's R-tree
-    * (/root/reference/geo-indices.js:30-34, SURVEY.md §4.1).
-    */
-  def bbox(rings: ArrayData): Array[Double] = {
-    var xmin = java.lang.Double.POSITIVE_INFINITY
-    var ymin = java.lang.Double.POSITIVE_INFINITY
-    var xmax = java.lang.Double.NEGATIVE_INFINITY
-    var ymax = java.lang.Double.NEGATIVE_INFINITY
-    if (rings.numElements() > 0) {
-      val ring = rings.getArray(0)
-      var i = 0
-      val n = ring.numElements()
-      while (i < n) {
-        val p = ring.getArray(i)
-        val x = p.getDouble(0); val y = p.getDouble(1)
-        if (x < xmin) xmin = x
-        if (y < ymin) ymin = y
-        if (x > xmax) xmax = x
-        if (y > ymax) ymax = y
-        i += 1
-      }
-    }
-    Array(xmin, ymin, xmax, ymax)
-  }
-
   /** Spread the low 32 bits of v to the even bit positions of a long
     * (the standard mask-shift interleave ladder — O(1), branch-free).
     */

@@ -383,24 +383,6 @@ case class MortonInterleave(left: Expression, right: Expression)
     copy(left = l, right = r)
 }
 
-/** Bbox of a GeoJSON polygon's exterior ring as [xmin, ymin, xmax,
-  * ymax] — computed once per polygon row when projected on a join's
-  * build side (see graft.plans.AddBboxPrefilter).
-  */
-case class PolyBbox(child: Expression)
-    extends UnaryExpression {
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(rings: Any): Any =
-    ArrayData.toArrayData(GeoUtil.bbox(rings.asInstanceOf[ArrayData]))
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(" +
-        s"graft.functions.GeoUtil.bbox($c))")
-  override protected def withNewChildInternal(newChild: Expression): PolyBbox =
-    copy(child = newChild)
-}
-
 /** Native Generator (UDTF surface, SURVEY §2.5): emits one row per
   * word n-gram of a text column — the custom-generator counterpart to
   * posexplode, streaming rows lazily instead of materializing the

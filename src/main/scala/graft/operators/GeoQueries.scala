@@ -199,8 +199,9 @@ object GeoQueries {
          |       cx + dx AS kx, cy + dy AS ky
          |FROM (${ptsCellSql(customer)}) CROSS JOIN offs""".stripMargin
 
-    /** Salt factor for the blocked join key (manual override via
-      * SPARK_GRAFT_SPATIAL_SALT / -Dgraft.spatial.salt). Geometric
+    // ----- planner-chosen selective salt -----
+
+    /** The salt decision for one corpus dir. Geometric
       * concentration — a "downtown" where the same cells hold far
       * more polygons AND points than average — skews BOTH sides of
       * the (layer, kx, ky) key, which is the one shape AQE's
@@ -214,34 +215,15 @@ object GeoQueries {
       * (pmod of its key hash), so every candidate pair still meets
       * exactly once — result sets are identical for any S.
       *
-      * Since round 7 the default is PLANNER-CHOSEN ([[saltPlan]]): a
-      * sampled per-cell histogram of the build side decides, per
-      * corpus, whether to salt and picks S — and salts ONLY the hot
-      * cells, so a uniform corpus pays nothing and a skewed one does
-      * not replicate its entire build side S×. The env/prop knob
-      * remains as a manual override: >1 forces the original global
-      * salt everywhere, 0/1 forces salting fully off (auto included).
+      * The salt is PLANNER-CHOSEN ([[saltPlan]]): a sampled per-cell
+      * histogram of the build side decides, per corpus, whether to
+      * salt and picks S — and salts ONLY the hot cells, so a uniform
+      * corpus pays nothing and a skewed one does not replicate its
+      * entire build side S×.
       */
-    def saltS: Int =
-      sys.props.get("graft.spatial.salt").orElse(sys.env.get("SPARK_GRAFT_SPATIAL_SALT"))
-        .map(_.toInt).filter(_ > 1).getOrElse(1)
-
-    /** Polygons replicated under the S salts (global manual mode). */
-    def polysSalted(polys: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-      polys.withColumn("psalt", explode(typedLit((0 until saltS).toArray)))
-
-    /** Probe rows with their single salt (global manual mode). */
-    def probeSalted(probe: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-      probe.withColumn("salt", pmod(hash(col("c_custkey")), lit(saltS)))
-
-    // ----- planner-chosen selective salt (round 7) -----
-
-    /** The salt decision for one corpus dir. */
     sealed trait SaltMode
-    /** No salting: uniform key population (or forced off). */
+    /** No salting: uniform key population. */
     case object SaltOff extends SaltMode
-    /** Manual global salt: every polygon replicated under S salts. */
-    final case class SaltGlobal(s: Int) extends SaltMode
     /** Planner-chosen selective salt: only the listed hot
       * (layer, cellX, cellY) keys are salted under S; every other key
       * keeps salt 0 on both sides, so the replication cost is
@@ -275,20 +257,13 @@ object GeoQueries {
     private val saltPlanCache =
       new java.util.concurrent.ConcurrentHashMap[String, SaltMode]()
 
-    /** The per-dir salt decision: manual knob if set, else the
-      * memoized stats-derived plan. Called at query-BUILD time on the
-      * driver — the histogram is one sampled two-column aggregation
-      * per corpus, the same cost class as the moduli count.
+    /** The per-dir salt decision: the memoized stats-derived plan.
+      * Called at query-BUILD time on the driver — the histogram is one
+      * sampled two-column aggregation per corpus, the same cost class
+      * as the moduli count.
       */
-    def saltPlan(s: org.apache.spark.sql.SparkSession, d: String): SaltMode = {
-      val manual = sys.props.get("graft.spatial.salt")
-        .orElse(sys.env.get("SPARK_GRAFT_SPATIAL_SALT")).map(_.toInt)
-      manual match {
-        case Some(v) if v > 1 => SaltGlobal(v)
-        case Some(_)          => SaltOff // explicit 0/1 = force off, auto too
-        case None => saltPlanCache.computeIfAbsent(d, _ => autoSaltPlan(s, d))
-      }
-    }
+    def saltPlan(s: org.apache.spark.sql.SparkSession, d: String): SaltMode =
+      saltPlanCache.computeIfAbsent(d, _ => autoSaltPlan(s, d))
 
     /** The PURE decision rule, exposed so SpatialGridSpec can pin the
       * boundary without data plumbing: 0 = stay off, else the salt
@@ -405,12 +380,10 @@ object GeoQueries {
       import s.implicits._
       val polys0 = SpatialGrid.withMinCornerCell(SpatialGrid.polysWithRings(s, d))
       val probe0 = SpatialGrid.probe(s, d)
-      // both-sides-skew salting: manual knob forces global; otherwise
-      // the planner's sampled histogram decides (hot cells only)
+      // both-sides-skew salting: the planner's sampled histogram
+      // decides (hot cells only)
       val (polys, probe, salted) = SpatialGrid.saltPlan(s, d) match {
         case SpatialGrid.SaltOff => (polys0, probe0, false)
-        case SpatialGrid.SaltGlobal(_) =>
-          (SpatialGrid.polysSalted(polys0), SpatialGrid.probeSalted(probe0), true)
         case SpatialGrid.SaltCells(n, hot) =>
           (SpatialGrid.polysSaltedCells(s, polys0, n, hot),
             SpatialGrid.probeSaltedCells(s, probe0, n, hot), true)
@@ -609,19 +582,11 @@ object GeoQueries {
       // stays UNBLOCKED (j3Spatial.oracle), so a blocking bug in this
       // text hash-mismatches instead of cancelling out.
       // both-sides-skew salting, same shape and same decision as the
-      // DataFrame j3: manual global, planner-chosen hot cells, or off
-      val (saltCte, polysCte, probeCte, saltCond) = SpatialGrid.saltPlan(s, d) match {
-        case SpatialGrid.SaltGlobal(n) => (
-          s"salts AS (SELECT explode(sequence(0, ${n - 1})) AS psalt),",
-          s"SELECT * FROM (${SpatialGrid.polysCellSql("graft_supplier")}) CROSS JOIN salts",
-          s"SELECT *, pmod(hash(c_custkey), $n) AS salt" +
-            s" FROM (${SpatialGrid.probeSql("graft_customer")})",
-          " AND salt = psalt",
-        )
+      // DataFrame j3: planner-chosen hot cells, or off
+      val (polysCte, probeCte, saltCond) = SpatialGrid.saltPlan(s, d) match {
         case SpatialGrid.SaltCells(n, hot) =>
           SpatialGrid.hotCellsDf(s, hot).createOrReplaceTempView("graft_hot_cells")
           (
-            "",
             s"""SELECT p.*, explode(CASE WHEN h.h_layer IS NOT NULL
                |         THEN sequence(0, ${n - 1}) ELSE array(0) END) AS psalt
                |FROM (${SpatialGrid.polysCellSql("graft_supplier")}) p
@@ -637,7 +602,6 @@ object GeoQueries {
             " AND salt = psalt",
           )
         case SpatialGrid.SaltOff => (
-          "",
           s"SELECT * FROM (${SpatialGrid.polysCellSql("graft_supplier")})",
           s"SELECT * FROM (${SpatialGrid.probeSql("graft_customer")})",
           "",
@@ -645,7 +609,6 @@ object GeoQueries {
       }
       s.sql(s"""
         WITH ${SpatialGrid.gridSql("graft_supplier")},
-        $saltCte
         polys AS ($polysCte),
         ${SpatialGrid.offsSql},
         probe AS ($probeCte)

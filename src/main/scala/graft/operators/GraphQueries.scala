@@ -1378,7 +1378,10 @@ object GraphQueries {
       // newly-reached node count per (round, landmark bit)
       val counts = scala.collection.mutable.ArrayBuffer.empty[Array[Long]]
       var round = 1
-      var frontierNonEmpty = true
+      // no landmark (no nation-0 supplier): skip the rounds — the
+      // reach-count sums over an empty state frame are NULL — and
+      // return the empty result
+      var frontierNonEmpty = nSeeds > 0
       while (round <= BfsRounds && frontierNonEmpty) {
         val nbr = sym
           .join(state.filter($"fmask" =!= 0L).select($"node", $"fmask"),

@@ -1,10 +1,12 @@
 package graft.sources
 
+import com.fasterxml.jackson.core.{JsonFactory, JsonToken}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** GeoJSON FeatureCollection readers (SURVEY.md §2.1 S4/S5/S6).
+/** GeoJSON landing-file readers (SURVEY.md §2.1 S4/S5/S6).
   *
   * Schemas are fixed and explicit — never inferred — because the
   * inputs carry two shapes Spark inference cannot hold: the variant
@@ -19,10 +21,12 @@ import org.apache.spark.sql.types._
   * collection) because the reference's first-seen dedup semantics
   * (building-inspector.js:92-100) are defined by file order.
   *
-  * Scale note: `multiLine=true` on one FeatureCollection document
-  * parses on a single task — fine for landing files; at 100 TB the
-  * download step writes NDJSON (one feature per line) and
-  * [[featuresNdjson]] reads it fully parallel with the same schema.
+  * The consolidated landing file is either one FeatureCollection
+  * document or NDJSON (one Feature per line, what the download step's
+  * paginated writer lands); [[consolidated]] tells them apart from the
+  * file's head. Scale note: `multiLine=true` on one FeatureCollection
+  * document parses on a single task, while [[featuresNdjson]] reads
+  * NDJSON fully parallel with the same schema.
   */
 object GeoJson {
 
@@ -92,8 +96,37 @@ object GeoJson {
       .withColumn("ingest_order", monotonically_increasing_id())
       .select(col("ingest_order"), struct(col("type"), col("properties"), col("geometry")).as("feature"))
 
+  /** True when the file holds one FeatureCollection document, false
+    * for NDJSON Features. Decided by the first top-level `type` or
+    * `features` key of the first JSON object, so only the file's head
+    * is read.
+    */
+  def isFeatureCollection(spark: SparkSession, path: String): Boolean = {
+    val p = new Path(path)
+    val in: java.io.InputStream =
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).open(p)
+    val parser = new JsonFactory().createParser(in)
+    try {
+      var verdict: Option[Boolean] = None
+      if (parser.nextToken() == JsonToken.START_OBJECT) {
+        while (verdict.isEmpty && parser.nextToken() == JsonToken.FIELD_NAME) {
+          val key = parser.currentName()
+          parser.nextToken()
+          if (key == "features") verdict = Some(true)
+          else if (key == "type") verdict = Some(parser.getText == "FeatureCollection")
+          else parser.skipChildren()
+        }
+      }
+      verdict.getOrElse(false)
+    } finally parser.close()
+  }
+
+  /** The consolidated landing file in either layout: NDJSON as the
+    * download step lands it, or one FeatureCollection document.
+    */
   def consolidated(spark: SparkSession, path: String): DataFrame =
-    features(spark, path, consolidatedFeatureSchema)
+    if (isFeatureCollection(spark, path)) features(spark, path, consolidatedFeatureSchema)
+    else featuresNdjson(spark, path, consolidatedFeatureSchema)
 
   def toponyms(spark: SparkSession, path: String): DataFrame =
     features(spark, path, toponymFeatureSchema)

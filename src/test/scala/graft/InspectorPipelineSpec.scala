@@ -155,6 +155,35 @@ class InspectorPipelineSpec extends AnyFunSuite {
   private def res(name: String): String =
     getClass.getResource(s"/inspector/$name").getPath
 
+  private def recordMultiset(consolidated: String): Map[String, Int] =
+    NdjsonSink.lines(Engine.transform(spark, Engine.Dirs(
+      consolidated = consolidated,
+      toponyms = res("toponyms.geojson"),
+      sheets = res("sheets.geojson"),
+      layerBoroughs = res("layer-boroughs.json"),
+    ))).collect().map(r => canon(mapper.readTree(r.getString(0))))
+      .groupBy(identity).view.mapValues(_.length).toMap
+
+  // The download step lands consolidated as NDJSON; transform must
+  // read that file as landed, with the same first-seen dedup order.
+  test("download-landed NDJSON consolidated transforms like the FeatureCollection golden") {
+    val features = mapper.readTree(new java.io.File(res("consolidated.geojson")))
+      .get("features").elements().asScala.map(mapper.writeValueAsString).toSeq
+    val pages = features.grouped(3).zipWithIndex
+      .map { case (fs, i) => (i + 1) -> fs.mkString("[", ",", "]") }.toMap
+    val out = java.nio.file.Files.createTempFile("consolidated", ".ndjson")
+    out.toFile.deleteOnExit()
+    val n = graft.sources.Ingest.pagesToNdjson(
+      "http://example.test/consolidated", out.toString,
+      body => mapper.readTree(body).elements().asScala.map(mapper.writeValueAsString).toSeq,
+      sleeper = _ => (),
+      fetcher = (url, _) => pages.getOrElse(url.split("/").last.toInt, "[]"),
+    )
+    assert(n == features.size && pages.size > 1)
+    assert(!graft.sources.GeoJson.isFeatureCollection(spark, out.toString))
+    assert(recordMultiset(out.toString) == recordMultiset(res("consolidated.geojson")))
+  }
+
   private def writeTemp(name: String, content: String): String = {
     val f = java.nio.file.Files.createTempFile(name, ".geojson")
     java.nio.file.Files.write(f, content.getBytes("UTF-8"))

@@ -7,8 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Pipeline behavior on a generated larger input (5k buildings, 1k
   * toponyms, dense per-layer polygon sets): structural invariants that
-  * the tiny golden can't exercise, plus stock-vs-custom-strategy
-  * equivalence at density where the interval index actually prunes.
+  * the tiny golden can't exercise.
   */
 class InspectorScaleSpec extends AnyFunSuite {
 
@@ -59,13 +58,13 @@ class InspectorScaleSpec extends AnyFunSuite {
     )
   }
 
-  test("invariants at 5k buildings and strategy equivalence at density") {
+  test("invariants at 5k buildings") {
     import org.apache.spark.sql.functions._
     val dir = Files.createTempDirectory("inspector-scale").toString
     val dirs = writeFixtures(dir)
 
-    def summarize() = {
-      val records = Engine.transform(spark, dirs).cache()
+    val records = Engine.transform(spark, dirs).cache()
+    try {
       val byType = records.groupBy("rtype").count().collect()
         .map(r => r.getString(0) -> r.getLong(1)).toMap
       // object ids unique
@@ -82,21 +81,11 @@ class InspectorScaleSpec extends AnyFunSuite {
       val noMatch = records
         .filter(col("error").startsWith("Can't find building for toponym"))
         .count()
-      val out = (byType, dupIds, nObjects, nMapwarper, sameAs, noMatch)
-      records.unpersist()
-      out
-    }
-
-    val stock @ (byType, dupIds, nObjects, nMapwarper, sameAs, noMatch) = summarize()
-    assert(dupIds == 0, "object ids are unique")
-    assert(nObjects == 5000 + 1000, "all buildings and toponyms survive")
-    assert(nMapwarper == 2L * nObjects, "2 mapwarper edges per object")
-    assert(sameAs + noMatch == 1000, "each Point toponym matches or logs")
-    assert(byType("log") >= noMatch)
-
-    graft.plans.GraftPlanner.install(spark)
-    try {
-      assert(summarize() == stock, "custom spatial strategy is result-identical")
-    } finally graft.plans.GraftPlanner.uninstall(spark)
+      assert(dupIds == 0, "object ids are unique")
+      assert(nObjects == 5000 + 1000, "all buildings and toponyms survive")
+      assert(nMapwarper == 2L * nObjects, "2 mapwarper edges per object")
+      assert(sameAs + noMatch == 1000, "each Point toponym matches or logs")
+      assert(byType("log") >= noMatch)
+    } finally records.unpersist()
   }
 }

@@ -62,43 +62,12 @@ class SpatialGridSpec extends AnyFunSuite {
   }
 
   test("cell-blocked join equals the naive unblocked join on the grown grid") {
-    import spark.implicits._
     val blocked = QueryCatalog_j3(spark, dir)
-    val polys = SpatialGrid.rects(spark, dir)
-    val naive = SpatialGrid.points(spark, dir)
-      .join(polys,
-        $"c_layer" === $"p_layer" &&
-          $"px" >= $"x0" && $"px" <= $"x1" &&
-          $"py" >= $"y0" && $"py" <= $"y1")
-      .select($"c_custkey", $"s_suppkey")
-      .orderBy($"c_custkey", $"s_suppkey")
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
+    val naive = naiveJoin(dir).map(r => (r.getLong(0), r.getLong(1)))
     val got = blocked.collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(got.nonEmpty, "fixture produced no containments — spec is vacuous")
     assert(got.sameElements(naive),
       s"blocked join diverged: ${got.length} vs ${naive.length} rows")
-  }
-
-  test("salted join (graft.spatial.salt) is row-identical on both surfaces") {
-    // The both-sides-skew salt replicates polygons under S salts and
-    // routes each point to exactly one — every candidate pair must
-    // still meet exactly once, so any S gives the identical result
-    // set. Checked for both the DataFrame and spark.sql surfaces, and
-    // the salted plan must actually carry the salt equi key.
-    for (name <- Seq("j3_spatial_point_in_polygon", "sql_surface_spatial")) {
-      val q = graft.QueryCatalog.all.find(_.name == name).get
-      val unsalted = q.fn(spark, dir).collect().map(_.toString)
-      try {
-        sys.props("graft.spatial.salt") = "8"
-        val saltedDf = q.fn(spark, dir)
-        val salted = saltedDf.collect().map(_.toString)
-        assert(salted.nonEmpty && salted.sameElements(unsalted),
-          s"$name: salted result diverged (${salted.length} vs ${unsalted.length} rows)")
-        val joins = saltedDf.queryExecution.executedPlan.toString
-        assert(joins.contains("salt"),
-          s"$name: salted plan does not carry the salt key")
-      } finally sys.props.remove("graft.spatial.salt")
-    }
   }
 
   /** Skewed fixture: every 4th supplier/customer key is remapped onto
@@ -148,12 +117,9 @@ class SpatialGridSpec extends AnyFunSuite {
           s"unexpected hot keys: ${hot.take(5)}")
       case other => fail(s"planner chose $other on a 30x-skewed fixture")
     }
+    val baseline = naiveJoin(skewDir).map(_.toString)
     for (name <- Seq("j3_spatial_point_in_polygon", "sql_surface_spatial")) {
       val q = graft.QueryCatalog.all.find(_.name == name).get
-      val baseline = try {
-        sys.props("graft.spatial.salt") = "1" // force OFF (auto included)
-        q.fn(spark, skewDir).collect().map(_.toString)
-      } finally sys.props.remove("graft.spatial.salt")
       val autoDf = q.fn(spark, skewDir) // planner decides: selective salt
       val auto = autoDf.collect().map(_.toString)
       assert(auto.nonEmpty && auto.sameElements(baseline),
@@ -182,6 +148,21 @@ class SpatialGridSpec extends AnyFunSuite {
     assert(saltDecision(42, 1.52) == 8) // ratio 27.6
     // clamp: a 1000x pathological ratio still caps at SaltMaxS
     assert(saltDecision(10000, 10.0) == SpatialGrid.SaltMaxS)
+  }
+
+  /** The unblocked, unsalted layer-equi + rectangle join: the
+    * reference every blocked or salted plan must reproduce.
+    */
+  private def naiveJoin(d: String) = {
+    import spark.implicits._
+    SpatialGrid.points(spark, d)
+      .join(SpatialGrid.rects(spark, d),
+        $"c_layer" === $"p_layer" &&
+          $"px" >= $"x0" && $"px" <= $"x1" &&
+          $"py" >= $"y0" && $"py" <= $"y1")
+      .select($"c_custkey", $"s_suppkey")
+      .orderBy($"c_custkey", $"s_suppkey")
+      .collect()
   }
 
   /** The catalogue's j3 query run against the fixture dir. */

@@ -5,11 +5,11 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.scalatest.funsuite.AnyFunSuite
 
 /** spark.sql.extensions=graft.plans.GraftExtensions must register the
-  * custom functions for SQL text and the spatial strategy.
+  * custom functions for SQL text.
   */
 class ExtensionsSpec extends AnyFunSuite {
 
-  test("extensions class registers functions and strategy") {
+  test("extensions class registers every custom function") {
     // Force a NEW SparkSession (extensions apply per session) while
     // reusing any live SparkContext; never stop() here — that would
     // kill the context shared with the other suites. withExtensions is
@@ -95,7 +95,6 @@ class ExtensionsSpec extends AnyFunSuite {
             .functionExists(FunctionIdentifier(name)),
           s"extensions hook did not register $name")
       }
-      assert(spark.sessionState.planner.strategies.contains(SpatialJoinStrategy))
     } finally {
       SparkSession.clearActiveSession()
       SparkSession.clearDefaultSession()
