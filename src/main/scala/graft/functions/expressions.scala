@@ -865,11 +865,16 @@ object exprs {
       }),
   )
 
-  /** Register the expressions for the `spark.sql` surface. */
+  /** Register the expressions for the `spark.sql` surface, once per
+    * session: names the session's registry already holds (from an
+    * earlier call or [[graft.plans.GraftExtensions]]) are left as they
+    * are.
+    */
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
     sqlFunctions.foreach { case (name, _, builder) =>
-      reg.createOrReplaceTempFunction(name, builder, "built-in")
+      if (!reg.functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier(name)))
+        reg.createOrReplaceTempFunction(name, builder, "built-in")
     }
   }
 }

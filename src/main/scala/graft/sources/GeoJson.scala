@@ -3,8 +3,15 @@ package graft.sources
 import com.fasterxml.jackson.core.{JsonFactory, JsonToken}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.json.{JacksonParser, JSONOptions}
+import org.apache.spark.sql.catalyst.util.{FailureSafeParser, PermissiveMode}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** GeoJSON landing-file readers (SURVEY.md §2.1 S4/S5/S6).
   *
@@ -24,9 +31,11 @@ import org.apache.spark.sql.types._
   * The consolidated landing file is either one FeatureCollection
   * document or NDJSON (one Feature per line, what the download step's
   * paginated writer lands); [[consolidated]] tells them apart from the
-  * file's head. Scale note: `multiLine=true` on one FeatureCollection
-  * document parses on a single task, while [[featuresNdjson]] reads
-  * NDJSON fully parallel with the same schema.
+  * file's head. Both layouts parse in parallel: a FeatureCollection
+  * through the `geojson` source ([[graft.sources.v2.GeoJsonDataSource]]),
+  * which splits the file into byte ranges of whole features, one per
+  * core (capped by `spark.sql.files.maxPartitionBytes`), and
+  * [[featuresNdjson]] through Spark's line-split JSON reader.
   */
 object GeoJson {
 
@@ -75,18 +84,13 @@ object GeoJson {
     ))),
   ))
 
-  private def collectionSchema(feature: StructType) = StructType(Seq(
-    StructField("type", StringType),
-    StructField("features", ArrayType(feature)),
-  ))
-
-  /** One FeatureCollection document → (ingest_order, feature) rows. */
+  /** One FeatureCollection document → (ingest_order, feature) rows:
+    * the `geojson` source's raw feature text, parsed by [[FeatureFromJson]].
+    */
   def features(spark: SparkSession, path: String, schema: StructType): DataFrame =
-    spark.read
-      .schema(collectionSchema(schema))
-      .option("multiLine", value = true)
-      .json(path)
-      .select(posexplode(col("features")).as(Seq("ingest_order", "feature")))
+    spark.read.format("geojson").load(path)
+      .select(col("ingest_order"),
+        Bridge.column(FeatureFromJson(Bridge.expression(col("feature_json")), schema)).as("feature"))
 
   /** NDJSON variant: one feature per line, order by file position. */
   def featuresNdjson(spark: SparkSession, path: String, schema: StructType): DataFrame =
@@ -153,4 +157,46 @@ object GeoJson {
   /** Parse a raw Point coordinates subtree to [x, y]. */
   def pointCoords(raw: Column): Column =
     from_json(raw, ArrayType(DoubleType))
+}
+
+/** `from_json(json, schema)` for one raw GeoJSON feature, with the
+  * semantics of Spark's JSON file reader that the FeatureCollection
+  * readers have always had: a StringType field holding a JSON array or
+  * object (`coordinates`, `consensus_address`) captures the input text
+  * byte for byte (`spark.sql.json.enableExactStringParsing`), where
+  * `from_json` re-prints it (no whitespace, floats through
+  * `Double.toString`); a JSON `null` is a null feature, not a struct of
+  * nulls. Malformed text gives a struct of nulls, as in `from_json`.
+  */
+private[sources] case class FeatureFromJson(child: Expression, schema: StructType)
+    extends UnaryExpression with CodegenFallback {
+  override def dataType: DataType = schema
+  override def nullable: Boolean = true
+
+  @transient private lazy val parser = {
+    val options = new JSONOptions(Map.empty[String, String],
+      SQLConf.get.sessionLocalTimeZone, SQLConf.get.columnNameOfCorruptRecord)
+    val raw = new JacksonParser(schema, options, false, Nil)
+    // a byte-array parser is what lets the raw capture slice its input
+    new FailureSafeParser[Array[Byte]](
+      bytes => raw.parse(bytes, (f: JsonFactory, b: Array[Byte]) => f.createParser(b),
+        UTF8String.fromBytes),
+      PermissiveMode, schema, options.columnNameOfCorruptRecord)
+  }
+
+  override protected def nullSafeEval(input: Any): Any = {
+    val text = input.asInstanceOf[UTF8String]
+    if (text == FeatureFromJson.JsonNull) null
+    else {
+      val rows = parser.parse(text.getBytes)
+      if (rows.hasNext) rows.next() else null
+    }
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): FeatureFromJson =
+    copy(child = newChild)
+}
+
+private object FeatureFromJson {
+  private val JsonNull = UTF8String.fromString("null")
 }

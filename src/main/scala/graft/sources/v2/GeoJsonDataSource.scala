@@ -4,8 +4,11 @@ import java.util
 
 import scala.jdk.CollectionConverters._
 
-import com.fasterxml.jackson.core.{JsonFactory, JsonToken}
+import com.fasterxml.jackson.core.{JsonFactory, JsonProcessingException, JsonToken}
 import com.fasterxml.jackson.databind.ObjectMapper
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -14,34 +17,42 @@ import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 
 /** DataSource V2 GeoJSON FeatureCollection source:
   *
   *   spark.read.format("geojson").load("a.geojson,b.geojson")
   *
-  * → rows (path, ingest_order, feature_json). Within a file the reader
-  * STREAM-parses the `features` array with Jackson's incremental
-  * parser — the engine twin of the reference's
-  * `JSONStream.parse('features.*')` (building-inspector.js:327-331):
-  * memory stays bounded by one feature, not the document.
-  * `ingest_order` is the feature's index in its file, preserving the
-  * reference's first-seen dedup order. Downstream applies `from_json`
-  * with the typed schemas (graft.sources.GeoJson).
+  * → rows (path, ingest_order, feature_json): one row per element of
+  * the file's root-level `features` array — the engine twin of the
+  * reference's `JSONStream.parse('features.*')`
+  * (building-inspector.js:327-331). `feature_json` is the element's
+  * raw text, byte for byte; `ingest_order` is its index in its file,
+  * preserving the reference's first-seen dedup order. Downstream,
+  * `graft.sources.GeoJson.features` parses the text with the typed
+  * schemas, the only full parse a feature gets.
   *
-  * LARGE-FILE SPLITTING: a file bigger than `chunkBytes` (default
-  * 64 MiB) is planned as MULTIPLE byte-range partitions — the
-  * reference's real datasets are single multi-GB FeatureCollection
-  * files, exactly the input that would otherwise scan on one core.
-  * Planning runs one sequential index skim over the big file
-  * (Jackson `skipChildren`, no tree building — I/O-bound, the same
-  * driver-side role as Parquet footer reads) recording the exact byte
-  * offsets of feature boundaries every ~chunkBytes; each task then
-  * parses `[` + its byte range + `]` as a standalone JSON array, so
-  * the expensive per-feature work (tree building, row emission, the
-  * downstream from_json) distributes across the cluster. Offsets come
-  * from a real parse — there is no "re-sync on `{`" heuristic to be
-  * fooled by braces inside string literals — and each split carries
-  * its first feature index, keeping `ingest_order` globally exact.
+  * SPLITTING: every file is planned as byte-range partitions of whole
+  * features. Planning runs one sequential index skim over the file
+  * (Jackson `skipChildren`, no tree building; I/O-bound, like the
+  * Parquet footer reads of query planning) recording the byte offsets
+  * of feature boundaries. The split size is derived from
+  * the file and the session: `ceil(size / defaultParallelism)`, capped
+  * by `spark.sql.files.maxPartitionBytes`, so a file occupies every
+  * core and no task reads more than one of Spark's own file splits. A
+  * split ends at the first feature boundary at or past each multiple
+  * of the split size. Each task reads its range, parses `[` + range +
+  * `]` as a standalone JSON array and emits each element as a byte
+  * slice of that buffer. Offsets come from a real parse — there is no
+  * "re-sync on `{`" heuristic to be fooled by braces inside string
+  * literals — and each split carries its first feature index, keeping
+  * `ingest_order` globally exact.
+  *
+  * Files are read through the session's Hadoop FileSystem, so any
+  * Hadoop path works. A file that is not one JSON object, or ends
+  * before its root object closes (a truncated download), fails the
+  * scan with an error naming the file; a root object without a
+  * `features` array yields no rows.
   */
 class GeoJsonDataSource extends TableProvider with DataSourceRegister {
 
@@ -56,14 +67,11 @@ class GeoJsonDataSource extends TableProvider with DataSourceRegister {
       properties: util.Map[String, String]): Table = {
     val paths = Option(properties.get("path")).toSeq
       .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
-    val chunkBytes = Option(properties.get("chunkBytes"))
-      .map(_.toLong).getOrElse(GeoJsonDataSource.DefaultChunkBytes)
-    new GeoJsonTable(paths, chunkBytes)
+    new GeoJsonTable(paths)
   }
 }
 
 object GeoJsonDataSource {
-  val DefaultChunkBytes: Long = 64L * 1024 * 1024
 
   val schema: StructType = StructType(Seq(
     StructField("path", StringType, nullable = false),
@@ -71,91 +79,105 @@ object GeoJsonDataSource {
     StructField("feature_json", StringType, nullable = false),
   ))
 
-  /** Index skim of one big file: byte ranges of consecutive feature
-    * runs, each ≈ chunkBytes, as (startByte, endByteExclusive,
-    * firstFeatureIndex). Returns None when the file has no root-level
-    * `features` array or a non-object element (fall back to the
-    * whole-file reader, which reports the malformation the usual way).
+  /** Split size for a file of `size` bytes: one split per core, capped
+    * by Spark's own file split size.
+    */
+  private[v2] def splitBytes(spark: SparkSession, size: Long): Long = {
+    val cores = spark.sparkContext.defaultParallelism
+    math.max(1L, math.min((size + cores - 1) / cores,
+      spark.sessionState.conf.filesMaxPartitionBytes))
+  }
+
+  /** Byte-range partitions of one file, sized for `spark`. */
+  private[v2] def partitionsFor(
+      spark: SparkSession, conf: Configuration, path: String): Seq[InputPartition] = {
+    val p = new Path(path)
+    val size = p.getFileSystem(conf).getFileStatus(p).getLen
+    indexSplits(path, conf, splitBytes(spark, size)).map { case (s, e, i) =>
+      GeoJsonInputPartition(path, s, e, i)
+    }
+  }
+
+  /** Index skim of one file: byte ranges of consecutive elements of
+    * the root-level `features` array as (startByte, endByteExclusive,
+    * firstFeatureIndex), each ending at the first element end at or
+    * past a multiple of `splitBytes`.
     */
   private[v2] def indexSplits(
-      path: String, chunkBytes: Long): Option[Seq[(Long, Long, Long)]] = {
-    val parser = new JsonFactory().createParser(new java.io.File(path))
+      path: String, conf: Configuration, splitBytes: Long): Seq[(Long, Long, Long)] = {
+    val p = new Path(path)
+    val in: java.io.InputStream = p.getFileSystem(conf).open(p)
+    val parser = new JsonFactory().createParser(in)
+    def fail(why: String, cause: Throwable = null) =
+      throw new java.io.IOException(s"$path is not a GeoJSON FeatureCollection: $why", cause)
     try {
-      var tok = parser.nextToken()
-      var inFeatures = false
-      while (!inFeatures && tok != null) {
-        if (tok == JsonToken.FIELD_NAME && parser.currentName() == "features" &&
-          parser.getParsingContext.getParent.inRoot()) {
-          if (parser.nextToken() == JsonToken.START_ARRAY) inFeatures = true
-        }
-        if (!inFeatures) tok = parser.nextToken()
-      }
-      if (!inFeatures) return None
+      if (parser.nextToken() != JsonToken.START_OBJECT) fail("no root JSON object")
       val splits = Seq.newBuilder[(Long, Long, Long)]
-      var splitStart = -1L
-      var splitFirstIdx = 0L
-      var lastEnd = -1L
-      var idx = 0L
-      var done = false
-      while (!done) {
-        parser.nextToken() match {
-          case JsonToken.START_OBJECT =>
-            val objStart = parser.currentTokenLocation().getByteOffset
-            if (splitStart < 0) { splitStart = objStart; splitFirstIdx = idx }
-            parser.skipChildren() // leaves END_OBJECT as current token
-            lastEnd = parser.currentLocation().getByteOffset
-            idx += 1
-            if (lastEnd - splitStart >= chunkBytes) {
-              splits += ((splitStart, lastEnd, splitFirstIdx))
-              splitStart = -1L
+      var seenFeatures = false
+      while (parser.nextToken() == JsonToken.FIELD_NAME) {
+        val isFeatures = !seenFeatures && parser.currentName() == "features"
+        if (parser.nextToken() == JsonToken.START_ARRAY && isFeatures) {
+          seenFeatures = true
+          var splitStart = -1L
+          var splitFirst = 0L
+          var end = 0L
+          var boundary = splitBytes
+          var idx = 0L
+          while (parser.nextToken() != JsonToken.END_ARRAY) {
+            if (splitStart < 0) {
+              splitStart = parser.currentTokenLocation().getByteOffset
+              splitFirst = idx
             }
-          case JsonToken.END_ARRAY => done = true
-          case _ => return None // non-object feature element
-        }
+            end = elementEnd(parser)
+            idx += 1
+            if (end >= boundary) {
+              splits += ((splitStart, end, splitFirst))
+              splitStart = -1L
+              boundary = (end / splitBytes + 1) * splitBytes
+            }
+          }
+          if (splitStart >= 0) splits += ((splitStart, end, splitFirst))
+        } else parser.skipChildren()
       }
-      if (splitStart >= 0) splits += ((splitStart, lastEnd, splitFirstIdx))
-      Some(splits.result())
+      if (parser.currentToken() != JsonToken.END_OBJECT) fail("the root object does not close")
+      splits.result()
+    } catch {
+      case e: JsonProcessingException => fail(e.getOriginalMessage, e)
     } finally parser.close()
+  }
+
+  /** Byte offset just past the array element whose first token is
+    * the parser's current token.
+    */
+  private[v2] def elementEnd(parser: com.fasterxml.jackson.core.JsonParser): Long = {
+    parser.skipChildren()
+    parser.finishToken()
+    parser.currentLocation().getByteOffset
   }
 }
 
-private[v2] class GeoJsonTable(paths: Seq[String], chunkBytes: Long)
-    extends Table with SupportsRead {
+private[v2] class GeoJsonTable(paths: Seq[String]) extends Table with SupportsRead {
   override def name(): String = s"geojson(${paths.mkString(",")})"
   override def schema(): StructType = GeoJsonDataSource.schema
   override def capabilities(): util.Set[TableCapability] =
     Set(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ).asJava
 
-  /** Partitions for one file: byte-range splits above chunkBytes,
-    * else the whole-file streaming parser.
-    */
-  private[v2] def partitionsFor(p: String): Seq[InputPartition] = {
-    val size = new java.io.File(p).length()
-    val ranges =
-      if (size > chunkBytes) GeoJsonDataSource.indexSplits(p, chunkBytes)
-      else None
-    ranges match {
-      case Some(rs) if rs.nonEmpty =>
-        rs.map { case (s, e, i) => GeoJsonInputPartition(p, s, e, i): InputPartition }
-      case _ =>
-        Seq(GeoJsonInputPartition(p, -1L, -1L, 0L): InputPartition)
-    }
-  }
-
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new ScanBuilder with Scan with Batch {
+      private lazy val spark = SparkSession.active
+      private lazy val conf = spark.sessionState.newHadoopConf()
       override def build(): Scan = this
       override def readSchema(): StructType = GeoJsonDataSource.schema
       override def toBatch: Batch = this
       override def planInputPartitions(): Array[InputPartition] =
-        paths.flatMap(partitionsFor).toArray
+        paths.flatMap(GeoJsonDataSource.partitionsFor(spark, conf, _)).toArray
       override def createReaderFactory(): PartitionReaderFactory =
-        new GeoJsonReaderFactory
+        new GeoJsonReaderFactory(new SerializableConfiguration(conf))
       override def toMicroBatchStream(checkpointLocation: String)
           : org.apache.spark.sql.connector.read.streaming.MicroBatchStream = {
         require(paths.size == 1 && new java.io.File(paths.head).isDirectory,
           s"streaming geojson needs a single landing DIRECTORY to watch, got $paths")
-        new GeoJsonMicroBatchStream(paths.head, GeoJsonTable.this)
+        new GeoJsonMicroBatchStream(paths.head, spark, conf)
       }
     }
 }
@@ -170,6 +192,7 @@ private[v2] class GeoJsonTable(paths: Seq[String], chunkBytes: Long)
   * `ingest_order` and the (path, ingest_order) dedup contract carry
   * over unchanged. Files must land atomically (write-then-rename, the
   * standard landing-dir discipline) — a file is picked up when listed.
+  * The directory is listed on the local filesystem.
   *
   * Known limit: offsets carry the complete file set, so offset JSON
   * and the per-batch set-diff grow O(files ever landed) — right for a
@@ -179,7 +202,7 @@ private[v2] class GeoJsonTable(paths: Seq[String], chunkBytes: Long)
   * names are promised monotone (e.g. timestamped); this source makes
   * no such assumption, so it keeps the explicit set.
   */
-private[v2] class GeoJsonMicroBatchStream(dir: String, table: GeoJsonTable)
+private[v2] class GeoJsonMicroBatchStream(dir: String, spark: SparkSession, conf: Configuration)
     extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream {
   import org.apache.spark.sql.connector.read.streaming.Offset
 
@@ -199,10 +222,10 @@ private[v2] class GeoJsonMicroBatchStream(dir: String, table: GeoJsonTable)
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val seen = start.asInstanceOf[GeoJsonOffset].files.toSet
     end.asInstanceOf[GeoJsonOffset].files.filterNot(seen)
-      .flatMap(table.partitionsFor).toArray
+      .flatMap(GeoJsonDataSource.partitionsFor(spark, conf, _)).toArray
   }
   override def createReaderFactory(): PartitionReaderFactory =
-    new GeoJsonReaderFactory
+    new GeoJsonReaderFactory(new SerializableConfiguration(conf))
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
 }
@@ -213,120 +236,54 @@ private[v2] case class GeoJsonOffset(files: Seq[String])
     new ObjectMapper().writeValueAsString(files.sorted.toArray)
 }
 
-/** start < 0 ⇒ whole file (stream from the top, locate `features`);
-  * otherwise a byte range [start, end) of consecutive features.
-  */
+/** A byte range [start, end) of consecutive features of one file. */
 private[v2] case class GeoJsonInputPartition(
     path: String, start: Long, end: Long, firstIndex: Long) extends InputPartition
 
-private[v2] class GeoJsonReaderFactory extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[GeoJsonInputPartition]
-    if (p.start < 0) new GeoJsonPartitionReader(p.path)
-    else new GeoJsonRangeReader(p.path, p.start, p.end, p.firstIndex)
-  }
+private[v2] class GeoJsonReaderFactory(conf: SerializableConfiguration)
+    extends PartitionReaderFactory {
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    new GeoJsonRangeReader(partition.asInstanceOf[GeoJsonInputPartition], conf.value)
 }
 
-/** Streams one FeatureCollection file: advances to the `features`
-  * array, then emits one row per element without materializing the
-  * document.
+/** Reads one byte range of consecutive features into a buffer
+  * bracketed as `[` + range + `]`, which parses as a standalone JSON
+  * array (the commas between features stay valid), and emits each
+  * element as a slice of the buffer with `ingest_order` offset by the
+  * split's first feature index. Memory per task is one split.
   */
-private[v2] class GeoJsonPartitionReader(path: String)
+private[v2] class GeoJsonRangeReader(split: GeoJsonInputPartition, conf: Configuration)
     extends PartitionReader[InternalRow] {
 
-  private val mapper = new ObjectMapper()
-  private val parser = new JsonFactory(mapper)
-    .createParser(new java.io.File(path))
-  private var inFeatures = false
-  private var order = -1L
-  private var current: InternalRow = _
-  private val pathUtf8 = UTF8String.fromString(path)
-
-  private def advanceToFeatures(): Boolean = {
-    var tok = parser.nextToken()
-    while (tok != null) {
-      if (tok == JsonToken.FIELD_NAME && parser.currentName() == "features" &&
-        parser.getParsingContext.getParent.inRoot()) {
-        if (parser.nextToken() == JsonToken.START_ARRAY) return true
-      }
-      tok = parser.nextToken()
-    }
-    false
+  private val buf = {
+    val len = Math.toIntExact(split.end - split.start)
+    val b = new Array[Byte](len + 2)
+    val p = new Path(split.path)
+    val in = p.getFileSystem(conf).open(p)
+    try {
+      in.seek(split.start)
+      in.readFully(b, 1, len)
+    } finally in.close()
+    b(0) = '['
+    b(len + 1) = ']'
+    b
   }
-
-  override def next(): Boolean = {
-    if (!inFeatures) {
-      if (!advanceToFeatures()) return false
-      inFeatures = true
-    }
-    val tok = parser.nextToken()
-    if (tok == null || tok == JsonToken.END_ARRAY) return false
-    val node = mapper.readTree[com.fasterxml.jackson.databind.JsonNode](parser)
-    order += 1
-    current = InternalRow(
-      pathUtf8,
-      order,
-      UTF8String.fromString(mapper.writeValueAsString(node)))
-    true
-  }
-
-  override def get(): InternalRow = current
-  override def close(): Unit = parser.close()
-}
-
-/** Streams one byte range of consecutive features: the range's bytes
-  * bracketed as `[` + range + `]` parse as a standalone JSON array
-  * (inter-feature commas inside the range stay valid), so this reader
-  * is just the array-element loop of [[GeoJsonPartitionReader]] with
-  * `ingest_order` offset by the split's first feature index.
-  */
-private[v2] class GeoJsonRangeReader(
-    path: String, start: Long, end: Long, firstIndex: Long)
-    extends PartitionReader[InternalRow] {
-
-  private val mapper = new ObjectMapper()
-  private val fileIn = new java.io.FileInputStream(path)
-  fileIn.skipNBytes(start)
-  private val ranged = new java.io.SequenceInputStream(
-    java.util.Collections.enumeration(java.util.Arrays.asList(
-      new java.io.ByteArrayInputStream(Array[Byte]('[')),
-      new BoundedInputStream(fileIn, end - start),
-      new java.io.ByteArrayInputStream(Array[Byte](']')),
-    )))
-  private val parser = new JsonFactory(mapper).createParser(ranged)
+  private val parser = new JsonFactory().createParser(buf)
   require(parser.nextToken() == JsonToken.START_ARRAY)
-  private var order = firstIndex - 1
+  private var order = split.firstIndex - 1
   private var current: InternalRow = _
-  private val pathUtf8 = UTF8String.fromString(path)
+  private val pathUtf8 = UTF8String.fromString(split.path)
 
-  override def next(): Boolean = {
-    val tok = parser.nextToken()
-    if (tok == null || tok == JsonToken.END_ARRAY) return false
-    val node = mapper.readTree[com.fasterxml.jackson.databind.JsonNode](parser)
-    order += 1
-    current = InternalRow(
-      pathUtf8,
-      order,
-      UTF8String.fromString(mapper.writeValueAsString(node)))
-    true
-  }
+  override def next(): Boolean =
+    if (parser.nextToken() == JsonToken.END_ARRAY) false
+    else {
+      val start = parser.currentTokenLocation().getByteOffset.toInt
+      val end = GeoJsonDataSource.elementEnd(parser).toInt
+      order += 1
+      current = InternalRow(pathUtf8, order, UTF8String.fromBytes(buf, start, end - start))
+      true
+    }
 
   override def get(): InternalRow = current
   override def close(): Unit = parser.close()
-}
-
-/** Caps reads at `limit` bytes; closing closes the underlying stream. */
-private[v2] class BoundedInputStream(in: java.io.InputStream, limit: Long)
-    extends java.io.InputStream {
-  private var remaining = limit
-  override def read(): Int =
-    if (remaining <= 0) -1
-    else { val b = in.read(); if (b >= 0) remaining -= 1; b }
-  override def read(buf: Array[Byte], off: Int, len: Int): Int = {
-    if (remaining <= 0) return -1
-    val n = in.read(buf, off, math.min(len, remaining).toInt)
-    if (n > 0) remaining -= n
-    n
-  }
-  override def close(): Unit = in.close()
 }

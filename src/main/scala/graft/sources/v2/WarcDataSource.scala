@@ -44,8 +44,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * closing CRLFCRLF) aborts loudly with path + byte offset, never a
   * silently short scan.
   *
-  * LARGE-FILE SPLITTING (the GeoJson source's device, GeoJsonDataSource
-  * .scala:33-46): crawl archives arrive as multi-GB files; planning
+  * LARGE-FILE SPLITTING (the GeoJson source's device, see the
+  * GeoJsonDataSource header): crawl archives arrive as multi-GB files; planning
   * runs one driver-side skim per file — read each header block, seek
   * OVER each payload (I/O ∝ headers, not bytes) — recording record
   * offsets every ~chunkBytes (default 64 MiB), and each task then

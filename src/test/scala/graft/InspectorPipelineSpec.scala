@@ -184,6 +184,37 @@ class InspectorPipelineSpec extends AnyFunSuite {
     assert(recordMultiset(out.toString) == recordMultiset(res("consolidated.geojson")))
   }
 
+  test("transform reads file: URIs like plain paths") {
+    def uri(p: String) = new java.io.File(p).toURI.toString
+    val plain = Engine.Dirs(res("consolidated.geojson"), res("toponyms.geojson"),
+      res("sheets.geojson"), res("layer-boroughs.json"))
+    val uris = Engine.Dirs(uri(plain.consolidated), uri(plain.toponyms),
+      uri(plain.sheets), uri(plain.layerBoroughs))
+    assert(uris.consolidated.startsWith("file:"))
+    def multiset(dirs: Engine.Dirs) = NdjsonSink.lines(Engine.transform(spark, dirs))
+      .collect().map(_.getString(0)).groupBy(identity).view.mapValues(_.length).toMap
+    val want = multiset(plain)
+    assert(want.nonEmpty && multiset(uris) == want)
+  }
+
+  // A half-downloaded landing file must fail the transform, not turn
+  // into an empty one.
+  test("a truncated consolidated FeatureCollection fails the transform, naming the file") {
+    val whole = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(res("consolidated.geojson")))
+    val cut = writeTemp("truncated", new String(whole.take(whole.length / 2), "UTF-8"))
+    val out = java.nio.file.Files.createTempDirectory("truncated-out").resolve("ndjson")
+    val e = intercept[Exception] {
+      Engine.transformToNdjson(spark, Engine.Dirs(
+        consolidated = cut,
+        toponyms = res("toponyms.geojson"),
+        sheets = res("sheets.geojson"),
+        layerBoroughs = res("layer-boroughs.json"),
+      ), out.toString)
+    }
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains(cut)), e.toString)
+  }
+
   private def writeTemp(name: String, content: String): String = {
     val f = java.nio.file.Files.createTempFile(name, ".geojson")
     java.nio.file.Files.write(f, content.getBytes("UTF-8"))

@@ -100,4 +100,29 @@ class ExtensionsSpec extends AnyFunSuite {
       SparkSession.clearDefaultSession()
     }
   }
+
+  test("a second register call leaves the session's function registry unchanged") {
+    val spark = SparkSession.builder()
+      .master("local[2]")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+      .newSession()
+    val reg = spark.sessionState.functionRegistry
+    val ids = graft.functions.exprs.sqlFunctions.map { case (name, _, _) => FunctionIdentifier(name) }
+    // skipping held names never leaves a Spark built-in in place of a
+    // custom function
+    assert(ids.forall(id => !org.apache.spark.sql.catalyst.analysis.FunctionRegistry
+      .builtin.functionExists(id)))
+    def snapshot() = (reg.listFunction().toSet,
+      ids.map(id => (reg.lookupFunction(id), reg.lookupFunctionBuilder(id))))
+    graft.functions.exprs.register(spark)
+    val first = snapshot()
+    assert(first._2.forall { case (info, builder) => info.isDefined && builder.isDefined })
+    graft.functions.exprs.register(spark)
+    val second = snapshot()
+    assert(second._1 == first._1)
+    assert(second._2.zip(first._2).forall { case ((i2, b2), (i1, b1)) =>
+      (i2.get eq i1.get) && (b2.get eq b1.get)
+    })
+  }
 }
