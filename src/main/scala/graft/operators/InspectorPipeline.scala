@@ -12,19 +12,26 @@ import graft.sources.GeoJson
   * Spark plan (SURVEY.md §3): consolidated buildings phase + toponym
   * phase with the per-layer spatial join.
   *
-  * Every output record lands in ONE superset-schema DataFrame
-  * ([[InspectorPipeline.recordSchema]]) tagged by `rtype`
-  * ('object' | 'relation' | 'log'), mirroring the reference's tagged
-  * union (building-inspector.js:108-136). The NDJSON sink serializes
-  * it; tests canonicalize and compare.
+  * Every output record lands in ONE superset-schema DataFrame tagged
+  * by `rtype` ('object' | 'relation' | 'log'), mirroring the
+  * reference's tagged union (building-inspector.js:108-136); the
+  * columns are those of [[record]]. The NDJSON sink serializes it;
+  * tests canonicalize and compare.
   *
-  * Scale design: the two dimension tables (sheets, layer-boroughs) are
-  * broadcast; the building fact stream is shuffled once by building id
-  * for first-seen dedup and then flows through narrow projections;
-  * the spatial join is an equi-join on layerId with a bbox prefilter
-  * and the exact `st_contains` as residual — the layerId key gives the
-  * same pruning the reference's per-layer R-tree does
-  * (geo-indices.js:22-56), and skewed layers are handled by AQE.
+  * Scale design: each phase is one dedup shuffle of its fact stream
+  * (first-seen by building id / toponym id), localCheckpoint-ed with
+  * everything the later steps parse or look up per row; one narrow
+  * pre-flight check over that checkpoint; and one generator that
+  * emits all of a row's records through a single `inline`. The two
+  * dimension tables (sheets, layer-boroughs) are small: each phase
+  * collects them on the driver into one `sheet id → (map_id, layer_id,
+  * year, borough)` lookup ([[sheetDims]]), so no dimension join
+  * or broadcast runs per consumer. The spatial join runs once: a
+  * left-outer equi-join on layerId with a bbox prefilter and the exact
+  * `st_contains` as residual, whose rows carry all three toponym
+  * outcomes — the layerId key gives the same pruning the reference's
+  * per-layer R-tree does (geo-indices.js:22-56), and skewed layers are
+  * handled by AQE.
   */
 object InspectorPipeline {
 
@@ -37,58 +44,84 @@ object InspectorPipeline {
 
   // ---------------------------------------------------------------- dims
 
-  /** sheetsById: last-wins keyBy on properties.id (D3,
-    * building-inspector.js:384-386).
+  /** What a feature takes from its sheet (map id, layer, year) and
+    * from the sheet's layer (borough; null when the layer has none).
     */
-  def sheetsDim(sheets: DataFrame): DataFrame = {
-    val w = Window.partitionBy(col("s_sheet_id")).orderBy(col("s_order").desc)
-    sheets
+  final case class SheetDim(
+      map_id: String, layer_id: Option[Long], year: Option[Int], borough: String)
+
+  /** sheetsById joined to layersById, built on the driver: a map
+    * literal `sheet id → SheetDim`, read per row with `try_element_at`
+    * (null for a sheet id the map lacks, including null).
+    *
+    * Both keyBys are last-wins (D3): sheets by `ingest_order`
+    * (building-inspector.js:384-386), layer-boroughs by position in
+    * the file (:388-392), so a repeated layer id never fans out a
+    * layer's records.
+    */
+  private def sheetDims(sheets: DataFrame, layers: DataFrame): Column = {
+    val boroughs = layers.select(col("id").cast("long"), col("borough")).collect()
+      .filterNot(_.isNullAt(0))
+      .map(r => r.getLong(0) -> r.getString(1)).toMap
+    val dims = sheets
       .select(
-        col("feature.properties.id").as("s_sheet_id"),
-        col("feature.properties.map_id").as("sheet_map_id"),
-        col("feature.properties.layer.external_id").as("layer_id"),
-        col("feature.properties.layer.year").cast("int").as("year"),
-        col("ingest_order").as("s_order"),
+        col("feature.properties.id").cast("long"),
+        col("ingest_order").cast("long"),
+        col("feature.properties.map_id").cast("string"),
+        col("feature.properties.layer.external_id").cast("long"),
+        col("feature.properties.layer.year").cast("int"),
       )
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .drop("rn", "s_order")
+      .collect()
+      .filterNot(_.isNullAt(0))
+      .sortBy(_.getLong(1))
+      .map { r =>
+        val layer = Option.unless(r.isNullAt(3))(r.getLong(3))
+        r.getLong(0) -> SheetDim(r.getString(2), layer,
+          Option.unless(r.isNullAt(4))(r.getInt(4)), layer.flatMap(boroughs.get).orNull)
+      }
+      .toMap
+    typedLit(dims)
   }
 
-  /** layersById: id → borough (building-inspector.js:388-392). */
-  def layersDim(layerBoroughs: DataFrame): DataFrame =
-    layerBoroughs.select(col("id").as("lb_layer_id"), col("borough"))
-
-  /** H4 fail-fast (J1): the reference dereferences
-    * `sheetsById[feature.properties.sheet_id]` unconditionally
-    * (building-inspector.js:103-104) and `stopOnError` aborts the whole
-    * run on the resulting TypeError (:268,322). A silent inner join
-    * would instead drop such features, so before joining we assert —
-    * on the DEDUPED set, because a later duplicate is never
-    * dereferenced by the reference — that every referenced sheet
-    * exists, and abort with the offending ids.
-    *
-    * Cost: the deduped set is localCheckpoint-ed by the callers, so
-    * this adds one narrow scan of the materialized partitions (just
-    * sheet_id) plus the broadcast anti-join — NOT a second dedup
-    * shuffle. The check is an eager pre-flight action, mirroring the
-    * reference's fail-before-emit contract.
+  /** First-seen dedup of a phase's rows by `key` in ingest order
+    * (D1/D2, building-inspector.js:92-100,211-214), localCheckpoint-ed
+    * with the sheet lookup as `dim` and the `parsed` columns, so every
+    * later step reads them from one materialization of the dedup
+    * shuffle. Then the H4 fail-fast check (J1): the reference
+    * dereferences `sheetsById[feature.properties.sheet_id]`
+    * unconditionally (building-inspector.js:103-104) and `stopOnError`
+    * aborts the whole run on the resulting TypeError (:268,322).
+    * Dropping such features would be silent, so we assert — on the
+    * DEDUPED set, because a later duplicate is never dereferenced by
+    * the reference — that every referenced sheet exists, and abort
+    * with the offending ids. The check is one narrow `isEmpty` over the
+    * checkpoint; the sorted sample of missing ids is computed only when
+    * it fails.
     */
-  private def assertSheetsPresent(
-      deduped: DataFrame, sheetsD: DataFrame, what: String): Unit = {
-    val missing = deduped
-      .select(col("sheet_id"))
-      .join(broadcast(sheetsD.select(col("s_sheet_id"))),
-        col("sheet_id") === col("s_sheet_id"), "left_anti")
-      .distinct()
-      .orderBy(col("sheet_id")) // stable sample → reproducible abort message
-      .limit(20)
-      .collect()
-      .map(_.get(0))
-    if (missing.nonEmpty)
+  private def dedupChecked(rows: DataFrame, key: String, sheets: DataFrame,
+      layers: DataFrame, what: String, parsed: Column*): DataFrame = {
+    val dims = sheetDims(sheets, layers)
+    val w = Window.partitionBy(col(key)).orderBy(col("ingest_order"))
+    val deduped = rows
+      .withColumn("rn", row_number().over(w))
+      .filter(col("rn") === 1)
+      .select(rows.columns.map(col).toIndexedSeq ++
+        (try_element_at(dims, col("sheet_id").cast("long")).as("dim") +: parsed): _*)
+      .localCheckpoint()
+    val missing = deduped.filter(col("dim").isNull)
+    if (!missing.isEmpty) {
+      val ids = missing
+        .select(col("sheet_id"))
+        .distinct()
+        .orderBy(col("sheet_id")) // stable sample → reproducible abort message
+        .limit(20)
+        .collect()
+        .map(_.get(0))
       throw new IllegalStateException(
-        s"$what references missing sheet id(s): ${missing.mkString(", ")} " +
+        s"$what references missing sheet id(s): ${ids.mkString(", ")} " +
           "(reference aborts: building-inspector.js:103-104 + stopOnError)")
+    }
+    deduped
   }
 
   // ------------------------------------------------------- consolidated
@@ -111,127 +144,71 @@ object InspectorPipeline {
       col("feature.geometry.geometries").as("geometries"),
     )
 
-    // D1: first-seen dedup by building id, BEFORE the degenerate-ring
-    // filter — a duplicate whose first occurrence is degenerate must
-    // stay suppressed (H2; building-inspector.js:92-100 vs :138-140).
-    // localCheckpoint: the H4 pre-flight assert below is an eager
-    // action over this set; materializing it once means the assert and
-    // the main join share one dedup shuffle instead of running the
-    // wide window twice.
-    val dedupW = Window.partitionBy(col("building_id")).orderBy(col("ingest_order"))
-    val deduped = feats
-      .withColumn("rn", row_number().over(dedupW))
-      .filter(col("rn") === 1)
-      .drop("rn")
-      .localCheckpoint()
-
-    // J1 (inner, fail-fast semantics) + J2 (left outer).
-    val sheetsD = sheetsDim(sheets)
-    assertSheetsPresent(deduped, sheetsD, "consolidated")
-    val joined = deduped
-      .join(broadcast(sheetsD), col("sheet_id") === col("s_sheet_id"))
-      .join(broadcast(layersDim(layers)), col("layer_id") === col("lb_layer_id"), "left_outer")
-      .withColumn("rings", GeoJson.polygonRings(col("geom0.coordinates")))
+    // D1 BEFORE the degenerate-ring filter — a duplicate whose first
+    // occurrence is degenerate must stay suppressed (H2;
+    // building-inspector.js:92-100 vs :138-140). J1 (inner, fail-fast
+    // semantics) + J2 (left outer) are the sheet lookup.
+    val deduped = dedupChecked(feats, "building_id", sheets, layers, "consolidated",
+      GeoJson.polygonRings(col("geom0.coordinates")).as("rings"))
 
     // F6: drop everything (object, relations, log, addresses) when the
     // polygon's outer ring has < 4 points (building-inspector.js:138-140).
     // JS quirk preserved: a non-Polygon geometries[0] (coordinates[0]
     // is a number; undefined < 4 === false) is NOT dropped.
-    // Fans out into 4 derived record branches + the spatial index
-    // side. persist (lazy, columnar cache) rather than an eager
-    // localCheckpoint: the wide rows (raw geometry text + ring arrays)
-    // compute once under the single driving action either way, but the
-    // checkpoint's extra blocking job + row serialization measurably
-    // slows the composed pipeline (4.8 s vs 2.5 s at sf0.1). The plan
-    // auditor dedupes the cached subtree when counting exchanges, so
-    // the cache's re-rendered plan text no longer inflates the audit.
-    val ok = joined
+    val ok = deduped
       .filter(col("rings").isNull || size(try_element_at(col("rings"), lit(1))) >= 4)
-      .persist()
+    val year = col("dim.year")
+    val layerId = col("dim.layer_id")
+    def data(number: Column, colors: Column): Column = dataStruct(
+      number, col("sheet_id"), layerId, col("map_id"), colors, col("dim.borough"))
+
+    // G1/P2/P5: positional address explode (building-inspector.js:142-177):
+    // address i is object `{id}-{i+1}` with geometry geometries[i + 1]
+    // (absent → omitted, js :162) and one st:in edge to its building.
+    val addressType = ArrayType(StructType(Seq(StructField("flag_value", StringType))))
+    val addresses = coalesce(
+      when(col("address_raw") =!= "NONE", from_json(col("address_raw"), addressType)),
+      array().cast(addressType))
+    val addressRecords = flatten(transform(addresses, (a, i) => {
+      val id = concat(col("building_id"), lit("-"), i + 1)
+      val number = a.getField("flag_value")
+      array(
+        objectRecord(id, "st:Address", year, number,
+          data(number, lit(null).cast(ArrayType(StringType))),
+          rawGeometryJson(try_element_at(col("geometries"), i + 2))),
+        relationRecord(id, col("building_id"), "st:in"),
+      )
+    }))
 
     // P1: building object (building-inspector.js:108-125).
-    val buildingObjects = ok.select(Seq(
-      lit("object").as("rtype"),
-      col("building_id").as("id"),
-      lit("st:Building").as("otype"),
-      col("year").as("valid_since"),
-      col("year").as("valid_until"),
-      lit(null.asInstanceOf[String]).as("name"),
-      dataStruct(
-        number = lit(null.asInstanceOf[String]),
-        sheetId = col("sheet_id"),
-        layerId = col("layer_id"),
-        mapId = col("map_id"),
-        // F2: truthiness guard — '' and null both mean absent
-        colors = when(length(col("consensus_color")) > 0, split(col("consensus_color"), ",")),
-        borough = col("borough"),
-      ).as("data"),
-      rawGeometryJson(col("geom0")).as("geometry_json"),
-    ) ++ nullRel: _*)
+    val building = objectRecord(col("building_id"), "st:Building", year, lit(null).cast(StringType),
+      // F2: truthiness guard — '' and null both mean absent
+      data(lit(null).cast(StringType),
+        when(length(col("consensus_color")) > 0, split(col("consensus_color"), ","))),
+      rawGeometryJson(col("geom0")))
 
-    // P4: 2 mapwarper edges per building (building-inspector.js:126,183-202).
-    val mapwarperRels = mapwarperRelations(ok, col("building_id"), col("map_id"), col("layer_id"))
-
-    // S8/J2 side-output: borough log (falsy check, building-inspector.js:129-136).
-    val boroughLogs = logRecords(
-      ok.filter(col("borough").isNull || col("borough") === ""),
-      concat(lit("Can't find borough for layer "), col("layer_id")),
-    )
-
-    // G1/P2/P5: positional address explode (building-inspector.js:142-177).
-    val exploded = ok
-      .filter(col("address_raw").isNotNull && col("address_raw") =!= "NONE")
-      .select(
-        col("building_id"), col("sheet_id"), col("layer_id"), col("map_id"),
-        col("year"), col("borough"), col("geometries"),
-        posexplode(from_json(col("address_raw"),
-          ArrayType(StructType(Seq(StructField("flag_value", StringType))))))
-          .as(Seq("pos", "address")),
-      )
-    val addressObjects = exploded.select(Seq(
-      lit("object").as("rtype"),
-      concat(col("building_id"), lit("-"), col("pos") + 1).as("id"),
-      lit("st:Address").as("otype"),
-      col("year").as("valid_since"),
-      col("year").as("valid_until"),
-      col("address.flag_value").as("name"),
-      dataStruct(
-        number = col("address.flag_value"),
-        sheetId = col("sheet_id"),
-        layerId = col("layer_id"),
-        mapId = col("map_id"),
-        colors = lit(null).cast(ArrayType(StringType)),
-        borough = col("borough"),
-      ).as("data"),
-      // geometry = geometries[i + 1]; absent → omitted (js :162)
-      rawGeometryJson(try_element_at(col("geometries"), col("pos") + 2)).as("geometry_json"),
-    ) ++ nullRel: _*)
-    val addressRels = relationRecords(
-      exploded,
-      concat(col("building_id"), lit("-"), col("pos") + 1),
-      col("building_id"),
-      lit("st:in"),
-    )
+    val records = ok.select(inline(filter(
+      concat(
+        array(withEdges(building, col("building_id"), col("map_id"), layerId,
+          col("dim.borough")): _*),
+        addressRecords),
+      _.isNotNull)))
 
     // Spatial index side: only st:Building objects with Polygon
     // geometry are indexed (geo-indices.js:14-16, 25-36).
+    val ring0 = try_element_at(col("rings"), lit(1))
     val indexed = ok
       .filter(col("geom0.type") === "Polygon" && col("rings").isNotNull)
       .select(
-        col("layer_id").as("b_layer_id"),
+        layerId.as("b_layer_id"),
         col("building_id").as("b_id"),
         col("rings").as("b_rings"),
-        array_min(transform(try_element_at(col("rings"), lit(1)), p => element_at(p, 1))).as("b_xmin"),
-        array_max(transform(try_element_at(col("rings"), lit(1)), p => element_at(p, 1))).as("b_xmax"),
-        array_min(transform(try_element_at(col("rings"), lit(1)), p => element_at(p, 2))).as("b_ymin"),
-        array_max(transform(try_element_at(col("rings"), lit(1)), p => element_at(p, 2))).as("b_ymax"),
+        array_min(transform(ring0, p => element_at(p, 1))).as("b_xmin"),
+        array_max(transform(ring0, p => element_at(p, 1))).as("b_xmax"),
+        array_min(transform(ring0, p => element_at(p, 2))).as("b_ymin"),
+        array_max(transform(ring0, p => element_at(p, 2))).as("b_ymax"),
       )
 
-    val records = buildingObjects
-      .unionByName(mapwarperRels)
-      .unionByName(boroughLogs)
-      .unionByName(addressObjects)
-      .unionByName(addressRels)
     ConsolidatedOut(records, indexed)
   }
 
@@ -264,78 +241,41 @@ object InspectorPipeline {
         base62_encode_hex(md5(js_coord_join_raw(col("geometry.coordinates"))))),
     )
 
-    // D2: first-seen dedup by synthetic id (building-inspector.js:211-214).
-    // localCheckpoint for the same reason as the consolidated phase:
-    // one dedup shuffle shared by the H4 assert and the sheet join.
-    val dedupW = Window.partitionBy(col("toponym_id")).orderBy(col("ingest_order"))
-    val deduped = withId
-      .withColumn("rn", row_number().over(dedupW))
-      .filter(col("rn") === 1)
-      .drop("rn")
-      .localCheckpoint()
-
-    // J1 + J2; toponym mapId comes from the SHEET's map_id
+    // D2 + J1 + J2; toponym mapId comes from the SHEET's map_id
     // (building-inspector.js:218), unlike buildings.
-    val sheetsD = sheetsDim(sheets)
-    assertSheetsPresent(deduped, sheetsD, "toponyms")
-    val joined = deduped
-      .join(broadcast(sheetsD), col("sheet_id") === col("s_sheet_id"))
-      .join(broadcast(layersDim(layers)), col("layer_id") === col("lb_layer_id"), "left_outer")
-      .withColumn("map_id", col("sheet_map_id").cast("int"))
-      .persist() // fans out into 3 record branches + probes (see `ok`)
+    val deduped = dedupChecked(withId, "toponym_id", sheets, layers, "toponyms")
+    val year = col("dim.year")
+    val layerId = col("dim.layer_id")
+    val mapId = col("dim.map_id").cast("int")
 
-    val toponymObjects = joined.select(Seq(
-      lit("object").as("rtype"),
-      col("toponym_id").as("id"),
-      lit("st:Building").as("otype"),
-      col("year").as("valid_since"),
-      col("year").as("valid_until"),
-      col("consensus").as("name"),
-      dataStruct(
-        number = lit(null.asInstanceOf[String]),
-        sheetId = col("sheet_id"),
-        layerId = col("layer_id"),
-        mapId = col("map_id"),
-        colors = lit(null).cast(ArrayType(StringType)),
-        borough = col("borough"),
-      ).as("data"),
-      rawGeometryJson(col("geometry")).as("geometry_json"),
-    ) ++ nullRel: _*)
-
-    val mapwarperRels = mapwarperRelations(joined, col("toponym_id"), col("map_id"), col("layer_id"))
-
-    val boroughLogs = logRecords(
-      joined.filter(col("borough").isNull || col("borough") === ""),
-      concat(lit("Can't find borough for layer "), col("layer_id")),
-    )
+    val toponym = objectRecord(col("toponym_id"), "st:Building", year, col("consensus"),
+      dataStruct(lit(null).cast(StringType), col("sheet_id"), layerId, mapId,
+        lit(null).cast(ArrayType(StringType)), col("dim.borough")),
+      rawGeometryJson(col("geometry")))
+    val records = deduped.select(inline(filter(
+      array(withEdges(toponym, col("toponym_id"), mapId, layerId, col("dim.borough")): _*),
+      _.isNotNull)))
 
     // J3: per-layer point-in-polygon probe, Points only
     // (geo-indices.js:18-20,38-50; building-inspector.js:280-313).
-    val probes = joined
+    // "No geospatial index for layer" = the toponym's layer has no
+    // indexed polygons at all (geo-indices.js:44-46); the flag rides
+    // along so one left-outer join yields every outcome.
+    val layersWithIndex = indexedBuildings.select(col("b_layer_id")).distinct()
+    val flagged = deduped
       .filter(col("geometry.type") === "Point" && col("coords").isNotNull)
       .select(
-        col("toponym_id"), col("layer_id"),
+        col("toponym_id"), layerId.as("layer_id"),
         element_at(col("coords"), 1).as("px"),
         element_at(col("coords"), 2).as("py"),
         col("coords"),
       )
-
-    // "No geospatial index for layer" = the toponym's layer has no
-    // indexed polygons at all (geo-indices.js:44-46) → error log.
-    val layersWithIndex = indexedBuildings.select(col("b_layer_id")).distinct()
-    val flagged = probes
       .join(broadcast(layersWithIndex), col("layer_id") === col("b_layer_id"), "left_outer")
       .withColumn("has_index", col("b_layer_id").isNotNull)
       .drop("b_layer_id")
 
-    val noIndexLogs = logRecords(
-      flagged.filter(!col("has_index")),
-      concat(lit("Error computing intersection for toponym "), col("toponym_id")),
-    )
-
     // Equi-join on layerId + bbox prefilter, exact contains as residual.
-    val spatial = flagged
-      .filter(col("has_index"))
+    val outcomes = flagged
       .join(
         indexedBuildings,
         col("layer_id") === col("b_layer_id") &&
@@ -344,24 +284,17 @@ object InspectorPipeline {
           st_contains(col("b_rings"), col("coords")),
         "left_outer",
       )
+      .select(
+        when(col("b_id").isNotNull,
+          relationRecord(col("toponym_id"), col("b_id"), "st:sameAs"))
+          .when(col("has_index"),
+            logRecord(concat(lit("Can't find building for toponym "), col("toponym_id"))))
+          .otherwise(
+            logRecord(concat(lit("Error computing intersection for toponym "), col("toponym_id"))))
+          .as("r"))
+      .select(col("r.*"))
 
-    val sameAsRels = relationRecords(
-      spatial.filter(col("b_id").isNotNull),
-      col("toponym_id"),
-      col("b_id"),
-      lit("st:sameAs"),
-    )
-    val noMatchLogs = logRecords(
-      spatial.filter(col("b_id").isNull),
-      concat(lit("Can't find building for toponym "), col("toponym_id")),
-    )
-
-    toponymObjects
-      .unionByName(mapwarperRels)
-      .unionByName(boroughLogs)
-      .unionByName(sameAsRels)
-      .unionByName(noMatchLogs)
-      .unionByName(noIndexLogs)
+    records.unionByName(outcomes)
   }
 
   // ----------------------------------------------------------- helpers
@@ -388,55 +321,62 @@ object InspectorPipeline {
       concat(lit("{\"type\":\""), geom.getField("type"),
         lit("\",\"coordinates\":"), geom.getField("coordinates"), lit("}")))
 
-  private val relColumns = Seq("rel_from", "rel_to", "rel_type", "error")
+  private val nullString: Column = lit(null).cast(StringType)
 
-  private def nullRel: Seq[Column] =
-    relColumns.map(n => lit(null.asInstanceOf[String]).as(n))
-
-  private def objNulls: Seq[Column] = Seq(
-    lit(null.asInstanceOf[String]).as("id"),
-    lit(null.asInstanceOf[String]).as("otype"),
-    lit(null).cast("int").as("valid_since"),
-    lit(null).cast("int").as("valid_until"),
-    lit(null.asInstanceOf[String]).as("name"),
-    lit(null).cast(
-      "struct<number:string,sheetId:bigint,layerId:bigint,mapId:int," +
-        "colors:array<string>,borough:string>").as("data"),
-    lit(null.asInstanceOf[String]).as("geometry_json"),
-  )
-
-  def relationRecords(df: DataFrame, from: Column, to: Column, rtype: Column): DataFrame =
-    df.select(
-      Seq(lit("relation").as("rtype")) ++ objNulls ++ Seq(
-        from.cast("string").as("rel_from"),
-        to.cast("string").as("rel_to"),
-        rtype.as("rel_type"),
-        lit(null.asInstanceOf[String]).as("error"),
-      ): _*
-    )
-
-  def logRecords(df: DataFrame, error: Column): DataFrame =
-    df.select(
-      Seq(lit("log").as("rtype")) ++ objNulls ++ Seq(
-        lit(null.asInstanceOf[String]).as("rel_from"),
-        lit(null.asInstanceOf[String]).as("rel_to"),
-        lit(null.asInstanceOf[String]).as("rel_type"),
-        error.as("error"),
-      ): _*
-    )
-
-  /** 2 edges per object: mapwarper/{mapId} and mapwarper/layer-{layerId}
-    * (building-inspector.js:183-202).
+  /** One output record as a struct; its fields, in order, are the
+    * columns of the record DataFrame. Fields a record kind does not
+    * use stay null.
     */
-  private def mapwarperRelations(df: DataFrame, id: Column, mapId: Column,
-      layerId: Column): DataFrame = {
-    val edges = df.select(
-      id.cast("string").as("rel_from"),
-      explode(array(
-        concat(lit("mapwarper/"), mapId),
-        concat(lit("mapwarper/layer-"), layerId),
-      )).as("rel_to"),
+  private def record(
+      rtype: String,
+      id: Column = nullString,
+      otype: Column = nullString,
+      year: Column = lit(null).cast(IntegerType),
+      name: Column = nullString,
+      data: Column = lit(null).cast(
+        "struct<number:string,sheetId:bigint,layerId:bigint,mapId:int," +
+          "colors:array<string>,borough:string>"),
+      geometryJson: Column = nullString,
+      relFrom: Column = nullString,
+      relTo: Column = nullString,
+      relType: Column = nullString,
+      error: Column = nullString): Column =
+    struct(
+      lit(rtype).as("rtype"),
+      id.cast(StringType).as("id"),
+      otype.as("otype"),
+      year.as("valid_since"),
+      year.as("valid_until"),
+      name.as("name"),
+      data.as("data"),
+      geometryJson.as("geometry_json"),
+      relFrom.cast(StringType).as("rel_from"),
+      relTo.as("rel_to"),
+      relType.as("rel_type"),
+      error.as("error"),
     )
-    relationRecords(edges, col("rel_from"), col("rel_to"), lit("st:in"))
-  }
+
+  private def objectRecord(id: Column, otype: String, year: Column, name: Column,
+      data: Column, geometryJson: Column): Column =
+    record("object", id = id, otype = lit(otype), year = year, name = name, data = data,
+      geometryJson = geometryJson)
+
+  private def relationRecord(from: Column, to: Column, relType: String): Column =
+    record("relation", relFrom = from, relTo = to, relType = lit(relType))
+
+  private def logRecord(error: Column): Column = record("log", error = error)
+
+  /** An object with its 2 mapwarper edges, mapwarper/{mapId} and
+    * mapwarper/layer-{layerId} (building-inspector.js:183-202), and —
+    * when its layer has no borough (falsy check, :129-136; S8/J2) —
+    * the borough log, which is null otherwise.
+    */
+  private def withEdges(obj: Column, id: Column, mapId: Column, layerId: Column,
+      borough: Column): Seq[Column] = Seq(
+    obj,
+    relationRecord(id, concat(lit("mapwarper/"), mapId), "st:in"),
+    relationRecord(id, concat(lit("mapwarper/layer-"), layerId), "st:in"),
+    when(borough.isNull || borough === "",
+      logRecord(concat(lit("Can't find borough for layer "), layerId))),
+  )
 }

@@ -53,93 +53,94 @@ class InspectorPipelineSpec extends AnyFunSuite {
   private def topoId(sheetId: Int, coordsJoin: String): String =
     s"toponym-$sheetId-${Base62.encodeHex(md5hex(coordsJoin))}"
 
-  test("full transform matches the golden record multiset") {
-    def res(name: String): String =
-      getClass.getResource(s"/inspector/$name").getPath
-    val records = Engine.transform(spark, Engine.Dirs(
-      consolidated = res("consolidated.geojson"),
-      toponyms = res("toponyms.geojson"),
-      sheets = res("sheets.geojson"),
-      layerBoroughs = res("layer-boroughs.json"),
-    ))
-    val got = NdjsonSink.lines(records).collect().map(_.getString(0))
-      .map(l => canon(mapper.readTree(l)))
-      .groupBy(identity).view.mapValues(_.length).toMap
+  private val t1 = topoId(862, "7,5")
+  private val t2 = topoId(862, "2,5")
+  private val t3 = topoId(862, "100,100")
+  private val t4 = topoId(861, "1,1")
+  private val t6 = topoId(863, "3,3")
+  private val t7 = topoId(860, "1,1")
 
-    val t1 = topoId(862, "7,5")
-    val t2 = topoId(862, "2,5")
-    val t3 = topoId(862, "100,100")
-    val t4 = topoId(861, "1,1")
-    val t6 = topoId(863, "3,3")
-    val t7 = topoId(860, "1,1")
+  private def obj(o: String) = s"""{"type":"object","obj":$o}"""
+  private def rel(from: String, to: String, t: String) =
+    s"""{"type":"relation","obj":{"from":"$from","to":"$to","type":"$t"}}"""
+  private def log(e: String) = s"""{"type":"log","obj":{"error":"$e"}}"""
+  private def mapwarper(id: String, mapId: Int, layerId: Int) = Seq(
+    rel(id, s"mapwarper/$mapId", "st:in"),
+    rel(id, s"mapwarper/layer-$layerId", "st:in"),
+  )
 
-    def obj(o: String) = s"""{"type":"object","obj":$o}"""
-    def rel(from: String, to: String, t: String) =
-      s"""{"type":"relation","obj":{"from":"$from","to":"$to","type":"$t"}}"""
-    def log(e: String) = s"""{"type":"log","obj":{"error":"$e"}}"""
-    def mapwarper(id: String, mapId: Int, layerId: Int) = Seq(
-      rel(id, s"mapwarper/$mapId", "st:in"),
-      rel(id, s"mapwarper/layer-$layerId", "st:in"),
-    )
+  private val sq = "[[[0,0],[10,0],[10,10],[0,10],[0,0]]]"
 
-    val sq = "[[[0,0],[10,0],[10,10],[0,10],[0,0]]]"
-    val expected = Seq(
-      // building 100 (first occurrence wins; dup suppressed)
-      obj(s"""{"id":"100","type":"st:Building","validSince":1886,"validUntil":1886,"data":{"sheetId":860,"layerId":1130,"mapId":20010,"colors":["pink","yellow"],"borough":"Brooklyn"},"geometry":{"type":"Polygon","coordinates":$sq}}"""),
-      obj("""{"id":"100-1","type":"st:Address","validSince":1886,"validUntil":1886,"name":"25","data":{"number":"25","sheetId":860,"layerId":1130,"mapId":20010,"borough":"Brooklyn"},"geometry":{"type":"Point","coordinates":[1,1]}}"""),
-      obj("""{"id":"100-2","type":"st:Address","validSince":1886,"validUntil":1886,"name":"27","data":{"number":"27","sheetId":860,"layerId":1130,"mapId":20010,"borough":"Brooklyn"},"geometry":{"type":"Point","coordinates":[2,2]}}"""),
-      rel("100-1", "100", "st:in"),
-      rel("100-2", "100", "st:in"),
-      // building 102: degenerate first occurrence kills later valid dup (H2)
-      // building 103: missing borough layer
-      obj("""{"id":"103","type":"st:Building","validSince":1890,"validUntil":1890,"data":{"sheetId":861,"layerId":9999,"mapId":20013},"geometry":{"type":"Polygon","coordinates":[[[20,20],[30,20],[30,30],[20,30],[20,20]]]}}"""),
-      log("Can't find borough for layer 9999"),
-      // building 104: empty consensus_color -> no colors; address without geometry
-      obj("""{"id":"104","type":"st:Building","validSince":1886,"validUntil":1886,"data":{"sheetId":860,"layerId":1130,"mapId":20014,"borough":"Brooklyn"},"geometry":{"type":"Polygon","coordinates":[[[40,0],[50,0],[50,10],[40,10],[40,0]]]}}"""),
-      obj("""{"id":"104-1","type":"st:Address","validSince":1886,"validUntil":1886,"name":"7","data":{"number":"7","sheetId":860,"layerId":1130,"mapId":20014,"borough":"Brooklyn"}}"""),
-      rel("104-1", "104", "st:in"),
-      // buildings 105/106 on the Manhattan layer
-      obj(s"""{"id":"105","type":"st:Building","validSince":1893,"validUntil":1893,"data":{"sheetId":862,"layerId":1142,"mapId":20015,"borough":"Manhattan"},"geometry":{"type":"Polygon","coordinates":$sq}}"""),
-      obj("""{"id":"106","type":"st:Building","validSince":1893,"validUntil":1893,"data":{"sheetId":862,"layerId":1142,"mapId":20016,"borough":"Manhattan"},"geometry":{"type":"Polygon","coordinates":[[[5,0],[15,0],[15,10],[5,10],[5,0]]]}}"""),
-      // toponym t1: contained by BOTH 105 and 106
-      obj(s"""{"id":"$t1","type":"st:Building","validSince":1893,"validUntil":1893,"name":"Two Match","data":{"sheetId":862,"layerId":1142,"mapId":10012,"borough":"Manhattan"},"geometry":{"type":"Point","coordinates":[7,5]}}"""),
-      rel(t1, "105", "st:sameAs"),
-      rel(t1, "106", "st:sameAs"),
-      // toponym t2: one match
-      obj(s"""{"id":"$t2","type":"st:Building","validSince":1893,"validUntil":1893,"name":"One Match","data":{"sheetId":862,"layerId":1142,"mapId":10012,"borough":"Manhattan"},"geometry":{"type":"Point","coordinates":[2,5]}}"""),
-      rel(t2, "105", "st:sameAs"),
-      // toponym t3: zero matches on an indexed layer
-      obj(s"""{"id":"$t3","type":"st:Building","validSince":1893,"validUntil":1893,"name":"No Match","data":{"sheetId":862,"layerId":1142,"mapId":10012,"borough":"Manhattan"},"geometry":{"type":"Point","coordinates":[100,100]}}"""),
-      log(s"Can't find building for toponym $t3"),
-      // toponym t4: layer 9999 indexed (building 103) but point outside
-      obj(s"""{"id":"$t4","type":"st:Building","validSince":1890,"validUntil":1890,"name":"Outside Probe","data":{"sheetId":861,"layerId":9999,"mapId":10011},"geometry":{"type":"Point","coordinates":[1,1]}}"""),
-      log("Can't find borough for layer 9999"),
-      log(s"Can't find building for toponym $t4"),
-      // toponym t5 (dup coords of t1) suppressed entirely
-      // toponym t6: layer 8888 has no index at all
-      obj(s"""{"id":"$t6","type":"st:Building","validSince":1895,"validUntil":1895,"name":"No Layer","data":{"sheetId":863,"layerId":8888,"mapId":10013},"geometry":{"type":"Point","coordinates":[3,3]}}"""),
-      log("Can't find borough for layer 8888"),
-      log(s"Error computing intersection for toponym $t6"),
-      // toponym t7: contained by building 100 on the Brooklyn layer
-      obj(s"""{"id":"$t7","type":"st:Building","validSince":1886,"validUntil":1886,"name":"School","data":{"sheetId":860,"layerId":1130,"mapId":10010,"borough":"Brooklyn"},"geometry":{"type":"Point","coordinates":[1,1]}}"""),
-      rel(t7, "100", "st:sameAs"),
-    ) ++
-      mapwarper("100", 20010, 1130) ++
-      mapwarper("103", 20013, 9999) ++
-      mapwarper("104", 20014, 1130) ++
-      mapwarper("105", 20015, 1142) ++
-      mapwarper("106", 20016, 1142) ++
-      mapwarper(t1, 10012, 1142) ++
-      mapwarper(t2, 10012, 1142) ++
-      mapwarper(t3, 10012, 1142) ++
-      mapwarper(t4, 10011, 9999) ++
-      mapwarper(t6, 10013, 8888) ++
-      mapwarper(t7, 10010, 1130)
+  /** The golden's consolidated-phase records. */
+  private val buildingRecords = Seq(
+    // building 100 (first occurrence wins; dup suppressed)
+    obj(s"""{"id":"100","type":"st:Building","validSince":1886,"validUntil":1886,"data":{"sheetId":860,"layerId":1130,"mapId":20010,"colors":["pink","yellow"],"borough":"Brooklyn"},"geometry":{"type":"Polygon","coordinates":$sq}}"""),
+    obj("""{"id":"100-1","type":"st:Address","validSince":1886,"validUntil":1886,"name":"25","data":{"number":"25","sheetId":860,"layerId":1130,"mapId":20010,"borough":"Brooklyn"},"geometry":{"type":"Point","coordinates":[1,1]}}"""),
+    obj("""{"id":"100-2","type":"st:Address","validSince":1886,"validUntil":1886,"name":"27","data":{"number":"27","sheetId":860,"layerId":1130,"mapId":20010,"borough":"Brooklyn"},"geometry":{"type":"Point","coordinates":[2,2]}}"""),
+    rel("100-1", "100", "st:in"),
+    rel("100-2", "100", "st:in"),
+    // building 102: degenerate first occurrence kills later valid dup (H2)
+    // building 103: missing borough layer
+    obj("""{"id":"103","type":"st:Building","validSince":1890,"validUntil":1890,"data":{"sheetId":861,"layerId":9999,"mapId":20013},"geometry":{"type":"Polygon","coordinates":[[[20,20],[30,20],[30,30],[20,30],[20,20]]]}}"""),
+    log("Can't find borough for layer 9999"),
+    // building 104: empty consensus_color -> no colors; address without geometry
+    obj("""{"id":"104","type":"st:Building","validSince":1886,"validUntil":1886,"data":{"sheetId":860,"layerId":1130,"mapId":20014,"borough":"Brooklyn"},"geometry":{"type":"Polygon","coordinates":[[[40,0],[50,0],[50,10],[40,10],[40,0]]]}}"""),
+    obj("""{"id":"104-1","type":"st:Address","validSince":1886,"validUntil":1886,"name":"7","data":{"number":"7","sheetId":860,"layerId":1130,"mapId":20014,"borough":"Brooklyn"}}"""),
+    rel("104-1", "104", "st:in"),
+    // buildings 105/106 on the Manhattan layer
+    obj(s"""{"id":"105","type":"st:Building","validSince":1893,"validUntil":1893,"data":{"sheetId":862,"layerId":1142,"mapId":20015,"borough":"Manhattan"},"geometry":{"type":"Polygon","coordinates":$sq}}"""),
+    obj("""{"id":"106","type":"st:Building","validSince":1893,"validUntil":1893,"data":{"sheetId":862,"layerId":1142,"mapId":20016,"borough":"Manhattan"},"geometry":{"type":"Polygon","coordinates":[[[5,0],[15,0],[15,10],[5,10],[5,0]]]}}"""),
+  ) ++
+    mapwarper("100", 20010, 1130) ++
+    mapwarper("103", 20013, 9999) ++
+    mapwarper("104", 20014, 1130) ++
+    mapwarper("105", 20015, 1142) ++
+    mapwarper("106", 20016, 1142)
 
-    val want = expected
-      .map(l => canon(mapper.readTree(l)))
-      .groupBy(identity).view.mapValues(_.length).toMap
+  /** The golden's toponym records other than the point-in-polygon outcomes. */
+  private val toponymRecords = Seq(
+    // toponym t1: contained by BOTH 105 and 106
+    obj(s"""{"id":"$t1","type":"st:Building","validSince":1893,"validUntil":1893,"name":"Two Match","data":{"sheetId":862,"layerId":1142,"mapId":10012,"borough":"Manhattan"},"geometry":{"type":"Point","coordinates":[7,5]}}"""),
+    // toponym t2: one match
+    obj(s"""{"id":"$t2","type":"st:Building","validSince":1893,"validUntil":1893,"name":"One Match","data":{"sheetId":862,"layerId":1142,"mapId":10012,"borough":"Manhattan"},"geometry":{"type":"Point","coordinates":[2,5]}}"""),
+    // toponym t3: zero matches on an indexed layer
+    obj(s"""{"id":"$t3","type":"st:Building","validSince":1893,"validUntil":1893,"name":"No Match","data":{"sheetId":862,"layerId":1142,"mapId":10012,"borough":"Manhattan"},"geometry":{"type":"Point","coordinates":[100,100]}}"""),
+    // toponym t4: layer 9999 indexed (building 103) but point outside
+    obj(s"""{"id":"$t4","type":"st:Building","validSince":1890,"validUntil":1890,"name":"Outside Probe","data":{"sheetId":861,"layerId":9999,"mapId":10011},"geometry":{"type":"Point","coordinates":[1,1]}}"""),
+    log("Can't find borough for layer 9999"),
+    // toponym t5 (dup coords of t1) suppressed entirely
+    // toponym t6: layer 8888 has no index at all
+    obj(s"""{"id":"$t6","type":"st:Building","validSince":1895,"validUntil":1895,"name":"No Layer","data":{"sheetId":863,"layerId":8888,"mapId":10013},"geometry":{"type":"Point","coordinates":[3,3]}}"""),
+    log("Can't find borough for layer 8888"),
+    // toponym t7: contained by building 100 on the Brooklyn layer
+    obj(s"""{"id":"$t7","type":"st:Building","validSince":1886,"validUntil":1886,"name":"School","data":{"sheetId":860,"layerId":1130,"mapId":10010,"borough":"Brooklyn"},"geometry":{"type":"Point","coordinates":[1,1]}}"""),
+  ) ++
+    mapwarper(t1, 10012, 1142) ++
+    mapwarper(t2, 10012, 1142) ++
+    mapwarper(t3, 10012, 1142) ++
+    mapwarper(t4, 10011, 9999) ++
+    mapwarper(t6, 10013, 8888) ++
+    mapwarper(t7, 10010, 1130)
 
+  /** The golden's point-in-polygon outcomes, one per Point toponym match. */
+  private val probeOutcomes = Seq(
+    rel(t1, "105", "st:sameAs"),
+    rel(t1, "106", "st:sameAs"),
+    rel(t2, "105", "st:sameAs"),
+    log(s"Can't find building for toponym $t3"),
+    log(s"Can't find building for toponym $t4"),
+    log(s"Error computing intersection for toponym $t6"),
+    rel(t7, "100", "st:sameAs"),
+  )
+
+  /** Every golden toponym is a Point. */
+  private val pointToponyms = Seq(t1, t2, t3, t4, t6, t7)
+
+  private def multisetOf(lines: Seq[String]): Map[String, Int] =
+    lines.map(l => canon(mapper.readTree(l))).groupBy(identity).view.mapValues(_.length).toMap
+
+  /** Equal multisets, or a failure listing what differs. */
+  private def assertSameRecords(got: Map[String, Int], want: Map[String, Int]): Unit = {
     val missing = want.keySet.diff(got.keySet)
     val extra = got.keySet.diff(want.keySet)
     assert(missing.isEmpty && extra.isEmpty,
@@ -152,17 +153,23 @@ class InspectorPipelineSpec extends AnyFunSuite {
     })
   }
 
+  test("full transform matches the golden record multiset") {
+    assertSameRecords(recordMultiset(golden),
+      multisetOf(buildingRecords ++ toponymRecords ++ probeOutcomes))
+  }
+
   private def res(name: String): String =
     getClass.getResource(s"/inspector/$name").getPath
 
-  private def recordMultiset(consolidated: String): Map[String, Int] =
-    NdjsonSink.lines(Engine.transform(spark, Engine.Dirs(
-      consolidated = consolidated,
-      toponyms = res("toponyms.geojson"),
-      sheets = res("sheets.geojson"),
-      layerBoroughs = res("layer-boroughs.json"),
-    ))).collect().map(r => canon(mapper.readTree(r.getString(0))))
-      .groupBy(identity).view.mapValues(_.length).toMap
+  private lazy val golden = Engine.Dirs(
+    consolidated = res("consolidated.geojson"),
+    toponyms = res("toponyms.geojson"),
+    sheets = res("sheets.geojson"),
+    layerBoroughs = res("layer-boroughs.json"),
+  )
+
+  private def recordMultiset(dirs: Engine.Dirs): Map[String, Int] =
+    multisetOf(NdjsonSink.lines(Engine.transform(spark, dirs)).collect().map(_.getString(0)).toSeq)
 
   // The download step lands consolidated as NDJSON; transform must
   // read that file as landed, with the same first-seen dedup order.
@@ -181,7 +188,7 @@ class InspectorPipelineSpec extends AnyFunSuite {
     )
     assert(n == features.size && pages.size > 1)
     assert(!graft.sources.GeoJson.isFeatureCollection(spark, out.toString))
-    assert(recordMultiset(out.toString) == recordMultiset(res("consolidated.geojson")))
+    assert(recordMultiset(golden.copy(consolidated = out.toString)) == recordMultiset(golden))
   }
 
   test("transform reads file: URIs like plain paths") {
@@ -278,5 +285,98 @@ class InspectorPipelineSpec extends AnyFunSuite {
       layerBoroughs = res("layer-boroughs.json"),
     ))
     assert(records.count() > 0)
+  }
+
+  // D3: layersById is _.keyBy (building-inspector.js:390-392), so a
+  // repeated layer id keeps its last entry and never fans out records.
+  test("layer-boroughs: the last entry for a repeated layer id wins") {
+    val repeated = writeTemp("layers-repeated",
+      """[{"id":1130,"borough":"Brooklyn"},{"id":1142,"borough":"Manhattan"},""" +
+        """{"id":1130,"borough":"Elsewhere"}]""")
+    val lastOnly = writeTemp("layers-last",
+      """[{"id":1142,"borough":"Manhattan"},{"id":1130,"borough":"Elsewhere"}]""")
+    val want = recordMultiset(golden.copy(layerBoroughs = lastOnly))
+    assert(want.keySet.exists(_.contains("Elsewhere")))
+    assertSameRecords(recordMultiset(golden.copy(layerBoroughs = repeated)), want)
+  }
+
+  // Each phase is one dedup checkpoint, one pre-flight check and one
+  // record generator: no cached fan-out, and the point-in-polygon join
+  // (the costly part) planned once for all three toponym outcomes.
+  test("plan guard: one pass per phase, one st_contains join, no cached scans") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
+    val jobListener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    val planListener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = plans.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = plans.add(qe.executedPlan)
+    }
+    val out = java.nio.file.Files.createTempDirectory("plan-guard").resolve("ndjson").toString
+    org.apache.spark.TestListenerBus.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(jobListener)
+    spark.listenerManager.register(planListener)
+    try {
+      Engine.transformToNdjson(spark, golden, out)
+      org.apache.spark.TestListenerBus.drain(spark.sparkContext)
+    } finally {
+      spark.sparkContext.removeSparkListener(jobListener)
+      spark.listenerManager.unregister(planListener)
+    }
+
+    val helper = new AdaptiveSparkPlanHelper {}
+    val executed = plans.asScala.toSeq
+    assert(executed.nonEmpty)
+    assert(jobs.get <= 20, s"${jobs.get} Spark jobs for one transform")
+    assert(executed.forall(p => helper.find(p)(_.isInstanceOf[InMemoryTableScanExec]).isEmpty),
+      "a cached relation is scanned")
+    val spatialJoins = executed.flatMap(p => helper.collectWithSubqueries(p) {
+      case j: BaseJoinExec
+          if j.condition.exists(_.exists(_.isInstanceOf[graft.functions.StContains])) => j
+    })
+    assert(spatialJoins.size == 1, spatialJoins.mkString("\n"))
+  }
+
+  private val emptyCollection = """{"type":"FeatureCollection","features":[]}"""
+
+  // Degenerate inputs: with no buildings no layer has an index, so
+  // every Point toponym logs the intersection error.
+  test("degenerate input: an empty consolidated collection") {
+    val dirs = golden.copy(consolidated = writeTemp("empty-consolidated", emptyCollection))
+    assertSameRecords(recordMultiset(dirs), multisetOf(toponymRecords ++
+      pointToponyms.map(t => log(s"Error computing intersection for toponym $t"))))
+  }
+
+  test("degenerate input: an empty toponym collection") {
+    val dirs = golden.copy(toponyms = writeTemp("empty-toponyms", emptyCollection))
+    assertSameRecords(recordMultiset(dirs), multisetOf(buildingRecords))
+  }
+
+  // No layer has a borough: every building and toponym object logs
+  // its layer, and no record carries a borough.
+  test("degenerate input: an empty layer-boroughs array") {
+    val dirs = golden.copy(layerBoroughs = writeTemp("empty-layers", "[]"))
+    val want = (buildingRecords ++ toponymRecords ++ probeOutcomes).flatMap { line =>
+      val node = mapper.readTree(line)
+      node.path("obj").path("data") match {
+        case data: ObjectNode if data.has("borough") =>
+          data.remove("borough")
+          val boroughLog =
+            if (node.path("obj").path("type").asText == "st:Building")
+              Seq(log(s"Can't find borough for layer ${data.get("layerId")}"))
+            else Nil
+          mapper.writeValueAsString(node) +: boroughLog
+        case _ => Seq(line)
+      }
+    }
+    assertSameRecords(recordMultiset(dirs), multisetOf(want))
   }
 }

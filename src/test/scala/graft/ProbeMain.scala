@@ -4,10 +4,11 @@ import org.apache.spark.sql.SparkSession
 
 /** Generic grown-corpus probe: one JSONL row per (query, dir) with
   * wall time and result rows, for ANY catalogue query. This is the
-  * JVM half of the paired-A/B protocol (tools/ab_paired.sh) — the
-  * script alternates invocations of this main between two checkouts
-  * and compares per-query minima, which is the only comparison that
-  * survives this host's measured 2.2× cross-session drift.
+  * JVM half of the paired-A/B protocol (`tools/ab_paired.sh <sha>
+  * probe …`) — the script alternates invocations of this main between
+  * two checkouts and compares per-query medians and pairs won, which
+  * only pairs run side by side support given this host's measured 2.2×
+  * cross-session drift.
   *
   *   SPARK_GRAFT_PROBE_NAMES=a,b \
   *   SPARK_GRAFT_SF_DIRS=d1,d2 sbt "Test/runMain graft.ProbeMain"
@@ -18,7 +19,7 @@ import org.apache.spark.sql.SparkSession
   *
   * NOTE for ab_paired.sh: this file depends only on [[QueryCatalog]]
   * and graft.functions.exprs, both stable since round 3, so the
-  * script can copy it verbatim into a baseline worktree that predates
+  * script can copy it verbatim into a parent tree that predates
   * it. [[Round10Probe]] delegates here — keep this file standalone.
   */
 object ProbeMain {

@@ -1,98 +1,199 @@
 #!/usr/bin/env bash
-# Paired-A/B grown-scale benchmark protocol (promoted from round-10
-# session lore; see BASELINE.md "Paired-A/B protocol").
-#
-# This host's wall-clock drifts up to 2.2x across sessions for the
-# SAME code, so cross-session single-rep numbers cannot support a
-# perf claim. The only comparison that survives the drift: build the
-# baseline ref in a worktree, ALTERNATE baseline/current probe runs
-# back-to-back in one session, and compare per-query MINIMA.
+# Paired A/B: a parent commit against this checkout's working tree, the
+# two sides run back to back, alternating which goes first. This host's
+# wall clock drifts up to 2.2x across sessions for the SAME code
+# (BASELINE.md "Paired-A/B protocol"), so only pairs run side by side in
+# one session support a perf claim.
 #
 # Usage:
-#   tools/ab_paired.sh <baseline-ref> <sf-dir> <names-csv> [reps] [out.jsonl]
+#   tools/ab_paired.sh <parent-sha> perfbench <workload> <seed>...
+#   tools/ab_paired.sh <parent-sha> probe <sf-dirs-csv> <names-csv> [reps]
 # e.g.
-#   tools/ab_paired.sh a9d6c75 /tmp/grow_sf10 gr_triangle_count 2 \
-#     probes/round11_ab.jsonl
+#   tools/ab_paired.sh 2e3148b perfbench transform_probe 1 2 3 4 5 6 7 8 9 10
+#   tools/ab_paired.sh a9d6c75 probe /tmp/grow_sf10 gr_triangle_count 3
 #
-# Each rep runs graft.ProbeMain (one JVM, all names once) in the
-# baseline worktree then in the current repo, appending rows like
-#   {"side":"base","sha":"...","rep":1,"probe":"...","sec":12.3,...}
-# Verdict basis: min(sec) per (side, probe) over all reps.
+# Runners. perfbench: one pair per seed; each side runs the repository
+# benchmark (BENCHMARK.json) as `perfbench/run.py --workload <w> --seed
+# <s> --seconds <run_seconds> --trace 0` from its own root, building
+# from its own sources on its first run; the metrics are BENCHMARK.json's
+# end-to-end ones. probe: one pair per rep; each side runs
+# graft.ProbeMain (one JVM, every name on every dir once); the metric is
+# each query's `sec`. ProbeMain.scala depends only on QueryCatalog and is
+# copied into the parent's tree, so a parent that predates it exposes
+# the same probe surface.
 #
-# LIFETIME CAVEAT (round-11 lesson): if the invoking harness caps the
-# script's wall time, the in-flight JVM gets SIGTERM'd and the probe
-# emits error rows containing "SparkContext was shut down" — that is
-# an EXTERNAL kill, not a query failure. For long query sets, invoke
-# this script once per rep (REPS=1, same OUT file — rows append) so
-# every invocation fits the cap; the summary below recomputes minima
-# over everything accumulated in OUT.
+# The parent is exported with `git archive` into $AB_DIR/<sha> (default
+# AB_DIR: ${TMPDIR:-/tmp}/ab_paired). Do not `cp -a` a built checkout
+# instead: sbt's incremental-compile state under target/ holds absolute
+# paths, so building in such a copy can delete the original's compiled
+# classes (seen: the original's target/scala-2.13/classes left empty).
+# The change side is labelled with HEAD's sha, plus "+dirty" when the
+# tree has uncommitted edits.
+#
+# Result rows are appended to $OUT (default: $AB_DIR/<runner>_<workload
+# or names>.jsonl) as
+#   {"side":"parent"|"change","sha":"...","pair":N,"key":"...","result":{...}}
+# and the summary reads every row in $OUT, so runs accumulate across
+# invocations. When a harness caps this script's wall time, invoke it
+# once per seed or rep with the same OUT: a killed run leaves no row
+# (and a warning), never a failed one. For each key and metric the
+# summary prints each side's median and quartiles, the pairs the change
+# won (ties count for neither), and two verdicts: GAIN when there are at
+# least ten pairs, the change won at least 9/10 of them and the medians
+# differ by more than the parent's quartile spread (choosing-metrics
+# §8); WORSE when the change's median is worse than the parent's by more
+# than the metric's bound (perfbench metrics only).
 set -euo pipefail
 
-REF=${1:?baseline ref}
-SFDIR=${2:?sf dir}
-NAMES=${3:?query names csv}
-REPS=${4:-2}
-OUT=${5:-probes/ab_paired_$(date +%Y%m%d_%H%M%S).jsonl}
-
-cd "$(git rev-parse --show-toplevel)"
-BASE_SHA=$(git rev-parse "$REF")
-CUR_SHA=$(git rev-parse HEAD)
-WT=/tmp/ab_${BASE_SHA:0:10}
-
-if [ ! -d "$WT" ]; then
-  git worktree add --detach "$WT" "$BASE_SHA"
-fi
-# ProbeMain depends only on QueryCatalog (stable since round 3) —
-# copy it in so baselines that predate it still expose the same probe
-# surface with loud name resolution.
-mkdir -p "$WT/src/test/scala/graft"
-cp src/test/scala/graft/ProbeMain.scala "$WT/src/test/scala/graft/ProbeMain.scala"
-
-echo "[ab] compiling baseline $BASE_SHA in $WT ..." >&2
-(cd "$WT" && sbt -batch "Test/compile" >/dev/null)
-echo "[ab] compiling current $CUR_SHA ..." >&2
-sbt -batch "Test/compile" >/dev/null
-
-probe() { # $1=dir $2=side $3=sha $4=rep
-  # `|| true` on the pipeline: under set -euo pipefail, an sbt run
-  # that emits zero probe rows (OOM, harness SIGTERM before the first
-  # row) would otherwise abort the WHOLE script mid-rep — discarding
-  # the reps already accumulated in $OUT and the summary over them.
-  local rows
-  rows=$( (cd "$1" && SPARK_GRAFT_PROBE_NAMES="$NAMES" SPARK_GRAFT_SF_DIRS="$SFDIR" \
-    sbt -batch "Test/runMain graft.ProbeMain" 2>/dev/null) \
-    | grep '^{"probe"' || true)
-  if [ -z "$rows" ]; then
-    echo "[ab] WARNING: $2 rep $4 produced no probe rows (sbt failed or was killed)" >&2
-  else
-    printf '%s\n' "$rows" \
-      | sed "s/^{/{\"side\":\"$2\",\"sha\":\"$3\",\"rep\":$4,/" >> "$OUT"
-  fi
+usage() {
+  echo "usage: $0 <parent-sha> perfbench <workload> <seed>..." >&2
+  echo "       $0 <parent-sha> probe <sf-dirs-csv> <names-csv> [reps]" >&2
+  exit 2
 }
 
-mkdir -p "$(dirname "$OUT")"
-for rep in $(seq 1 "$REPS"); do
-  echo "[ab] rep $rep/$REPS: baseline ..." >&2
-  probe "$WT" base "$BASE_SHA" "$rep"
-  echo "[ab] rep $rep/$REPS: current ..." >&2
-  probe . cur "$CUR_SHA" "$rep"
+SHA_ARG=${1:-}
+RUNNER=${2:-}
+[ -n "$SHA_ARG" ] && [ -n "$RUNNER" ] || usage
+shift 2
+
+ROOT=$(git rev-parse --show-toplevel)
+cd "$ROOT"
+PARENT_SHA=$(git rev-parse "$SHA_ARG^{commit}")
+CHANGE_SHA=$(git rev-parse HEAD)
+[ -z "$(git status --porcelain)" ] || CHANGE_SHA="$CHANGE_SHA+dirty"
+AB_DIR=${AB_DIR:-${TMPDIR:-/tmp}/ab_paired}
+PARENT_DIR="$AB_DIR/${PARENT_SHA:0:12}"
+
+run_perfbench() { # $1=dir $2=seed
+  (cd "$1" && python3 perfbench/run.py --workload "$WORKLOAD" --seed "$2" \
+    --seconds "$RUN_SECONDS" --trace 0) | tail -n 1 | grep '^{"correct"' || true
+}
+
+run_probe() { # $1=dir
+  (cd "$1" && SPARK_GRAFT_PROBE_NAMES="$NAMES" SPARK_GRAFT_SF_DIRS="$SFDIRS" \
+    sbt -batch "Test/runMain graft.ProbeMain" 2>/dev/null) | grep '^{"probe"' || true
+}
+
+case "$RUNNER" in
+  perfbench)
+    [ "$#" -ge 2 ] || usage
+    WORKLOAD=$1
+    shift
+    PAIRS=("$@")
+    KEY=$WORKLOAD
+    RUN_SECONDS=$(python3 -c 'import json,sys; print(json.load(open(sys.argv[1]))["run_seconds"])' BENCHMARK.json)
+    OUT=${OUT:-$AB_DIR/perfbench_$WORKLOAD.jsonl}
+    ;;
+  probe)
+    [ "$#" -ge 2 ] || usage
+    SFDIRS=$1
+    NAMES=$2
+    mapfile -t PAIRS < <(seq 1 "${3:-2}")
+    KEY="" # one key per query and dir, read from each row
+    OUT=${OUT:-$AB_DIR/probe_${NAMES//,/_}.jsonl}
+    ;;
+  *) usage ;;
+esac
+
+mkdir -p "$AB_DIR" "$(dirname "$OUT")"
+if [ ! -f "$PARENT_DIR/.archived" ]; then
+  rm -rf "$PARENT_DIR"
+  mkdir -p "$PARENT_DIR"
+  git archive "$PARENT_SHA" | tar -x -C "$PARENT_DIR"
+  touch "$PARENT_DIR/.archived"
+fi
+if [ "$RUNNER" = probe ]; then
+  mkdir -p "$PARENT_DIR/src/test/scala/graft"
+  cp src/test/scala/graft/ProbeMain.scala "$PARENT_DIR/src/test/scala/graft/ProbeMain.scala"
+fi
+
+run_side() { # $1=side $2=dir $3=sha $4=pair
+  local line n=0
+  echo "[ab] pair $4: $1 ($3)" >&2
+  while IFS= read -r line; do
+    printf '{"side":"%s","sha":"%s","pair":"%s","key":"%s","result":%s}\n' \
+      "$1" "$3" "$4" "$KEY" "$line" >> "$OUT"
+    n=$((n + 1))
+  done < <("run_$RUNNER" "$2" "$4")
+  [ "$n" -gt 0 ] || echo "[ab] WARNING: $1 pair $4 gave no result row" >&2
+}
+
+i=0
+for pair in "${PAIRS[@]}"; do
+  if [ $((i % 2)) -eq 0 ]; then
+    run_side parent "$PARENT_DIR" "$PARENT_SHA" "$pair"
+    run_side change "$ROOT" "$CHANGE_SHA" "$pair"
+  else
+    run_side change "$ROOT" "$CHANGE_SHA" "$pair"
+    run_side parent "$PARENT_DIR" "$PARENT_SHA" "$pair"
+  fi
+  i=$((i + 1))
 done
 
 echo "[ab] wrote $OUT" >&2
-python3 - "$OUT" <<'EOF'
-import json, sys, collections
-rows = [json.loads(l) for l in open(sys.argv[1]) if l.strip()]
-best = collections.defaultdict(dict)
-for r in rows:
-    if "sec" not in r: print("ERROR row:", r); continue
-    d = best[r["probe"]]
-    d[r["side"]] = min(d.get(r["side"], float("inf")), r["sec"])
-print(f"{'probe':32s} {'base_min':>9s} {'cur_min':>9s} {'ratio':>6s}")
-for p, d in sorted(best.items()):
-    b, c = d.get("base"), d.get("cur")
-    if b is None or c is None:
-        print(f"{p:32s} MISSING side: base={b} cur={c}")
+python3 - "$OUT" "$RUNNER" BENCHMARK.json <<'EOF'
+import json
+import statistics
+import sys
+from collections import defaultdict
+
+out, runner = sys.argv[1], sys.argv[2]
+if runner == "perfbench":
+    defs = json.load(open(sys.argv[3]))["end_to_end"]
+else:
+    defs = [{"name": "sec", "better": "lower", "bound": None}]
+
+# (key, pair) -> side -> [metrics]; repeated pair ids pair up in order.
+runs = defaultdict(lambda: {"parent": [], "change": []})
+failed = {"parent": 0, "change": 0}
+for line in open(out):
+    if not line.strip():
+        continue
+    row = json.loads(line)
+    res = row["result"]
+    if runner == "perfbench":
+        failed[row["side"]] += res["failed"]
+        metrics = {k: v["value"] for k, v in res["metrics"].items()}
+    elif "sec" in res:
+        metrics = {"sec": res["sec"]}
     else:
-        ratio = f"{c/b:6.2f}" if b > 0 else "   inf"
-        print(f"{p:32s} {b:9.2f} {c:9.2f} {ratio}")
+        print("ERROR row:", row)
+        failed[row["side"]] += 1
+        continue
+    key = row["key"] or f"{res['probe']} {res['dir']}"
+    runs[(key, row["pair"])][row["side"]].append(metrics)
+
+pairs = defaultdict(list)  # key -> [(parent, change)]
+for (key, _), sides in runs.items():
+    pairs[key].extend(zip(sides["parent"], sides["change"]))
+print(f"{out}: failed runs parent {failed['parent']}, change {failed['change']}")
+
+
+def quartiles(xs):
+    if len(xs) == 1:
+        return xs * 3
+    return statistics.quantiles(xs, n=4, method="inclusive")
+
+
+for key in sorted(pairs):
+    print(f"{key}: {len(pairs[key])} pairs")
+    for m in defs:
+        name, lower = m["name"], m["better"] == "lower"
+        vals = [(p[name], c[name]) for p, c in pairs[key] if name in p and name in c]
+        if not vals:
+            continue
+        pq = quartiles([p for p, _ in vals])
+        cq = quartiles([c for _, c in vals])
+        wins = sum((c < p) if lower else (c > p) for p, c in vals)
+        better = (cq[1] < pq[1]) if lower else (cq[1] > pq[1])
+        worse_by = ((cq[1] - pq[1]) if lower else (pq[1] - cq[1])) / pq[1] if pq[1] else 0.0
+        verdict = []
+        if (better and len(vals) >= 10 and wins * 10 >= 9 * len(vals)
+                and abs(cq[1] - pq[1]) > pq[2] - pq[0]):
+            verdict.append("GAIN")
+        if m["bound"] is not None and worse_by > m["bound"]:
+            verdict.append(f"WORSE by {worse_by:.0%} (bound {m['bound']:.0%})")
+        print(f"  {name:<20} parent {pq[1]:.4g} [{pq[0]:.4g}-{pq[2]:.4g}]"
+              f"  change {cq[1]:.4g} [{cq[0]:.4g}-{cq[2]:.4g}]"
+              f"  change better in {wins}/{len(vals)}  {' '.join(verdict)}")
 EOF
