@@ -2,16 +2,14 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Dumps `.explain("formatted")` for named catalogue queries — the
   * before/after plan evidence for optimization rounds. Run:
   *
   *   sbt "runMain graft.PlanDump /root/testdata/sf0.1 plans/r14 _before q1,q2"
   *
   * Writes plans/r14/<query><suffix>.txt per query (4th arg omitted =
-  * whole catalogue). Uses the same session shape as Bench so the plans
-  * are the ones the bench actually times.
+  * whole catalogue). Runs on [[Session.local]], the session Bench times,
+  * so the plans are the ones the bench actually runs.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -19,16 +17,7 @@ object PlanDump {
     val outDir = args.lift(1).getOrElse("plans/r14")
     val suffix = args.lift(2).getOrElse("_before")
     val only = args.lift(3).map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local()
     Files.createDirectories(Paths.get(outDir))
     QueryCatalog.all
       .filter(q => only.forall(_.contains(q.name)))

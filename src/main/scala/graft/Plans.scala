@@ -2,7 +2,11 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
 
 /** Plan auditor: dumps a per-query physical-plan summary (pushed
   * filters, read schemas, join strategies, exchange count) for the
@@ -122,16 +126,41 @@ object Plans {
         "asserted in UrlQueriesSpec"),
   )
 
+  /** Every node of an executed plan that actually runs: through adaptive
+    * wrappers and query stages (whose real plan hangs off a field, not
+    * `children`), into each distinct cached plan once (object identity:
+    * shared caches are shared executions) and into subquery plans.
+    * ReusedExchange references are leaves, so a reused exchange counts once.
+    */
+  def executedNodes(root: SparkPlan): Seq[SparkPlan] = {
+    val seenCaches = java.util.Collections.newSetFromMap(
+      new java.util.IdentityHashMap[SparkPlan, java.lang.Boolean]())
+    def walk(p: SparkPlan): Seq[SparkPlan] = {
+      val inner = p match {
+        case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+        case qs: QueryStageExec => walk(qs.plan)
+        case im: InMemoryTableScanExec if seenCaches.add(im.relation.cachedPlan) =>
+          walk(im.relation.cachedPlan)
+        case _ => Seq.empty
+      }
+      p +: (inner ++ p.subqueries.flatMap(walk) ++ p.children.flatMap(walk))
+    }
+    walk(root)
+  }
+
+  /** (exchanges, single-partition exchanges) that actually execute. */
+  def countExchanges(root: SparkPlan): (Int, Int) = {
+    val single = executedNodes(root).collect {
+      case s: ShuffleExchangeExec => s.outputPartitioning == SinglePartition
+      case _: BroadcastExchangeExec => false
+    }
+    (single.size, single.count(identity))
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val out = args.lift(1).getOrElse("PLANS.md")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local()
 
     val sb = new StringBuilder
     sb.append("# PLANS — physical-plan audit of the query catalogue\n\n")
@@ -146,44 +175,6 @@ object Plans {
       "(e.g. qs_scalar_subquery's AVG), a scale bug when whole-data " +
       "rows flow through them — the round-1 vocabulary window was the " +
       "latter and is gone.\n")
-
-    /** (exchanges, single-partition exchanges) that actually execute:
-      * walks the physical tree including subquery plans, descends into
-      * each distinct cached plan once (object identity — shared caches
-      * are shared executions), and skips ReusedExchange references.
-      */
-    def countExchanges(root: org.apache.spark.sql.execution.SparkPlan): (Int, Int) = {
-      val seenCaches =
-        java.util.Collections.newSetFromMap(
-          new java.util.IdentityHashMap[org.apache.spark.sql.execution.SparkPlan, java.lang.Boolean]())
-      def walk(p: org.apache.spark.sql.execution.SparkPlan): (Int, Int) = {
-        val self = p match {
-          case s: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec =>
-            val single = s.outputPartitioning ==
-              org.apache.spark.sql.catalyst.plans.physical.SinglePartition
-            (1, if (single) 1 else 0)
-          case _: org.apache.spark.sql.execution.exchange.BroadcastExchangeExec => (1, 0)
-          case _ => (0, 0)
-        }
-        // wrappers whose real plan hangs off a field, not `children`
-        val inner = p match {
-          case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-            Seq(walk(a.executedPlan))
-          case qs: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-            Seq(walk(qs.plan))
-          case im: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-              if seenCaches.add(im.relation.cachedPlan) =>
-            Seq(walk(im.relation.cachedPlan))
-          case _ => Seq.empty
-        }
-        val sub = p.subqueries.map(walk)
-        val kids = p.children.map(walk)
-        (inner ++ sub ++ kids).foldLeft(self) {
-          case ((e1, s1), (e2, s2)) => (e1 + e2, s1 + s2)
-        }
-      }
-      walk(root)
-    }
 
     QueryCatalog.all.foreach { q =>
       try {

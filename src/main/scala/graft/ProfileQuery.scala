@@ -3,10 +3,9 @@ package graft
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 /** Per-query execution profiler for optimization work: runs named
-  * catalogue queries under the Bench session shape and reports, per
+  * catalogue queries on [[Session.local]] (Bench's session) and reports, per
   * rep, where the wall time sits — number of Spark jobs/stages/tasks,
   * summed task run/CPU/GC time, shuffle bytes — so "many tiny stages"
   * (driver/scheduling bound) separates from "heavy task work"
@@ -19,19 +18,7 @@ object ProfileQuery {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val reps = args.lift(1).map(_.toInt).getOrElse(3)
     val only = args.lift(2).map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // diagnostic knob: decouple the shuffle width from the core count
-    // for §2 experiments (Bench keeps partitions = cpus, unchanged)
-    val parts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local()
 
     val jobs = new AtomicInteger
     val stages = new AtomicInteger

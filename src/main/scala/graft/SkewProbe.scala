@@ -3,7 +3,6 @@ package graft
 import scala.collection.mutable
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Task-balance probe for the SURVEY H3 skew story: runs the spatial
   * catalogue queries on a (possibly skewed) corpus dir and reports
@@ -33,19 +32,12 @@ object SkewProbe {
     val sfDirs = sys.env.get("SPARK_GRAFT_SF_DIRS")
       .map(_.split(",").map(_.trim).toSeq)
       .getOrElse(Seq(sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")))
-    val cpus = sys.env.getOrElse(
-      "SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors().toString)
     val noBroadcast = sys.env.get("SPARK_GRAFT_NO_BROADCAST").contains("1")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = Session.local()
+    // broadcast and skew thresholds are runtime SQL confs
     if (noBroadcast) {
-      builder.config("spark.sql.autoBroadcastJoinThreshold", "-1")
-        .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
     }
     // AQE's skew-join split is the production answer to geometric
     // key concentration, but its default trigger (partition > 256 MB
@@ -53,15 +45,12 @@ object SkewProbe {
     // whole hot partition is a few MB. SPARK_GRAFT_SKEWTUNE=1 scales
     // the thresholds to probe size so the probe demonstrates the SAME
     // mechanism a 100 TB run gets for free at the default thresholds.
-    if (sys.env.get("SPARK_GRAFT_SKEWTUNE").contains("1")) {
-      builder
-        .config("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2.0")
-        .config("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "1m")
-        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "512k")
-        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "256k")
-    }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    if (sys.env.get("SPARK_GRAFT_SKEWTUNE").contains("1")) Seq(
+      "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2.0",
+      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "1m",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "512k",
+      "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "256k",
+    ).foreach { case (k, v) => spark.conf.set(k, v) }
 
     // per-stage task runtimes, collected across the query's jobs
     val stageTasks = mutable.Map[Int, mutable.ArrayBuffer[Long]]()

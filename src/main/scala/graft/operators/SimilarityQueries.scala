@@ -719,66 +719,8 @@ object SimilarityQueries {
     trainedCentroids(s, d, iters = 2, k = k); ()
   }
 
-  // ----- recall-probe surface (round-7): parameterized searches -----
-  // Same kernels and geometry as the catalogue queries, with the
-  // query id / nprobe / codebook size as arguments, returning top-N
-  // vec_ids — the hooks `graft.AnnRecallProbe` uses to measure
-  // recall@N against brute force on the grown corpora. Not catalogue
-  // entries themselves (the catalogue pins one deterministic point
-  // per operator; recall curves are a measurement, not a result set).
-
-  /** Brute-force cosine top-N ids for one query vector. */
-  def bruteTopKIds(s: org.apache.spark.sql.SparkSession, d: String,
-      queryId: Long, topN: Int = 10): Seq[Long] = {
-    import s.implicits._
-    import graft.functions.exprs.cosine_e9
-    val emb = graft.util.Cols.fanout(Tables.embeddings(s, d))
-    val q = emb.filter($"vec_id" === queryId).select($"embedding".as("qe"))
-    emb.filter($"vec_id" =!= queryId)
-      .crossJoin(broadcast(q))
-      .select($"vec_id", cosine_e9($"embedding", $"qe").as("c"))
-      .orderBy($"c".desc, $"vec_id").limit(topN)
-      .select($"vec_id").as[Long].collect().toSeq
-  }
-
-  /** LSH top-N ids for one query vector: candidates from the query's
-    * primary bucket, plus (when `multiProbe`) its lowest-confidence-
-    * bit-flip companion bucket — the measurement hook behind the
-    * round-8 multi-probe change, so the recall/candidate-cost trade
-    * of the second probe is a recorded number, not a claim. Returns
-    * (ids, candidate count).
-    */
-  def lshTopKIds(s: org.apache.spark.sql.SparkSession, d: String,
-      queryId: Long, multiProbe: Boolean, topN: Int = 10): (Seq[Long], Long) = {
-    import s.implicits._
-    import graft.functions.exprs.{cosine_e9, lsh_bucket, lsh_bucket_flip}
-    val emb = graft.util.Cols.fanout(Tables.embeddings(s, d))
-      .select($"vec_id", lsh_bucket($"embedding").as("bucket"), $"embedding")
-    val probeBuckets = {
-      val q0 = graft.util.Cols.fanout(Tables.embeddings(s, d))
-        .filter($"vec_id" === queryId)
-      val withFlip = q0.select(
-        explode(
-          if (multiProbe) array(lsh_bucket($"embedding"), lsh_bucket_flip($"embedding"))
-          else array(lsh_bucket($"embedding"))).as("pb"),
-        $"embedding".as("qe"))
-      withFlip
-    }
-    val cands = emb
-      .join(broadcast(probeBuckets), $"bucket" === $"pb")
-      .filter($"vec_id" =!= queryId)
-    val nCands = cands.count()
-    val ids = cands
-      .select($"vec_id", cosine_e9($"embedding", $"qe").as("c"))
-      .orderBy($"c".desc, $"vec_id").limit(topN)
-      .select($"vec_id").as[Long].collect().toSeq
-    (ids, nCands)
-  }
-
-  /** IVF-probe top-N ids at (kCents, nprobe) for one query vector,
-    * over a cell assignment the caller computed once via
-    * [[ivfAssigned]] (train-once / assign-once / probe-many — the
-    * production shape).
+  /** The IVF cell assignment of every embedding at `kCents` trained
+    * centroids, checkpointed: assigned once, probed many times.
     */
   def ivfAssigned(s: org.apache.spark.sql.SparkSession, d: String,
       kCents: Int): org.apache.spark.sql.DataFrame = {
@@ -786,75 +728,6 @@ object SimilarityQueries {
     rowLocalAssign(graft.util.Cols.fanout(Tables.embeddings(s, d)),
         trainedCentroids(s, d, iters = 2, k = kCents))
       .localCheckpoint()
-  }
-  def ivfTopKIds(s: org.apache.spark.sql.SparkSession, d: String,
-      assigned: org.apache.spark.sql.DataFrame, kCents: Int, nprobe: Int,
-      queryId: Long, topN: Int = 10): (Seq[Long], Long) = {
-    import s.implicits._
-    import graft.functions.exprs.cosine_e9
-    val centsDf = trainedCentroids(s, d, iters = 2, k = kCents).toDF("cent_id", "ce")
-    val query = graft.util.Cols.fanout(Tables.embeddings(s, d))
-      .filter($"vec_id" === queryId).select($"embedding".as("qe"))
-    val probeCells = query.crossJoin(broadcast(centsDf))
-      .select($"cent_id", cosine_e9($"qe", $"ce").as("qcos"))
-      .withColumn("rn", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy(lit(1)).orderBy($"qcos".desc, $"cent_id")))
-      .filter($"rn" <= nprobe)
-      .select($"cent_id".as("probe_cell"))
-    val cands = assigned
-      .join(broadcast(probeCells), $"cent_id" === $"probe_cell")
-      .filter($"vec_id" =!= queryId)
-    val nCands = cands.count()
-    val ids = cands
-      .crossJoin(broadcast(query))
-      .select($"vec_id", cosine_e9($"embedding", $"qe").as("c"))
-      .orderBy($"c".desc, $"vec_id").limit(topN)
-      .select($"vec_id").as[Long].collect().toSeq
-    (ids, nCands)
-  }
-
-  /** PQ-ADC top-N ids at `codes` codebook entries for one query
-    * vector — the catalogue search with the query id as a parameter
-    * (shortlist 3×N, exact re-rank to N).
-    */
-  def pqTopKIds(s: org.apache.spark.sql.SparkSession, d: String,
-      codes: Int, queryId: Long, topN: Int = 10,
-      shortMult: Int = 3): Seq[Long] = {
-    import s.implicits._
-    import graft.functions.exprs.sq_dist_e9
-    val M = 4; val SubDim = 16
-    val emb = Tables.embeddings(s, d)
-    val cbRows = emb
-      .select($"vec_id", $"embedding",
-        md5($"vec_id".cast("string").cast("binary")).as("h"))
-      .orderBy($"h", $"vec_id").limit(codes)
-      .select($"embedding").collect()
-      .map(_.getSeq[Float](0).toArray)
-    require(cbRows.length == codes, s"codebook seed needs $codes vectors")
-    val codebook: Array[Array[Array[Float]]] =
-      Array.tabulate(M, codes)((m, j) =>
-        cbRows(j).slice(m * SubDim, (m + 1) * SubDim))
-    val qRows = emb.filter($"vec_id" === queryId).select($"embedding").collect()
-    require(qRows.length == 1, s"query vector $queryId missing")
-    val qe = qRows(0).getSeq[Float](0).toArray
-    val lut: Array[Array[Long]] = Array.tabulate(M, codes)((m, j) =>
-      graft.functions.VectorKernels.sqDistE9Arrays(qe, codebook(m)(j), m * SubDim))
-    def codeCol(m: Int) = array_min(array((0 until codes).map(j =>
-      struct(
-        sq_dist_e9($"embedding", typedLit(codebook(m)(j).toSeq), m * SubDim)
-          .as("d"),
-        lit(j).as("j"))): _*)).getField("j")
-    val adc = (0 until M).map(m =>
-      element_at(typedLit(lut(m).toSeq), codeCol(m) + 1)).reduce(_ + _)
-    graft.util.Cols.fanout(emb)
-      .filter($"vec_id" =!= queryId)
-      .select($"vec_id", $"embedding", adc.as("adc_e9"))
-      .orderBy($"adc_e9", $"vec_id").limit(shortMult * topN)
-      .select($"vec_id",
-        sq_dist_e9($"embedding", typedLit(qe.toSeq), 0).as("dist_e9"))
-      .orderBy($"dist_e9", $"vec_id").limit(topN)
-      .select($"vec_id").as[Long].collect().toSeq
   }
 
   /** DuckDB replay of [[lloydCentroids]] (2 iterations, k centroids)

@@ -2101,7 +2101,7 @@ object TextQueries {
       graft.functions.exprs.register(s) // md5_prefix_long in lambdas
       import org.apache.spark.sql.expressions.Window
       // Round-11 rewrite (the ta_trigram_lm_score device, measured
-      // there with ScratchProbe): per-word md5 on EXPLODED rows costs
+      // there stage by stage): per-word md5 on EXPLODED rows costs
       // ~µs/row through the generate → project path; the same hashes
       // inside `transform`/`aggregate` lambdas are ~an order cheaper.
       // Training explodes only finished bucket ids; scoring never
@@ -2250,7 +2250,7 @@ object TextQueries {
         .select($"doc_id", $"source",
           regexp_replace($"text", "[^ -~]", "").as("t"))
         .filter(length($"t") >= 3)
-      // Round-11 rewrite, MEASURED at grow_sf1 (ScratchProbe
+      // Round-11 rewrite, MEASURED at grow_sf1 (stage-by-stage timing
       // decomposition): hashing on EXPLODED trigram rows cost ~1.8 µs/
       // row (28.9 s for 15 M single-md5 rows — the generate → project
       // row-at-a-time path), while the SAME md5s evaluated INSIDE a

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins gr_closeness_centrality on an empty landmark set: with no
@@ -14,12 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class ClosenessEmptyLandmarkSpec extends AnyFunSuite {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = TestSession.spark
 
   private def fixture(nations: Seq[(Long, Long)]): String = {
     import spark.implicits._

@@ -4,7 +4,6 @@ import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.ObjectNode
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.Base62
@@ -19,12 +18,7 @@ import graft.sources.NdjsonSink
   */
 class InspectorPipelineSpec extends AnyFunSuite {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = TestSession.spark
 
   private val mapper = new ObjectMapper()
 

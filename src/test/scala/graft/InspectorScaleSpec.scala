@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pipeline behavior on a generated larger input (5k buildings, 1k
@@ -11,12 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class InspectorScaleSpec extends AnyFunSuite {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[8]")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = TestSession.spark
 
   private def writeFixtures(dir: String): Engine.Dirs = {
     val rnd = new scala.util.Random(42)

@@ -17,10 +17,11 @@ import org.apache.spark.sql.SparkSession
   * unknown name aborts loudly (a silent filter once made a typo'd
   * probe look successful while measuring nothing).
   *
-  * NOTE for ab_paired.sh: this file depends only on [[QueryCatalog]]
-  * and graft.functions.exprs, both stable since round 3, so the
-  * script can copy it verbatim into a parent tree that predates
-  * it. [[Round10Probe]] delegates here — keep this file standalone.
+  * NOTE for ab_paired.sh: this file depends only on SparkSession,
+  * [[QueryCatalog]] and graft.functions.exprs, all stable since round
+  * 3, so the script can copy it verbatim into a parent tree that
+  * predates it. Keep it standalone: it builds its own session rather
+  * than take [[Session.local]], which older parents lack.
   */
 object ProbeMain {
   /** Full JSON-string escape (backslash, quote, ALL control chars):
@@ -38,11 +39,25 @@ object ProbeMain {
     case c => c.toString
   }
 
-  /** Shared probe loop: builds the session, runs each (dir, name)
-    * once, prints one JSONL row each. Used by this main and
-    * [[Round10Probe]] so the harness exists exactly once.
+  /** Resolve a comma-separated name list against the catalogue,
+    * aborting loudly on unknown names.
     */
-  def run(names: Seq[String], dirs: Seq[String]): Unit = {
+  def resolveNames(raw: String): Seq[String] = {
+    val req = raw.split(",").map(_.trim).filter(_.nonEmpty).toSeq
+    val known = QueryCatalog.all.map(_.name).toSet
+    val unknown = req.filterNot(known)
+    require(unknown.isEmpty,
+      s"SPARK_GRAFT_PROBE_NAMES entries not in QueryCatalog: " +
+        unknown.mkString(", "))
+    req
+  }
+
+  def main(args: Array[String]): Unit = {
+    val dirs = sys.env.get("SPARK_GRAFT_SF_DIRS")
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
+      .getOrElse(Seq("/root/testdata/sf0.1"))
+    val names = resolveNames(sys.env.getOrElse("SPARK_GRAFT_PROBE_NAMES",
+      sys.error("SPARK_GRAFT_PROBE_NAMES is required for ProbeMain")))
     val cpus = sys.env.getOrElse(
       "SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors().toString)
     val spark = SparkSession.builder()
@@ -69,27 +84,5 @@ object ProbeMain {
       System.out.flush()
     }
     spark.stop()
-  }
-
-  /** Resolve a comma-separated name list against the catalogue,
-    * aborting loudly on unknown names.
-    */
-  def resolveNames(raw: String): Seq[String] = {
-    val req = raw.split(",").map(_.trim).filter(_.nonEmpty).toSeq
-    val known = QueryCatalog.all.map(_.name).toSet
-    val unknown = req.filterNot(known)
-    require(unknown.isEmpty,
-      s"SPARK_GRAFT_PROBE_NAMES entries not in QueryCatalog: " +
-        unknown.mkString(", "))
-    req
-  }
-
-  def main(args: Array[String]): Unit = {
-    val dirs = sys.env.get("SPARK_GRAFT_SF_DIRS")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-      .getOrElse(Seq("/root/testdata/sf0.1"))
-    val names = resolveNames(sys.env.getOrElse("SPARK_GRAFT_PROBE_NAMES",
-      sys.error("SPARK_GRAFT_PROBE_NAMES is required for ProbeMain")))
-    run(names, dirs)
   }
 }

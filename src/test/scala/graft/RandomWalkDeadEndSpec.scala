@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins gr_random_walks' dead-end semantics after the round-15
@@ -16,12 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class RandomWalkDeadEndSpec extends AnyFunSuite {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = TestSession.spark
 
   test("dead-end walk emits only step 0; live walks match the replay") {
     import spark.implicits._

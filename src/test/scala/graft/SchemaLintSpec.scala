@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.{ArrayType, DataType, DecimalType, MapType, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -22,12 +21,7 @@ class SchemaLintSpec extends AnyFunSuite {
     .orElse(sys.env.get("GRAFT_TESTDATA_SF"))
     .getOrElse("/root/testdata/sf0.001")
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = TestSession.spark
 
   private def hasDecimal(dt: DataType): Boolean = dt match {
     case _: DecimalType => true

@@ -128,11 +128,7 @@ class HttpCodecSpec extends AnyFunSuite {
   }
 
   test("codegen expressions evaluate the kernels inside a plan") {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.TestSession.spark
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, encode, decode}
     import graft.functions.exprs._

@@ -2,8 +2,6 @@ package graft.operators
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -15,37 +13,19 @@ import org.scalatest.funsuite.AnyFunSuite
   * comes from bucketing, not from convenient sizes), and both produce
   * identical rows.
   *
-  * Broadcast is disabled with conf.set + finally-restore, NOT a
-  * builder conf: getOrCreate applies builder SQL confs to the shared
-  * session of the whole forked test JVM, which would leak `-1` into
-  * every other suite's plans (e.g. PlanBudgetSpec's hash-join pins).
+  * Broadcast is disabled with conf.set + finally-restore: every suite
+  * runs on the one [[graft.TestSession]], so a conf left behind would
+  * leak `-1` into every other suite's plans (e.g. PlanBudgetSpec's
+  * hash-join pins).
   */
 class BucketedJoinSpec extends AnyFunSuite {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = graft.TestSession.spark
 
-  /** Shuffle exchanges in the executed plan, walked through AQE
-    * wrappers and finalized query stages.
-    */
-  private def shuffles(df: org.apache.spark.sql.DataFrame): Int = {
-    def walk(p: org.apache.spark.sql.execution.SparkPlan): Int = {
-      val here = p match {
-        case _: ShuffleExchangeExec => 1
-        case _ => 0
-      }
-      val inner = p match {
-        case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
-        case qs: QueryStageExec => walk(qs.plan)
-        case _ => 0
-      }
-      here + inner + p.children.map(walk).sum
-    }
-    walk(df.queryExecution.executedPlan)
-  }
+  /** Shuffle exchanges in the executed plan. */
+  private def shuffles(df: org.apache.spark.sql.DataFrame): Int =
+    graft.Plans.executedNodes(df.queryExecution.executedPlan)
+      .count(_.isInstanceOf[ShuffleExchangeExec])
 
   test("bucketed tables join without a shuffle exchange; unbucketed control shuffles") {
     import spark.implicits._

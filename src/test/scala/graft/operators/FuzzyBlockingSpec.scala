@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -16,12 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class FuzzyBlockingSpec extends AnyFunSuite {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = graft.TestSession.spark
 
   test("PassJoin blocking equals naive all-pairs on adversarial names") {
     import spark.implicits._

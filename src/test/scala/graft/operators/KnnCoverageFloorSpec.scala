@@ -21,16 +21,7 @@ class KnnCoverageFloorSpec extends AnyFunSuite {
 
   private val FloorPpm = 990000L // ≥99% of nodes must have ≥1 out-edge
 
-  private lazy val spark = {
-    val s = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.functions.exprs.register(s)
-    s
-  }
+  private lazy val spark = graft.TestSession.spark
 
   private def coverage(dir: String): (Long, Long, Long) = {
     val row = graft.QueryCatalog.all

@@ -130,11 +130,7 @@ class PHashSpec extends AnyFunSuite {
   // assert it over the same corpora the driver gates (sf0.001 specs,
   // sf0.01 correctness) instead of trusting it by accident.
   test("no documents-corpus payload decodes as an image (oracle-parity invariant)") {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]").appName("phash-invariant")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", false)
-      .getOrCreate()
+    val spark = graft.TestSession.spark
     import spark.implicits._
     for (sf <- Seq("sf0.001", "sf0.01")) {
       val dir = new java.io.File(s"/root/testdata/$sf/documents.parquet")

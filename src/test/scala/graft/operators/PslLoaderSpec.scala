@@ -13,11 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class PslLoaderSpec extends AnyFunSuite {
 
-  private lazy val spark = org.apache.spark.sql.SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = graft.TestSession.spark
 
   // Representative fragment in the PUBLISHED format (the ck/jp/uk/us
   // rules are verbatim list content; *.foo.jp/!bar.foo.jp is the

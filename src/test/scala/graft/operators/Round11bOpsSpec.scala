@@ -12,16 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class Round11bOpsSpec extends AnyFunSuite {
 
-  private lazy val spark = {
-    val s = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.functions.exprs.register(s)
-    s
-  }
+  private lazy val spark = graft.TestSession.spark
 
   test("ta_ccnet_bucket degrades to the uniform default on an empty reference stream") {
     import spark.implicits._

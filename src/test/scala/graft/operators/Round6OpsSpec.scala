@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Specs for the round-6 catalogue additions: each checked against an
@@ -12,12 +11,7 @@ class Round6OpsSpec extends AnyFunSuite {
 
   private val sf = "/root/testdata/sf0.001"
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = graft.TestSession.spark
 
   private def q(name: String) =
     graft.QueryCatalog.all.find(_.name == name).get

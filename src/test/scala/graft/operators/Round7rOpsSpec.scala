@@ -11,16 +11,7 @@ class Round7rOpsSpec extends AnyFunSuite {
 
   private val sf = "/root/testdata/sf0.01"
 
-  private lazy val spark = {
-    val s = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.functions.exprs.register(s)
-    s
-  }
+  private lazy val spark = graft.TestSession.spark
 
   private def q(name: String) =
     graft.QueryCatalog.all.find(_.name == name).get

@@ -17,12 +17,7 @@ import graft.operators.GeoQueries.SpatialGrid
   */
 class SpatialGridSpec extends AnyFunSuite {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = graft.TestSession.spark
 
   /** Fixture dir with supplier/customer parquet at 4x the clamp
     * cardinality, so moduli = floor(base * 2): the grown-grid path.

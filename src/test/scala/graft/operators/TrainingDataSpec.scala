@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Specs for the training-data operators that have no SQL oracle:
@@ -11,12 +10,7 @@ class TrainingDataSpec extends AnyFunSuite {
 
   private val sf = "/root/testdata/sf0.001"
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = graft.TestSession.spark
 
   test("simhash near-dup result is invariant under the band-count knob") {
     // Pigeonhole holds at every B >= 4 dividing 60, so the FILTERED

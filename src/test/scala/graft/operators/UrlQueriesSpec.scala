@@ -13,15 +13,7 @@ class UrlQueriesSpec extends AnyFunSuite {
 
   private val sf = "/root/testdata/sf0.001"
 
-  private lazy val spark = {
-    val s = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s
-  }
+  private lazy val spark = graft.TestSession.spark
 
   private def q(name: String) =
     graft.QueryCatalog.all.find(_.name == name).get

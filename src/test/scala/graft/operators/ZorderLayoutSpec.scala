@@ -2,7 +2,6 @@ package graft.operators
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -21,11 +20,7 @@ import graft.functions.exprs.morton_interleave
   */
 class ZorderLayoutSpec extends AnyFunSuite {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = graft.TestSession.spark
 
   test("z-ordered range-partitioned write produces disjoint per-file z ranges") {
     import spark.implicits._

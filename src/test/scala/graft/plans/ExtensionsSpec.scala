@@ -15,15 +15,16 @@ class ExtensionsSpec extends AnyFunSuite {
     // kill the context shared with the other suites. withExtensions is
     // the programmatic twin of spark.sql.extensions=graft.plans
     // .GraftExtensions (the string form is a static conf read at
-    // SparkContext creation, which a shared test JVM cannot redo).
+    // SparkContext creation, which a shared test JVM cannot redo). The
+    // new session joins the shared test context, and the shared session
+    // is restored as default and active afterwards.
+    graft.TestSession.spark
+    val (priorDefault, priorActive) =
+      (SparkSession.getDefaultSession, SparkSession.getActiveSession)
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
     val spark = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-extensions-spec")
       .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     try {
       val row = spark.sql(
@@ -98,15 +99,13 @@ class ExtensionsSpec extends AnyFunSuite {
     } finally {
       SparkSession.clearActiveSession()
       SparkSession.clearDefaultSession()
+      priorDefault.foreach(SparkSession.setDefaultSession)
+      priorActive.foreach(SparkSession.setActiveSession)
     }
   }
 
   test("a second register call leaves the session's function registry unchanged") {
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-      .newSession()
+    val spark = graft.TestSession.spark.newSession()
     val reg = spark.sessionState.functionRegistry
     val ids = graft.functions.exprs.sqlFunctions.map { case (name, _, _) => FunctionIdentifier(name) }
     // skipping held names never leaves a Spark built-in in place of a

@@ -1,13 +1,10 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.QueryCatalog
+import graft.{Plans, QueryCatalog}
 
 /** Plan-shape regression guard: pins the scale-critical properties the
   * round-2/3 tuning bought — blocking keys on the pair joins, bounded
@@ -31,34 +28,10 @@ class PlanBudgetSpec extends AnyFunSuite {
     super.withFixture(test)
   }
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  /** Executing-plan walk, mirroring graft.Plans: through adaptive
-    * wrappers, into each distinct cached plan once.
-    */
-  private def collectExec(root: SparkPlan): Seq[SparkPlan] = {
-    val seen = java.util.Collections.newSetFromMap(
-      new java.util.IdentityHashMap[SparkPlan, java.lang.Boolean]())
-    def walk(p: SparkPlan): Seq[SparkPlan] = {
-      val inner = p match {
-        case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
-        case qs: QueryStageExec => walk(qs.plan)
-        case im: InMemoryTableScanExec if seen.add(im.relation.cachedPlan) =>
-          walk(im.relation.cachedPlan)
-        case _ => Seq.empty
-      }
-      p +: (inner ++ p.subqueries.flatMap(walk) ++ p.children.flatMap(walk))
-    }
-    walk(root)
-  }
+  private lazy val spark = graft.TestSession.spark
 
   private def planOf(name: String): Seq[SparkPlan] =
-    collectExec(QueryCatalog.all.find(_.name == name).get
+    Plans.executedNodes(QueryCatalog.all.find(_.name == name).get
       .fn(spark, sf).queryExecution.executedPlan)
 
   private def exchanges(nodes: Seq[SparkPlan]): Int =
@@ -789,7 +762,7 @@ class PlanBudgetSpec extends AnyFunSuite {
 
   test("round-9 additions keep their scale shapes") {
     // Exchange ceilings ~2x the measured sf0.001 counts
-    // (Round9PlanProbe). gr_closeness_centrality is absent: its final
+    // (Plans.countExchanges). gr_closeness_centrality is absent: its final
     // plan is the driver-assembled 16-row LocalTableScan (the bitmask
     // BFS collects one bounded count row per round), pinned by the
     // round-8 budget entry and the Round9OpsSpec naive-BFS replay.

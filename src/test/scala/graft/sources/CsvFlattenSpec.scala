@@ -10,15 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class CsvFlattenSpec extends AnyFunSuite {
 
-  private lazy val spark = {
-    val s = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.functions.exprs.register(s)
-    s
-  }
+  private lazy val spark = graft.TestSession.spark
 
   test("path parse and column naming") {
     assert(CsvFlattenSink.columnName("$.data.uuid") == "data_uuid")

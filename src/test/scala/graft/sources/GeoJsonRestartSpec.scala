@@ -1,6 +1,5 @@
 package graft.sources
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Checkpoint-restart contract of the DSv2 GeoJSON micro-batch
@@ -13,11 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class GeoJsonRestartSpec extends AnyFunSuite {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = graft.TestSession.spark
 
   private def collection(ids: Seq[Int]): String = {
     val fs = ids.map(i =>

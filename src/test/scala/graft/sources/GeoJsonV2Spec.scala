@@ -12,11 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class GeoJsonV2Spec extends AnyFunSuite {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = graft.TestSession.spark
 
   /** The replaced reader: one multiLine task, posexplode of `features`. */
   private def multiLine(path: String, schema: StructType): DataFrame =

@@ -5,7 +5,6 @@ import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicInteger
 
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Engine-side paginated HTTP DSv2 source (SURVEY S1 scale path):
@@ -49,11 +48,7 @@ class HttpPagedSourceSpec extends AnyFunSuite {
     finally server.stop(0)
   }
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]").appName("http-paged-spec")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.ui.enabled", false)
-    .getOrCreate()
+  private lazy val spark = graft.TestSession.spark
 
   test("parity with the driver-side pagesToNdjson landing output") {
     withServer { (base, _) =>

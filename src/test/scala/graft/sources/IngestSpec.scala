@@ -2,7 +2,6 @@ package graft.sources
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** S1 pagination loop (injected fetcher — zero-egress environment) and
@@ -11,11 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class IngestSpec extends AnyFunSuite {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = graft.TestSession.spark
 
   test("paginated ingest loops until an empty page, rate-limited, to NDJSON") {
     val out = Files.createTempFile("ingest", ".ndjson").toString

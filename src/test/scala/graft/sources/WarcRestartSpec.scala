@@ -27,11 +27,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class WarcRestartSpec extends AnyFunSuite {
 
-  private lazy val spark = org.apache.spark.sql.SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = graft.TestSession.spark
 
   private def record(uri: String, payload: Array[Byte]): Array[Byte] = {
     val head = Seq(

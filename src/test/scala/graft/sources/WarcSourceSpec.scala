@@ -15,16 +15,7 @@ import graft.sources.v2.WarcDataSource
   */
 class WarcSourceSpec extends AnyFunSuite {
 
-  private lazy val spark = {
-    val s = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.functions.exprs.register(s)
-    s
-  }
+  private lazy val spark = graft.TestSession.spark
 
   private def record(
       uri: String, payload: Array[Byte],

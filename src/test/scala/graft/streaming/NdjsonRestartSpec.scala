@@ -2,7 +2,6 @@ package graft.streaming
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -19,12 +18,7 @@ import graft.sources.NdjsonSink
   */
 class NdjsonRestartSpec extends AnyFunSuite {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = graft.TestSession.spark
 
   /** A mixed record batch (objects with/without geometry, relations,
     * logs) with ids in [lo, hi) — the full rendering surface of

@@ -2,7 +2,6 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -16,12 +15,7 @@ import graft.streaming.StreamingOps.{Event, Session}
   */
 class StreamBatchParitySpec extends AnyFunSuite {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = graft.TestSession.spark
 
   test("streaming sessionization matches the batch gap-and-island result") {
     import spark.implicits._

@@ -2,7 +2,6 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,12 +9,7 @@ import graft.streaming.StreamingOps.{Event, Session}
 
 class StreamingSpec extends AnyFunSuite {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = graft.TestSession.spark
 
   private def ts(minute: Int) = new Timestamp(1700000000000L + minute * 60000L)
 

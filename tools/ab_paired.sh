@@ -18,9 +18,8 @@
 # from its own sources on its first run; the metrics are BENCHMARK.json's
 # end-to-end ones. probe: one pair per rep; each side runs
 # graft.ProbeMain (one JVM, every name on every dir once); the metric is
-# each query's `sec`. ProbeMain.scala depends only on QueryCatalog and is
-# copied into the parent's tree, so a parent that predates it exposes
-# the same probe surface.
+# each query's `sec`. ProbeMain.scala is copied into the parent's tree,
+# so a parent that predates it exposes the same probe surface.
 #
 # The parent is exported with `git archive` into $AB_DIR/<sha> (default
 # AB_DIR: ${TMPDIR:-/tmp}/ab_paired). Do not `cp -a` a built checkout
@@ -104,6 +103,11 @@ if [ ! -f "$PARENT_DIR/.archived" ]; then
 fi
 if [ "$RUNNER" = probe ]; then
   mkdir -p "$PARENT_DIR/src/test/scala/graft"
+  # ProbeMain must compile against any parent: it may use only
+  # SparkSession, QueryCatalog and graft.functions.exprs, never
+  # graft.Session. Parent probe mains built on its former shared `run`
+  # (Round10Probe) would not compile against it, so they are dropped.
+  { grep -rl 'ProbeMain\.run' "$PARENT_DIR/src/test" || true; } | xargs -r rm -f
   cp src/test/scala/graft/ProbeMain.scala "$PARENT_DIR/src/test/scala/graft/ProbeMain.scala"
 fi
 

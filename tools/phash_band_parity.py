@@ -6,7 +6,7 @@ The three pHash oracles derive their band geometry from count(*)
 quadratic and infeasible in DuckDB beyond ~100k docs, so THIS probe
 proves the only surface that changes with corpus size — the band
 VALUES at the adaptive bits — by equality-joining the Spark-computed
-bands (dumped by graft.Round9Probe or any (doc_id, b0..b3) parquet)
+bands (any (doc_id, b0..b3) parquet written from the Spark side)
 against the oracle CTE's bands over the same corpus, row by row.
 
 Usage: python3 tools/phash_band_parity.py <spark_bands_parquet_dir> <docs_parquet>
