@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.operators.InspectorPipeline
@@ -29,11 +31,15 @@ object Engine {
     * polygon side is reused by the toponym phase — the reference's
     * build-then-probe barrier falls out of the join's build/probe
     * contract (SURVEY §2.4 J4).
+    *
+    * The two dimension files are read once each, into driver-local
+    * frames: both phases build their sheet lookup from them without a
+    * job of their own.
     */
   def transform(spark: SparkSession, dirs: Dirs): DataFrame = {
     graft.functions.exprs.register(spark)
-    val sheets = GeoJson.sheets(spark, dirs.sheets)
-    val layers = GeoJson.layerBoroughs(spark, dirs.layerBoroughs)
+    val sheets = onDriver(GeoJson.sheets(spark, dirs.sheets))
+    val layers = onDriver(GeoJson.layerBoroughs(spark, dirs.layerBoroughs))
     val cons = InspectorPipeline.consolidated(
       spark, GeoJson.consolidated(spark, dirs.consolidated), sheets, layers)
     val topo = InspectorPipeline.toponyms(
@@ -41,6 +47,12 @@ object Engine {
       cons.indexedBuildings)
     cons.records.unionByName(topo)
   }
+
+  /** `df` collected into a `LocalRelation`: later collects of it, and of
+    * projections of it, run no job.
+    */
+  private def onDriver(df: DataFrame): DataFrame =
+    df.sparkSession.createDataFrame(df.collect().toSeq.asJava, df.schema)
 
   def transformToNdjson(spark: SparkSession, dirs: Dirs, out: String): Unit =
     NdjsonSink.write(transform(spark, dirs), out)

@@ -19,19 +19,22 @@ import graft.sources.GeoJson
   * tests canonicalize and compare.
   *
   * Scale design: each phase is one dedup shuffle of its fact stream
-  * (first-seen by building id / toponym id), localCheckpoint-ed with
-  * everything the later steps parse or look up per row; one narrow
-  * pre-flight check over that checkpoint; and one generator that
-  * emits all of a row's records through a single `inline`. The two
+  * (first-seen by building id / toponym id), hashed on that id into
+  * `defaultParallelism` partitions so AQE cannot coalesce it to one,
+  * and localCheckpoint-ed with everything the later steps parse or
+  * look up per row; the pre-flight check is an observed metric of that
+  * checkpoint job; and one generator emits all of a row's records
+  * through a single `inline`, as wide as the checkpoint. The two
   * dimension tables (sheets, layer-boroughs) are small: each phase
   * collects them on the driver into one `sheet id → (map_id, layer_id,
   * year, borough)` lookup ([[sheetDims]]), so no dimension join
-  * or broadcast runs per consumer. The spatial join runs once: a
-  * left-outer equi-join on layerId with a bbox prefilter and the exact
-  * `st_contains` as residual, whose rows carry all three toponym
-  * outcomes — the layerId key gives the same pruning the reference's
-  * per-layer R-tree does (geo-indices.js:22-56), and skewed layers are
-  * handled by AQE.
+  * or broadcast runs per consumer; given driver-local frames, as
+  * `Engine.transform` passes, that collect runs no job. The spatial
+  * join runs once: a left-outer equi-join on layerId with a bbox
+  * prefilter and the exact `st_contains` as residual, whose rows carry
+  * all three toponym outcomes — the layerId key gives the same pruning
+  * the reference's per-layer R-tree does (geo-indices.js:22-56), and
+  * skewed layers are handled by AQE.
   */
 object InspectorPipeline {
 
@@ -87,30 +90,40 @@ object InspectorPipeline {
     * (D1/D2, building-inspector.js:92-100,211-214), localCheckpoint-ed
     * with the sheet lookup as `dim` and the `parsed` columns, so every
     * later step reads them from one materialization of the dedup
-    * shuffle. Then the H4 fail-fast check (J1): the reference
-    * dereferences `sheetsById[feature.properties.sheet_id]`
-    * unconditionally (building-inspector.js:103-104) and `stopOnError`
-    * aborts the whole run on the resulting TypeError (:268,322).
-    * Dropping such features would be silent, so we assert — on the
-    * DEDUPED set, because a later duplicate is never dereferenced by
-    * the reference — that every referenced sheet exists, and abort
-    * with the offending ids. The check is one narrow `isEmpty` over the
-    * checkpoint; the sorted sample of missing ids is computed only when
-    * it fails.
+    * shuffle. The shuffle is hashed on `key` into the session's
+    * default parallelism (the `geojson` source's split count): a
+    * repartition by number, which AQE never coalesces, so the window,
+    * the checkpoint and everything downstream of it run that many
+    * tasks wide even when the shuffle is far below AQE's minimum
+    * partition size.
+    *
+    * Then the H4 fail-fast check (J1): the reference dereferences
+    * `sheetsById[feature.properties.sheet_id]` unconditionally
+    * (building-inspector.js:103-104) and `stopOnError` aborts the whole
+    * run on the resulting TypeError (:268,322). Dropping such features
+    * would be silent, so we assert — on the DEDUPED set, because a later
+    * duplicate is never dereferenced by the reference — that every
+    * referenced sheet exists, and abort with the offending ids. The
+    * count of rows without a sheet is an observed metric of the
+    * checkpoint job itself, read from that job's plan once it has run;
+    * the sorted sample of missing ids is computed only when it is > 0.
     */
   private def dedupChecked(rows: DataFrame, key: String, sheets: DataFrame,
       layers: DataFrame, what: String, parsed: Column*): DataFrame = {
     val dims = sheetDims(sheets, layers)
     val w = Window.partitionBy(col(key)).orderBy(col("ingest_order"))
-    val deduped = rows
+    val metric = s"$what without a sheet"
+    val observed = rows
+      .repartition(rows.sparkSession.sparkContext.defaultParallelism, col(key))
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1)
       .select(rows.columns.map(col).toIndexedSeq ++
         (try_element_at(dims, col("sheet_id").cast("long")).as("dim") +: parsed): _*)
-      .localCheckpoint()
-    val missing = deduped.filter(col("dim").isNull)
-    if (!missing.isEmpty) {
-      val ids = missing
+      .observe(metric, count_if(col("dim").isNull))
+    val deduped = observed.localCheckpoint()
+    if (observed.queryExecution.observedMetrics(metric).getLong(0) > 0) {
+      val ids = deduped
+        .filter(col("dim").isNull)
         .select(col("sheet_id"))
         .distinct()
         .orderBy(col("sheet_id")) // stable sample → reproducible abort message
@@ -259,9 +272,10 @@ object InspectorPipeline {
     // J3: per-layer point-in-polygon probe, Points only
     // (geo-indices.js:18-20,38-50; building-inspector.js:280-313).
     // "No geospatial index for layer" = the toponym's layer has no
-    // indexed polygons at all (geo-indices.js:44-46); the flag rides
+    // indexed polygons at all (geo-indices.js:44-46). The flag is an
+    // IN over the index's layer ids, planned as a broadcast existence
+    // join (no aggregate; a null layer id reads as no index), and rides
     // along so one left-outer join yields every outcome.
-    val layersWithIndex = indexedBuildings.select(col("b_layer_id")).distinct()
     val flagged = deduped
       .filter(col("geometry.type") === "Point" && col("coords").isNotNull)
       .select(
@@ -269,10 +283,8 @@ object InspectorPipeline {
         element_at(col("coords"), 1).as("px"),
         element_at(col("coords"), 2).as("py"),
         col("coords"),
+        layerId.isin(broadcast(indexedBuildings.select(col("b_layer_id")))).as("has_index"),
       )
-      .join(broadcast(layersWithIndex), col("layer_id") === col("b_layer_id"), "left_outer")
-      .withColumn("has_index", col("b_layer_id").isNotNull)
-      .drop("b_layer_id")
 
     // Equi-join on layerId + bbox prefilter, exact contains as residual.
     val outcomes = flagged

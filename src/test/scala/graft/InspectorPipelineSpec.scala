@@ -223,11 +223,14 @@ class InspectorPipelineSpec extends AnyFunSuite {
     f.toString
   }
 
-  private def feature(id: String, sheetId: Int): String =
+  private def feature(id: String, sheetId: Int,
+      geom0: String = """{"type":"Polygon","coordinates":[[[0,0],[1,0],[1,1],[0,1],[0,0]]]}"""): String =
     s"""{"type":"Feature","properties":{"id":"$id","sheet_id":$sheetId,""" +
       """"map_id":"20010","consensus_color":"","consensus_address":"NONE"},""" +
-      """"geometry":{"type":"GeometryCollection","geometries":[""" +
-      """{"type":"Polygon","coordinates":[[[0,0],[1,0],[1,1],[0,1],[0,0]]]}]}}"""
+      s""""geometry":{"type":"GeometryCollection","geometries":[$geom0]}}"""
+
+  private def collection(features: Seq[String]): String =
+    features.mkString("""{"type":"FeatureCollection","features":[""", ",", "]}")
 
   // The reference md5s geometry.coordinates.join(',') for EVERY
   // toponym before the Point gate (building-inspector.js:207), and JS
@@ -281,6 +284,36 @@ class InspectorPipelineSpec extends AnyFunSuite {
     assert(records.count() > 0)
   }
 
+  // The abort names at most 20 missing ids: the smallest, in numeric
+  // order, whatever order the features arrive in.
+  test("H4: the abort lists the 20 smallest missing sheet ids in ascending order") {
+    val missing = new scala.util.Random(7).shuffle((990 to 1014).toList)
+    val bad = writeTemp("h4-many", collection(
+      feature("200", 860) +: missing.map(id => feature(s"m$id", id))))
+    val e = intercept[IllegalStateException] {
+      Engine.transform(spark, golden.copy(consolidated = bad)).count()
+    }
+    val listed = e.getMessage.stripPrefix("consolidated references missing sheet id(s): ")
+      .takeWhile(_ != '(').trim
+    assert(listed == (990 to 1009).mkString(", "), e.getMessage)
+  }
+
+  // The no-index outcome hangs on which buildings the index holds:
+  // a layer whose buildings are all degenerate (dropped, F6) or have a
+  // non-Polygon geometries[0] (kept, but not indexed) has no index.
+  test("a layer with only degenerate or non-Polygon buildings has no index") {
+    val cons = writeTemp("no-index", collection(Seq(
+      feature("300", 862, """{"type":"Polygon","coordinates":[[[0,0],[10,0],[0,0]]]}"""),
+      feature("301", 862, """{"type":"Point","coordinates":[7,5]}"""),
+    )))
+    val got = recordMultiset(golden.copy(consolidated = cons))
+    val probes = multisetOf(pointToponyms.flatMap(t => Seq(
+      log(s"Error computing intersection for toponym $t"),
+      log(s"Can't find building for toponym $t")))).keySet
+    assertSameRecords(got.filter { case (r, _) => probes.contains(r) },
+      multisetOf(pointToponyms.map(t => log(s"Error computing intersection for toponym $t"))))
+  }
+
   // D3: layersById is _.keyBy (building-inspector.js:390-392), so a
   // repeated layer id keeps its last entry and never fans out records.
   test("layer-boroughs: the last entry for a repeated layer id wins") {
@@ -294,15 +327,17 @@ class InspectorPipelineSpec extends AnyFunSuite {
     assertSameRecords(recordMultiset(golden.copy(layerBoroughs = repeated)), want)
   }
 
-  // Each phase is one dedup checkpoint, one pre-flight check and one
-  // record generator: no cached fan-out, and the point-in-polygon join
-  // (the costly part) planned once for all three toponym outcomes.
+  // Each phase is one dedup checkpoint (whose job also counts missing
+  // sheets) and one record generator: no cached fan-out, and the
+  // point-in-polygon join (the costly part) planned once for all three
+  // toponym outcomes. The dimension files are read once per transform.
   test("plan guard: one pass per phase, one st_contains join, no cached scans") {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import org.apache.spark.sql.execution.window.WindowExec
     import org.apache.spark.sql.util.QueryExecutionListener
 
     val jobs = new java.util.concurrent.atomic.AtomicInteger
@@ -329,7 +364,7 @@ class InspectorPipelineSpec extends AnyFunSuite {
     val helper = new AdaptiveSparkPlanHelper {}
     val executed = plans.asScala.toSeq
     assert(executed.nonEmpty)
-    assert(jobs.get <= 20, s"${jobs.get} Spark jobs for one transform")
+    assert(jobs.get <= 10, s"${jobs.get} Spark jobs for one transform")
     assert(executed.forall(p => helper.find(p)(_.isInstanceOf[InMemoryTableScanExec]).isEmpty),
       "a cached relation is scanned")
     val spatialJoins = executed.flatMap(p => helper.collectWithSubqueries(p) {
@@ -337,6 +372,23 @@ class InspectorPipelineSpec extends AnyFunSuite {
           if j.condition.exists(_.exists(_.isInstanceOf[graft.functions.StContains])) => j
     })
     assert(spatialJoins.size == 1, spatialJoins.mkString("\n"))
+
+    // Each phase's dedup window reads its exchange N-wide: a sub-MB
+    // shuffle that AQE coalesced to one partition would run the window,
+    // the checkpoint and all that follows in one task.
+    val buildingIds = mapper.readTree(new java.io.File(golden.consolidated)).get("features")
+      .elements().asScala.map(_.path("properties").path("id").asText).toSet
+    val distinctKeys = Map("building_id" -> buildingIds.size, "toponym_id" -> pointToponyms.size)
+    val widths = executed.flatMap(p => helper.collect(p) {
+      case w: WindowExec =>
+        w.partitionSpec.flatMap(_.references.map(_.name)).mkString(",") ->
+          w.child.outputPartitioning.numPartitions
+    })
+    assert(widths.map(_._1).sorted == distinctKeys.keys.toSeq.sorted, widths.mkString(", "))
+    widths.foreach { case (key, n) =>
+      assert(n == math.min(spark.sparkContext.defaultParallelism, distinctKeys(key)),
+        s"the $key dedup window runs $n tasks")
+    }
   }
 
   private val emptyCollection = """{"type":"FeatureCollection","features":[]}"""
