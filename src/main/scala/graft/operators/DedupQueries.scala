@@ -1,10 +1,12 @@
 package graft.operators
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Q
 import graft.model.Tables
+import graft.util.Loop
 
 /** Document deduplication operators for a training-data pipeline —
   * first-class components beyond the reference surface (BASELINE.json
@@ -460,72 +462,74 @@ object DedupQueries {
     |clusters AS (
     |  SELECT src AS doc_id, min(dst) AS cluster_rep
     |  FROM reach GROUP BY src)""".stripMargin
+  /** Connected components of the undirected graph `edges(doc1, doc2)`
+    * (pairs with doc1 < doc2): every node mapped to its component's
+    * minimum node id, as (node, label). Min-label propagation with
+    * pointer jumping, run through [[graft.util.Loop]] until a round
+    * changes no label. `cap` bounds the rounds; hitting it while labels
+    * still change throws, naming `what`, rather than returning an
+    * unconverged labelling.
+    */
+  private[operators] def components(edges: DataFrame, what: String,
+      cap: Int = 12): DataFrame = {
+    val sym = edges.unionByName(
+      edges.select(col("doc2").as("doc1"), col("doc1").as("doc2")))
+    // round-14 (the votesStep device): one (n, n) self-loop per node
+    // delivers each node its own label through the SAME join that
+    // delivers neighbor labels — the separate union arm (an extra
+    // labels scan + shuffle per round) disappears, and `doc1 = doc2`
+    // marks the self row that carries `old` for the convergence
+    // check. Pairs are strictly doc1 < doc2, so the real edge set is
+    // loop-free and the marker is exact.
+    val nodes = sym.select(col("doc1").as("node")).distinct().localCheckpoint()
+    val symPlus = sym.unionByName(
+      nodes.select(col("node").as("doc1"), col("node").as("doc2")))
+    /** One min-label propagation + pointer-jump step over the
+      * self-looped edge list; `old` (the step's STARTING label,
+      * delivered by the self row) rides along for the convergence
+      * filter. The pointer-jump self-join reuses the propagation's
+      * shuffle via ReusedExchange.
+      */
+    def step(in: DataFrame): DataFrame = {
+      val propagated = symPlus
+        .join(in, symPlus("doc2") === in("node"))
+        .select(col("doc1").as("node"), col("label"),
+          when(col("doc1") === symPlus("doc2"), col("label"))
+            .cast(in.schema("label").dataType).as("old"))
+        .groupBy(col("node"))
+        .agg(min(col("label")).as("label"), max(col("old")).as("old"))
+      // pointer jumping: relabel by the label's own label — halves
+      // the rounds to converge (log diameter instead of diameter)
+      val byLabel = propagated
+        .select(col("node").as("jnode"), col("label").as("jlabel"))
+      propagated
+        .join(byLabel, col("label") === col("jnode"), "left_outer")
+        .select(col("node"),
+          least(col("label"), coalesce(col("jlabel"), col("label"))).as("label"),
+          col("old"))
+    }
+    // Round-15 (guide §2, round overhead): TWO steps per round —
+    // labels are monotone non-increasing, so "unchanged across the
+    // second step" is exactly the fixed-point test a one-step round
+    // runs, and the converged result (the transitive closure) does
+    // not depend on how many extra steps ran before the check.
+    val cc = Loop(nodes.select(col("node"), col("node").as("label")),
+      cap, Loop.zero(1), count_if(col("label") =!= col("old"))) {
+      (labels, _) => step(step(labels.select(col("node"), col("label")))
+        .select(col("node"), col("label")))
+    }
+    if (!cc.settled) throw new IllegalStateException(
+      s"$what: connected components still changing labels after ${cc.rounds} rounds")
+    cc.state.select(col("node"), col("label"))
+  }
+
   private[operators] val dedupClusters = Q(
     "td_dedup_clusters",
     (s, d) => {
       import s.implicits._
-      val edges = minhashLsh.fn(s, d).select($"doc1", $"doc2").localCheckpoint()
-      val sym = edges.unionByName(
-        edges.select($"doc2".as("doc1"), $"doc1".as("doc2")))
-      // round-14 (the votesStep device): one (n, n) self-loop per node
-      // delivers each node its own label through the SAME join that
-      // delivers neighbor labels — the separate union arm (an extra
-      // labels scan + shuffle per round) disappears, and `doc1 = doc2`
-      // marks the self row that carries `old` for the convergence
-      // check. Candidate pairs are strictly doc1 < doc2, so the real
-      // edge set is loop-free and the marker is exact.
-      val nodes = sym.select($"doc1".as("node")).distinct().localCheckpoint()
-      val symPlus = sym.unionByName(
-        nodes.select($"node".as("doc1"), $"node".as("doc2")))
-      var labels = nodes.select($"node", $"node".as("label"))
-      var converged = false
-      var iter = 0
-      /** One min-label propagation + pointer-jump step over the
-        * self-looped edge list; `old` (the step's STARTING label,
-        * delivered by the self row) rides along for the convergence
-        * filter. The pointer-jump self-join reuses the propagation's
-        * shuffle via ReusedExchange.
-        */
-      def step(in: org.apache.spark.sql.DataFrame)
-          : org.apache.spark.sql.DataFrame = {
-        val propagated = symPlus
-          .join(in, symPlus("doc2") === in("node"))
-          .select($"doc1".as("node"), $"label",
-            when($"doc1" === symPlus("doc2"), $"label")
-              .cast(in.schema("label").dataType).as("old"))
-          .groupBy($"node")
-          .agg(min($"label").as("label"), max($"old").as("old"))
-        // pointer jumping: relabel by the label's own label — halves
-        // the rounds to converge (log diameter instead of diameter)
-        val byLabel = propagated
-          .select($"node".as("jnode"), $"label".as("jlabel"))
-        propagated
-          .join(byLabel, $"label" === $"jnode", "left_outer")
-          .select($"node",
-            least($"label", coalesce($"jlabel", $"label")).as("label"),
-            $"old")
-      }
-      while (!converged && iter < 12) {
-        // Round-15 (guide §2, round overhead): TWO steps per
-        // materialization + convergence check — labels are monotone
-        // non-increasing, so "unchanged across the second step" is
-        // exactly the fixed-point test the one-step loop ran, and the
-        // converged result (= the oracle's transitive closure) is
-        // independent of how many extra steps ran before the check.
-        // Halves the per-round driver job/barrier count; the cap keeps
-        // ≥ the old 12-step bound.
-        val jumped = step(step(labels).select($"node", $"label"))
-          // LAZY (round-15): the convergence count right below
-          // materializes it — the eager variant's separate job per
-          // round bought nothing. count over the changed-filter, NOT
-          // isEmpty: a limit-1 probe computes only SOME partitions of
-          // the lazy checkpoint and the rest re-execute both steps
-          // inside the next round's lineage
-          .localCheckpoint(false)
-        converged = jumped.filter($"label" =!= $"old").count() == 0L
-        labels = jumped.select($"node", $"label")
-        iter += 1
-      }
+      val labels = components(
+        minhashLsh.fn(s, d).select($"doc1", $"doc2").localCheckpoint(),
+        "td_dedup_clusters")
       labels.select($"node".as("doc_id"), $"label".as("cluster_rep"))
         .orderBy($"doc_id")
     },

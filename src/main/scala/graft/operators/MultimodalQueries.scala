@@ -1107,8 +1107,8 @@ object MultimodalQueries {
   // cluster representative the CC labels already carry) and the byte
   // mass kept vs total — the image-dedup savings line a media
   // pipeline reports. CC is the same bounded pointer-jumping
-  // label-propagation as the text path (log-diameter rounds, one
-  // checkpoint action per round); only docs in ≥ 1 near-dup pair
+  // label-propagation routine as the text path
+  // (DedupQueries.components); only docs in ≥ 1 near-dup pair
   // enter, mirroring the text clusters' contract.
   // The oracle derives the adaptive band geometry from count(*)
   // (Multimodal.phashOracleBandsCte), matching mm_phash_neardup — the
@@ -1117,36 +1117,10 @@ object MultimodalQueries {
     "mm_phash_clusters",
     (s, d) => {
       import s.implicits._
-      val edges = phashNearDup.fn(s, d)
+      val labels = DedupQueries.components(phashNearDup.fn(s, d)
         .filter($"is_near_dup")
         .select($"doc1", $"doc2")
-        .localCheckpoint()
-      val sym = edges.unionByName(
-        edges.select($"doc2".as("doc1"), $"doc1".as("doc2")))
-      var labels = sym.select($"doc1".as("node")).distinct()
-        .select($"node", $"node".as("label"))
-      var converged = false
-      var iter = 0
-      while (!converged && iter < 12) {
-        val labelT = labels.schema("label").dataType
-        val propagated = sym
-          .join(labels, sym("doc2") === labels("node"))
-          .select($"doc1".as("node"), $"label", lit(null).cast(labelT).as("old"))
-          .unionByName(labels.select($"node", $"label", $"label".as("old")))
-          .groupBy($"node")
-          .agg(min($"label").as("label"), max($"old").as("old"))
-        val byLabel = propagated
-          .select($"node".as("jnode"), $"label".as("jlabel"))
-        val jumped = propagated
-          .join(byLabel, $"label" === $"jnode", "left_outer")
-          .select($"node",
-            least($"label", coalesce($"jlabel", $"label")).as("label"),
-            $"old")
-          .localCheckpoint()
-        converged = jumped.filter($"label" =!= $"old").isEmpty
-        labels = jumped.select($"node", $"label")
-        iter += 1
-      }
+        .localCheckpoint(), "mm_phash_clusters")
       val chars = Tables.documents(s, d).select($"doc_id", $"n_chars")
       labels
         .join(chars, labels("node") === chars("doc_id"))

@@ -6,6 +6,7 @@ import org.apache.spark.sql.types.DecimalType
 
 import graft.Q
 import graft.model.Tables
+import graft.util.Loop
 
 /** Similarity search over the `embeddings` table (64-dim float
   * vectors): brute-force cosine top-k as the correctness baseline and
@@ -1699,23 +1700,21 @@ object SimilarityQueries {
         upper.filter($"i" =!= $"j")
           .select($"j".as("i"), $"i".as("j"), $"gram_e9"))
         .localCheckpoint() // ≤ d² rows; feeds 3 iteration joins
-      var x = g.select($"i".as("k")).distinct()
+      val x0 = g.select($"i".as("k")).distinct()
         .withColumn("x", lit(1000000L).cast("decimal(38,0)"))
-      (1 to 3).foreach { _ =>
+      // checkpoint the 64-row vector per round: left as a plan, each
+      // broadcast(x)/broadcast(mx) subtree re-derives every earlier
+      // round from g — trivial data, needless plan depth
+      Loop(x0, 3, Loop.Fixed) { (x, _) =>
         val y = g.join(broadcast(x), $"j" === $"k")
           .groupBy($"i")
           .agg(sum($"gram_e9".cast("decimal(38,0)") * $"x").as("y"))
         val mx = y.agg(max(abs($"y")).as("mx"))
-        // checkpoint the 64-row vector per round: left as a plan,
-        // each broadcast(x)/broadcast(mx) subtree re-derives every
-        // earlier round from g — trivial data, needless plan depth
-        x = y.crossJoin(broadcast(mx))
+        y.crossJoin(broadcast(mx))
           .select($"i".as("k"),
             expr("CAST(CASE WHEN y < 0 THEN -1 ELSE 1 END" +
               " * ((abs(y) * 1000000) DIV mx) AS DECIMAL(38,0))").as("x"))
-          .localCheckpoint()
-      }
-      x.select($"k", $"x".cast("long").as("x_micro")).orderBy($"k")
+      }.state.select($"k", $"x".cast("long").as("x_micro")).orderBy($"k")
     },
     Some {
       def step(prev: String, out: String) =
@@ -1774,8 +1773,6 @@ object SimilarityQueries {
       val cand = emb.filter($"vec_id" =!= 0)
         .crossJoin(broadcast(q0))
         .select($"vec_id", $"embedding", cosine_e9($"embedding", $"qe").as("rel_e9"))
-        .localCheckpoint() // one pass per greedy round reads this
-      val picked = scala.collection.mutable.ArrayBuffer[(Long, Long, Long, Long)]()
       // Round-15 (guide §1.2 "the distributed algorithm"): the max-sim
       // penalty over the selected set is incrementally maintainable —
       // max over {s1..sr} = max(max over {s1..s(r-1)}, sim to sr) on
@@ -1786,41 +1783,24 @@ object SimilarityQueries {
       // drop from N·k(k−1)/2 to N·(k−1); the per-round exchange
       // disappears (the argmax is the same single partial agg).
       // Identical integers by induction on the max chain.
-      var state: Option[org.apache.spark.sql.DataFrame] = None // + ms
-      for (rank <- 1 to 5) {
-        val scored = state match {
-          case None => cand.select($"vec_id", $"rel_e9",
-            $"rel_e9".as("mmr_e9"))
-          case Some(st) => st.select($"vec_id", $"rel_e9",
-            ($"rel_e9" - expr(
+      // Each round's state is the candidates not yet picked, carrying
+      // `ms` and `mmr_e9`; Loop's per-round aggregate is the argmax
+      // itself, and it brings the pick's embedding along for the next
+      // round's kernel call.
+      Loop(cand, 5, Loop.Fixed,
+        max(struct($"mmr_e9", -$"vec_id", $"rel_e9", $"embedding"))) {
+        case (st, None) => st.withColumn("ms", lit(Long.MinValue))
+          .withColumn("mmr_e9", $"rel_e9")
+        case (st, Some(last)) =>
+          val pick = last.getStruct(1)
+          st.filter($"vec_id" =!= -pick.getLong(1))
+            .withColumn("ms", greatest($"ms",
+              cosine_e9($"embedding", typedLit(pick.getSeq[Float](3)))))
+            .withColumn("mmr_e9", $"rel_e9" - expr(
               "CASE WHEN ms < 0 THEN -1 ELSE 1 END * (abs(ms) div 2)"))
-              .as("mmr_e9"))
-        }
-        val best = scored
-          .agg(max(struct($"mmr_e9".as("m"), (-$"vec_id").as("nv"),
-            $"rel_e9".as("r"))).as("mx"))
-          .select((-$"mx.nv").as("vec_id"), $"mx.r".as("rel_e9"),
-            $"mx.m".as("mmr_e9"))
-          .head()
-        picked += ((rank.toLong, best.getLong(0), best.getLong(1), best.getLong(2)))
-        if (rank < 5) {
-          // the pick's embedding is one 64-float row off the
-          // checkpointed candidate table — the same driver-literal
-          // device as sim_sq_topk's query vector
-          val pe = cand.filter($"vec_id" === best.getLong(0))
-            .select($"embedding").head().getSeq[Float](0)
-          val prev = state.getOrElse(cand.withColumn("ms", lit(Long.MinValue)))
-          state = Some(prev
-            .filter($"vec_id" =!= best.getLong(0))
-            .select($"vec_id", $"embedding", $"rel_e9",
-              greatest($"ms",
-                cosine_e9($"embedding", typedLit(pe.toSeq))).as("ms"))
-            // LAZY (round-15): next round's argmax head() materializes
-            // it — one eager job per round saved
-            .localCheckpoint(false))
-        }
-      }
-      picked.toSeq.toDF("rank", "vec_id", "rel_e9", "mmr_e9")
+      }.stats.filter(_.getLong(0) > 0).map(_.getStruct(1)).zipWithIndex
+        .map { case (p, i) => (i + 1L, -p.getLong(1), p.getLong(2), p.getLong(0)) }
+        .toDF("rank", "vec_id", "rel_e9", "mmr_e9")
     },
     Some {
       // one CTE block per greedy round: max-sim-to-selected via the
@@ -2193,35 +2173,31 @@ object SimilarityQueries {
       import s.implicits._
       import graft.functions.exprs.cosine_e9
       val emb = graft.util.Cols.fanout(Tables.embeddings(s, d))
-        .select($"vec_id", $"embedding").localCheckpoint()
-      var selected = Vector((1L, 0L, 1000000000L))
+        .select($"vec_id", $"embedding")
+      val seed = emb.filter($"vec_id" === 0).select($"embedding".as("e0"))
       // Round-15 (guide §1.2): the max-cosine-to-selected is
-      // incrementally maintainable on exact BIGINTs — carry `mc` on a
-      // checkpointed frame and score each round against the NEWEST
+      // incrementally maintainable on exact BIGINTs — carry `mc` on the
+      // checkpointed state and score each round against the NEWEST
       // pick only (one kernel call per candidate per round instead of
       // re-scoring the whole selected set through a crossJoin +
-      // groupBy). Identical integers by induction on the max chain;
-      // the argmin TakeOrdered is unchanged.
-      var state: Option[org.apache.spark.sql.DataFrame] = None // + mc
-      for (r <- 2 to 5) {
-        val lastId = selected.last._2
-        val le = emb.filter($"vec_id" === lastId)
-          .select($"embedding").head().getSeq[Float](0)
-        val prev = state.getOrElse(emb.withColumn("mc", lit(Long.MinValue)))
-        val st = prev
-          .filter($"vec_id" =!= lastId)
-          .select($"vec_id", $"embedding",
-            greatest($"mc",
-              cosine_e9($"embedding", typedLit(le.toSeq))).as("mc"))
-          // LAZY (round-15): the pick's head() below materializes it
-          .localCheckpoint(false)
-        state = Some(st)
-        val pick = st.select($"vec_id", $"mc")
-          .orderBy($"mc", $"vec_id").limit(1)
-          .head()
-        selected :+= ((r.toLong, pick.getLong(0), pick.getLong(1)))
-      }
-      selected.toDF("rank", "vec_id", "far_sim_e9").orderBy($"rank")
+      // groupBy). Identical integers by induction on the max chain.
+      // The first round scores against the seed (vec 0, a broadcast
+      // column like sim_mmr_select's query); Loop's per-round aggregate
+      // is the argmin over (mc, vec_id), with the pick's embedding for
+      // the next round.
+      val picks = Loop(emb, 4, Loop.Fixed,
+        min(struct($"mc", $"vec_id", $"embedding"))) {
+        case (st, None) => st.filter($"vec_id" =!= 0).crossJoin(broadcast(seed))
+          .select($"vec_id", $"embedding", cosine_e9($"embedding", $"e0").as("mc"))
+        case (st, Some(last)) =>
+          val pick = last.getStruct(1)
+          st.filter($"vec_id" =!= pick.getLong(1))
+            .withColumn("mc", greatest($"mc",
+              cosine_e9($"embedding", typedLit(pick.getSeq[Float](2)))))
+      }.stats.filter(_.getLong(0) > 0).map(_.getStruct(1))
+      ((1L, 0L, 1000000000L) +: picks.zipWithIndex
+        .map { case (p, i) => (i + 2L, p.getLong(1), p.getLong(0)) })
+        .toDF("rank", "vec_id", "far_sim_e9").orderBy($"rank")
     },
     Some {
       def step(k: Int) =

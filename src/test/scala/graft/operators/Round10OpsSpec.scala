@@ -6,9 +6,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * kernels. The round's main perf work created code paths the oracle
   * gate never executes at sf0.01 — coPurchaseKept's SIZED construction
   * and gr_modularity's ROBUST artifact path engage only at grown
-  * scale — so this suite pins each against its small-scale twin via
-  * the force knobs, and replays the two rewrites (degree-oriented
-  * triangle support, fused Katz hops) against independent in-memory
+  * scale — so this suite pins each against its small-scale twin by
+  * passing the path to the builder, and replays the two rewrites
+  * (degree-oriented triangle support, fused Katz hops) against independent in-memory
   * implementations, the Round9OpsSpec discipline.
   */
 class Round10OpsSpec extends AnyFunSuite {
@@ -20,28 +20,25 @@ class Round10OpsSpec extends AnyFunSuite {
   private def q(name: String) =
     graft.QueryCatalog.all.find(_.name == name).get
 
-  private def rowsWith(prop: String, v: String, name: String): Seq[String] = {
-    sys.props(prop) = v
-    try q(name).fn(spark, sf).collect().map(_.toString).toSeq.sorted
-    finally sys.props.remove(prop)
-  }
+  private def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toString).toSeq.sorted
 
   test("coPurchaseKept sized path is bit-identical to the lazy path") {
     // The sized path (packed pair keys, data-derived widths) only runs
-    // at grown scale in production; force both paths at sf0.01 over
-    // every consumer whose output exposes the kept edge set richly.
-    for (name <- Seq("gr_truss_support", "gr_clustering_coeff",
-        "gr_link_predict", "gr_triangle_count")) {
-      val lazyRows = rowsWith("graft.copurchase.sized", "0", name)
-      val sizedRows = rowsWith("graft.copurchase.sized", "1", name)
-      assert(lazyRows == sizedRows,
-        s"$name diverges between lazy and sized construction paths")
-    }
+    // at grown scale in production; build the kept edge set both ways
+    // at sf0.01. Every consumer (truss support, clustering, link
+    // prediction, triangles) is a deterministic function of that set.
+    val name = "coPurchaseKept"
+    val lazyRows = rows(GraphQueries.coPurchaseKept(spark, sf, sized = Some(false)))
+    val sizedRows = rows(GraphQueries.coPurchaseKept(spark, sf, sized = Some(true)))
+    assert(lazyRows.nonEmpty)
+    assert(lazyRows == sizedRows,
+      s"$name diverges between lazy and sized construction paths")
   }
 
   test("gr_modularity robust path is bit-identical to the lazy path") {
-    val lazyRows = rowsWith("graft.modularity.robust", "0", "gr_modularity")
-    val robust = rowsWith("graft.modularity.robust", "1", "gr_modularity")
+    val lazyRows = rows(GraphQueries.modularityOf(spark, sf, robust = Some(false)))
+    val robust = rows(GraphQueries.modularityOf(spark, sf, robust = Some(true)))
     assert(lazyRows == robust,
       "gr_modularity diverges between lazy and robust artifact paths")
   }

@@ -102,14 +102,10 @@ class Round7OpsSpec extends AnyFunSuite {
   // ---- gr_label_propagation robust loop (round-7 #5) ----
 
   test("LPA robust path (checkpoint + early-exit) is row-identical to the single-plan path") {
-    val fast = try {
-      sys.props("graft.lpa.robust") = "0"
-      q("gr_label_propagation").fn(spark, sf).collect().map(_.toString)
-    } finally sys.props.remove("graft.lpa.robust")
-    val robust = try {
-      sys.props("graft.lpa.robust") = "1"
-      q("gr_label_propagation").fn(spark, sf).collect().map(_.toString)
-    } finally sys.props.remove("graft.lpa.robust")
+    def labels(robust: Boolean) = GraphQueries.lpaLabels(spark, sf, Some(robust))
+      .orderBy("node").collect().map(_.toString)
+    val fast = labels(robust = false)
+    val robust = labels(robust = true)
     assert(fast.nonEmpty && robust.sameElements(fast))
   }
 

@@ -5,4 +5,10 @@ package org.apache.spark
   */
 object TestListenerBus {
   def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty(60000L)
+
+  /** Whether a job is an action (ends in a result stage), not one of
+    * the map-stage jobs AQE submits for each shuffle.
+    */
+  def isAction(e: scheduler.SparkListenerJobStart): Boolean =
+    e.stageInfos.maxBy(_.stageId).shuffleDepId.isEmpty
 }
