@@ -1,5 +1,9 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
+
+import graft.util.Json
+
 /** Benchmark main (driver contract): times every catalogue query on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line
   * {"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}.
@@ -9,20 +13,25 @@ package graft
   * shapes) so per-query numbers measure the plan, not JVM startup.
   */
 object Bench {
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = Session.local()
-
-    // Warmup: touch every table once (file listing, footer reads, JIT),
-    // then run two cheap kernel-bearing queries so whole-stage-codegen
-    // compilation and the custom-expression JIT paths are warm before
-    // the first timed rep — otherwise the catalogue's first queries
-    // carry one-off compilation noise into their minima.
+  /** Touches every table once (file listing, footer reads, JIT), then
+    * runs two cheap kernel-bearing queries so whole-stage-codegen
+    * compilation and the custom-expression JIT paths are warm before
+    * the first timed rep — otherwise the catalogue's first queries
+    * carry one-off compilation noise into their minima.
+    */
+  def warmup(spark: SparkSession, sfDir: String): Unit = {
     Seq("region", "nation", "customer", "supplier", "part", "orders",
       "lineitem", "events", "documents", "embeddings")
       .foreach(t => graft.model.Tables(spark, sfDir, t).count())
     for (name <- Seq("sim_lsh_bucket", "ta_token_count");
          q <- QueryCatalog.all.find(_.name == name)) q.fn(spark, sfDir).count()
+  }
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val spark = Session.local()
+
+    warmup(spark, sfDir)
 
     // A failed query must be visible in the JSON (time -1 + an errors
     // entry), never a normal-looking timing.
@@ -157,19 +166,6 @@ object Bench {
         last = now
       }
     }
-    // Full JSON string escape (backslash, quote, ALL control chars):
-    // an exception message with a tab or stray CR must not break the
-    // driver's json.load of the bench line.
-    def esc(s: String): String = s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
-
     def timeQuery(q: Q): QResult = {
       var err: Option[String] = None
       jitQuiesce()
@@ -215,7 +211,7 @@ object Bench {
             tailErr = err
             err = None // base reps stand on their own
             for (w <- repDump; e <- tailErr) {
-              w.write(s"""{"q":"${q.name}","rep":"tail","error":"${esc(e)}"}""" + "\n")
+              w.write(s"""{"q":"${q.name}","rep":"tail","error":"${Json.esc(e)}"}""" + "\n")
               w.flush()
             }
           }
@@ -232,11 +228,11 @@ object Bench {
     }
     val results = ivfTrain ++ selected.map(timeQuery)
     val errs = results.collect { case QResult(k, _, _, _, _, Some(e), _) =>
-      "\"" + k + "\":\"" + esc(e) + "\""
+      "\"" + k + "\":\"" + Json.esc(e) + "\""
     }.mkString("{", ",", "}")
     val tailErrs = results.collect {
       case QResult(k, _, _, _, _, None, Some(e)) =>
-        "\"" + k + "\":\"" + esc(e) + "\""
+        "\"" + k + "\":\"" + Json.esc(e) + "\""
     }.mkString("{", ",", "}")
     val total = results.collect { case r if r.err.isEmpty => r.min }.sum
 

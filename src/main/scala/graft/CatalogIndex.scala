@@ -16,21 +16,6 @@ object CatalogIndex {
   val StartMarker = "<!-- CATALOG-INDEX-START (generated by graft.CatalogIndex; do not edit by hand) -->"
   val EndMarker = "<!-- CATALOG-INDEX-END -->"
 
-  /** (family label, queries) in catalogue order — mirrors QueryCatalog. */
-  def groups: Seq[(String, Seq[Q])] = Seq(
-    "relational" -> operators.RelationalQueries.all,
-    "geo" -> operators.GeoQueries.all,
-    "dedup" -> operators.DedupQueries.all,
-    "text" -> operators.TextQueries.all,
-    "similarity" -> operators.SimilarityQueries.all,
-    "multimodal" -> operators.MultimodalQueries.all,
-    "events" -> operators.EventQueries.all,
-    "url" -> operators.UrlQueries.all,
-    "extra" -> operators.ExtraQueries.all,
-    "graph" -> operators.GraphQueries.all,
-    "pipeline" -> operators.PipelineQueries.all,
-  )
-
   /** File:line of the Q DEFINITION site for each query name: the
     * quoted literal as the first argument of a `Q(` call — either on
     * the same line (`Q("name"`) or with `Q(` ending the previous line.
@@ -80,7 +65,7 @@ object CatalogIndex {
     sb.append("suites instead).\n\n")
     sb.append("| query | family | defined at | oracle |\n")
     sb.append("|---|---|---|---|\n")
-    groups.foreach { case (family, qs) =>
+    QueryCatalog.groups.foreach { case (family, qs) =>
       qs.foreach { q =>
         val loc = locs.getOrElse(q.name, "?")
         val kind = if (q.oracle.isDefined) "SQL" else "rows-only"

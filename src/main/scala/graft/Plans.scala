@@ -7,6 +7,7 @@ import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.window.WindowExec
 
 /** Plan auditor: dumps a per-query physical-plan summary (pushed
   * filters, read schemas, join strategies, exchange count) for the
@@ -126,27 +127,30 @@ object Plans {
         "asserted in UrlQueriesSpec"),
   )
 
-  /** Every node of an executed plan that actually runs: through adaptive
-    * wrappers and query stages (whose real plan hangs off a field, not
-    * `children`), into each distinct cached plan once (object identity:
-    * shared caches are shared executions) and into subquery plans.
-    * ReusedExchange references are leaves, so a reused exchange counts once.
+  /** Every node of an executed plan that actually runs, with its depth
+    * below `root`: through adaptive wrappers and query stages (whose
+    * real plan hangs off a field, not `children`), into each distinct
+    * cached plan once (object identity: shared caches are shared
+    * executions) and into subquery plans. ReusedExchange references are
+    * leaves, so a reused exchange counts once.
     */
-  def executedNodes(root: SparkPlan): Seq[SparkPlan] = {
+  def executedTree(root: SparkPlan): Seq[(SparkPlan, Int)] = {
     val seenCaches = java.util.Collections.newSetFromMap(
       new java.util.IdentityHashMap[SparkPlan, java.lang.Boolean]())
-    def walk(p: SparkPlan): Seq[SparkPlan] = {
+    def walk(p: SparkPlan, depth: Int): Seq[(SparkPlan, Int)] = {
       val inner = p match {
-        case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
-        case qs: QueryStageExec => walk(qs.plan)
+        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+        case qs: QueryStageExec => Seq(qs.plan)
         case im: InMemoryTableScanExec if seenCaches.add(im.relation.cachedPlan) =>
-          walk(im.relation.cachedPlan)
+          Seq(im.relation.cachedPlan)
         case _ => Seq.empty
       }
-      p +: (inner ++ p.subqueries.flatMap(walk) ++ p.children.flatMap(walk))
+      (p, depth) +: (inner ++ p.subqueries ++ p.children).flatMap(walk(_, depth + 1))
     }
-    walk(root)
+    walk(root, 0)
   }
+
+  def executedNodes(root: SparkPlan): Seq[SparkPlan] = executedTree(root).map(_._1)
 
   /** (exchanges, single-partition exchanges) that actually execute. */
   def countExchanges(root: SparkPlan): (Int, Int) = {
@@ -156,6 +160,15 @@ object Plans {
     }
     (single.size, single.count(identity))
   }
+
+  /** Window operators that run with no partition spec: each moves all
+    * of its input into one task.
+    */
+  def unpartitionedWindows(root: SparkPlan): Int =
+    executedNodes(root).count {
+      case w: WindowExec => w.partitionSpec.isEmpty
+      case _ => false
+    }
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
@@ -174,7 +187,9 @@ object Plans {
       "benign when they carry a global scalar aggregate's one row " +
       "(e.g. qs_scalar_subquery's AVG), a scale bug when whole-data " +
       "rows flow through them — the round-1 vocabulary window was the " +
-      "latter and is gone.\n")
+      "latter and is gone. UNPARTITIONED-WINDOW markers count `Window` " +
+      "operators with no partition spec, which sort all of their input " +
+      "in one task the same way.\n")
 
     QueryCatalog.all.foreach { q =>
       try {
@@ -189,13 +204,15 @@ object Plans {
         // sort/limit is a scale-killer (all data through one task);
         // the audit makes any such occurrence visible per query.
         val (exchanges, singleParts) = countExchanges(executed)
+        val windows = unpartitionedWindows(executed)
         sb.append(s"\n## ${q.name}\n")
         sb.append(s"- oracle: ${if (q.oracle.isDefined) "SQL" else "rows-only (spec-verified)"}\n")
         if (pushed.nonEmpty) sb.append(pushed.map(p => s"- $p\n").mkString)
         sb.append(schemas.map(r => s"- $r\n").mkString)
         if (joins.nonEmpty) sb.append(s"- joins: ${joins.mkString("; ")}\n")
         sb.append(s"- exchanges: $exchanges" +
-          (if (singleParts > 0) s" (SINGLE-PARTITION: $singleParts)" else "") + "\n")
+          (if (singleParts > 0) s" (SINGLE-PARTITION: $singleParts)" else "") +
+          (if (windows > 0) s" (UNPARTITIONED-WINDOW: $windows)" else "") + "\n")
         notes.get(q.name).foreach(n => sb.append(s"- note: $n\n"))
       } catch {
         case e: Throwable => sb.append(s"\n## ${q.name}\nERROR: ${e.getMessage}\n")

@@ -14,28 +14,30 @@ final case class Q(
 )
 
 object QueryCatalog {
-  /** All registered query groups, in stable order. Every fn is wrapped
+  /** The query families, in stable catalogue order. */
+  def groups: Seq[(String, Seq[Q])] = Seq(
+    "relational" -> graft.operators.RelationalQueries.all,
+    "geo" -> graft.operators.GeoQueries.all,
+    "dedup" -> graft.operators.DedupQueries.all,
+    "text" -> graft.operators.TextQueries.all,
+    "similarity" -> graft.operators.SimilarityQueries.all,
+    "multimodal" -> graft.operators.MultimodalQueries.all,
+    "events" -> graft.operators.EventQueries.all,
+    "url" -> graft.operators.UrlQueries.all,
+    "extra" -> graft.operators.ExtraQueries.all,
+    "graph" -> graft.operators.GraphQueries.all,
+    "pipeline" -> graft.operators.PipelineQueries.all,
+  )
+
+  /** Every query of every family, in stable order. Every fn is wrapped
     * to register the engine's custom SQL functions on the session
     * first (idempotent, microseconds): several operators reference
     * them inside `expr(...)` strings and higher-order-function
     * lambdas, where only the session FunctionRegistry can resolve
     * them.
     */
-  def all: Seq[Q] = raw.map(q => q.copy(fn = (s, d) => {
+  def all: Seq[Q] = groups.flatMap(_._2).map(q => q.copy(fn = (s, d) => {
     graft.functions.exprs.register(s)
     q.fn(s, d)
   }))
-
-  private def raw: Seq[Q] =
-    graft.operators.RelationalQueries.all ++
-      graft.operators.GeoQueries.all ++
-      graft.operators.DedupQueries.all ++
-      graft.operators.TextQueries.all ++
-      graft.operators.SimilarityQueries.all ++
-      graft.operators.MultimodalQueries.all ++
-      graft.operators.EventQueries.all ++
-      graft.operators.UrlQueries.all ++
-      graft.operators.ExtraQueries.all ++
-      graft.operators.GraphQueries.all ++
-      graft.operators.PipelineQueries.all
 }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Q
@@ -32,43 +33,64 @@ object GraphQueries {
 
   private val Iters = 3
 
+  /** The rank iteration of `gr_pagerank` and `gr_personalized_pagerank`:
+    * final (node, pr) after `Iters` rounds. The teleport mass (0.15 of
+    * the e6 unit) returns to every node, or, `personalized`, only to
+    * the seed (the lowest part key), which also holds all of the start
+    * mass.
+    */
+  private def rankIteration(s: SparkSession, d: String, personalized: Boolean): DataFrame = {
+    import s.implicits._
+    // checkpoint the |E| directed pairs, not the 2|E| symmetrized
+    // union — union is lazy and shuffle-free, so halving the
+    // materialized rows halves the (per-rep dominant) checkpoint
+    // cost while the 3 iterations still re-read memory, not lineage
+    val edges = Tables.lineitem(s, d)
+      .select(($"l_partkey" * 2).as("src"), ($"l_suppkey" * 2 + 1).as("dst"))
+      .distinct()
+      .localCheckpoint()
+    val sym = edges
+      .unionByName(edges.select($"dst".as("src"), $"src".as("dst")))
+    // deg is read by the rank init and every round, and DataFrame
+    // plans share no subtrees: one eager checkpoint job runs its
+    // aggregate once instead of four times
+    val degree = () => sym.groupBy($"src").agg(count(lit(1)).as("outdeg")).localCheckpoint()
+    // share(node, mass): the part of `mass` node gets
+    val (deg, share) =
+      if (!personalized) (degree(), (_: Column, mass: Long) => lit(mass))
+      else {
+        // the seed is one scalar read off the edge checkpoint as a
+        // driver literal, overlapped with the degree job; a null min
+        // (no edges) matches no node
+        val Seq(degE, seedE) = graft.util.Par(degree, () => edges.agg(min($"src")).head())
+        val seed = seedE.asInstanceOf[Row]
+        val sn = if (seed.isNullAt(0)) lit(null).cast("long") else lit(seed.getLong(0))
+        (degE.asInstanceOf[DataFrame],
+          (n: Column, mass: Long) => when(n === sn, mass).otherwise(0L))
+      }
+    var ranks = deg.select($"src".as("node"), share($"src", 1000000L).as("pr"))
+    for (_ <- 1 to Iters) {
+      // Fold rank/outdeg on the NODE table first (node-sized join),
+      // so each iteration touches the edge table exactly once and
+      // the small contrib side broadcasts — the edge list never
+      // shuffles per iteration, only the partially-aggregated
+      // (dst, sum) pairs do.
+      val contribs = ranks.join(deg, $"node" === $"src")
+        .select($"node".as("csrc"), expr("pr div outdeg").as("contrib"))
+      ranks = sym
+        .join(contribs, $"src" === $"csrc")
+        .groupBy($"dst")
+        .agg(sum($"contrib").as("m"))
+        .select($"dst".as("node"), (share($"dst", 150000L) + expr("(85 * m) div 100")).as("pr"))
+    }
+    ranks
+  }
+
   private val pagerank = Q(
     "gr_pagerank",
     (s, d) => {
       import s.implicits._
-      // checkpoint the |E| directed pairs, not the 2|E| symmetrized
-      // union — union is lazy and shuffle-free, so halving the
-      // materialized rows halves the (per-rep dominant) checkpoint
-      // cost while the 3 iterations still re-read memory, not lineage
-      val edges = Tables.lineitem(s, d)
-        .select(($"l_partkey" * 2).as("src"), ($"l_suppkey" * 2 + 1).as("dst"))
-        .distinct()
-        .localCheckpoint()
-      val sym = edges
-        .unionByName(edges.select($"dst".as("src"), $"src".as("dst")))
-      // Round-15 (guide §2.4): deg is referenced FOUR times (the rank
-      // init + one contrib join per iteration) and DataFrame plans get
-      // no subtree reuse — lazy, the degree aggregation and its
-      // exchange ran four times. One eager checkpoint job buys three
-      // back.
-      val deg = sym.groupBy($"src").agg(count(lit(1)).as("outdeg"))
-        .localCheckpoint()
-      var ranks = deg.select($"src".as("node"), lit(1000000L).as("pr"))
-      for (_ <- 1 to Iters) {
-        // Fold rank/outdeg on the NODE table first (node-sized join),
-        // so each iteration touches the edge table exactly once and
-        // the small contrib side broadcasts — the edge list never
-        // shuffles per iteration, only the partially-aggregated
-        // (dst, sum) pairs do.
-        val contribs = ranks.join(deg, $"node" === $"src")
-          .select($"node".as("csrc"), expr("pr div outdeg").as("contrib"))
-        ranks = sym
-          .join(contribs, $"src" === $"csrc")
-          .groupBy($"dst")
-          .agg(sum($"contrib").as("s"))
-          .select($"dst".as("node"), expr("150000 + (85 * s) div 100").as("pr"))
-      }
-      ranks.orderBy($"pr".desc, $"node").limit(100)
+      rankIteration(s, d, personalized = false).orderBy($"pr".desc, $"node").limit(100)
     },
     Some {
       // r0 is the uniform start; each rI unrolls one integer-exact
@@ -1232,42 +1254,8 @@ object GraphQueries {
     "gr_personalized_pagerank",
     (s, d) => {
       import s.implicits._
-      val edges = Tables.lineitem(s, d)
-        .select(($"l_partkey" * 2).as("src"), ($"l_suppkey" * 2 + 1).as("dst"))
-        .distinct()
-        .localCheckpoint()
-      val sym = edges
-        .unionByName(edges.select($"dst".as("src"), $"src".as("dst")))
-      // Round-15 (guide §2.4): same four-reference deg shape as
-      // gr_pagerank — checkpoint once. The seed is ONE scalar read
-      // off the edge checkpoint as a driver literal (the sim_sq_topk
-      // device) instead of four broadcast-crossJoin subtrees each
-      // re-running the min aggregate; a null min (empty edges) keeps
-      // the old `src = NULL → otherwise` semantics via a null literal.
-      // the two pre-loop actions are independent — overlap them
-      val Seq(degE, seedRowE) = graft.util.Par(
-        () => sym.groupBy($"src").agg(count(lit(1)).as("outdeg"))
-          .localCheckpoint(),
-        () => edges.agg(min($"src").as("sn")).head())
-      val deg = degE.asInstanceOf[org.apache.spark.sql.DataFrame]
-      val seedRow = seedRowE.asInstanceOf[org.apache.spark.sql.Row]
-      val sn = if (seedRow.isNullAt(0)) lit(null).cast("long")
-        else lit(seedRow.getLong(0))
-      var ranks = deg
-        .select($"src".as("node"),
-          when($"src" === sn, 1000000L).otherwise(0L).as("pr"))
-      for (_ <- 1 to 3) {
-        val contribs = ranks.join(deg, $"node" === $"src")
-          .select($"node".as("csrc"), expr("pr div outdeg").as("contrib"))
-        ranks = sym
-          .join(contribs, $"src" === $"csrc")
-          .groupBy($"dst")
-          .agg(sum($"contrib").as("m"))
-          .select($"dst".as("node"),
-            (expr("(85 * m) div 100") +
-              when($"dst" === sn, 150000L).otherwise(0L)).as("pr"))
-      }
-      ranks.filter($"pr" > 0).orderBy($"pr".desc, $"node").limit(10)
+      rankIteration(s, d, personalized = true)
+        .filter($"pr" > 0).orderBy($"pr".desc, $"node").limit(10)
     },
     Some {
       def step(prev: String, out: String) =

@@ -332,39 +332,18 @@ class InspectorPipelineSpec extends AnyFunSuite {
   // point-in-polygon join (the costly part) planned once for all three
   // toponym outcomes. The dimension files are read once per transform.
   test("plan guard: one pass per phase, one st_contains join, no cached scans") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     import org.apache.spark.sql.execution.joins.BaseJoinExec
     import org.apache.spark.sql.execution.window.WindowExec
-    import org.apache.spark.sql.util.QueryExecutionListener
 
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
-    val jobListener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    val planListener = new QueryExecutionListener {
-      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = plans.add(qe.executedPlan)
-      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = plans.add(qe.executedPlan)
-    }
     val out = java.nio.file.Files.createTempDirectory("plan-guard").resolve("ndjson").toString
-    org.apache.spark.TestListenerBus.drain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(jobListener)
-    spark.listenerManager.register(planListener)
-    try {
-      Engine.transformToNdjson(spark, golden, out)
-      org.apache.spark.TestListenerBus.drain(spark.sparkContext)
-    } finally {
-      spark.sparkContext.removeSparkListener(jobListener)
-      spark.listenerManager.unregister(planListener)
-    }
+    val (_, metrics) = QueryMetrics.measure(spark)(Engine.transformToNdjson(spark, golden, out))
 
     val helper = new AdaptiveSparkPlanHelper {}
-    val executed = plans.asScala.toSeq
+    val executed = metrics.plans
     assert(executed.nonEmpty)
-    assert(jobs.get <= 10, s"${jobs.get} Spark jobs for one transform")
+    assert(metrics.jobs <= 10, s"${metrics.jobs} Spark jobs for one transform")
     assert(executed.forall(p => helper.find(p)(_.isInstanceOf[InMemoryTableScanExec]).isEmpty),
       "a cached relation is scanned")
     val spatialJoins = executed.flatMap(p => helper.collectWithSubqueries(p) {

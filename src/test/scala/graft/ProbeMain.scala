@@ -21,7 +21,9 @@ import org.apache.spark.sql.SparkSession
   * [[QueryCatalog]] and graft.functions.exprs, all stable since round
   * 3, so the script can copy it verbatim into a parent tree that
   * predates it. Keep it standalone: it builds its own session rather
-  * than take [[Session.local]], which older parents lack.
+  * than take [[Session.local]], and keeps its own copy of the JSON
+  * string escape rather than use `graft.util.Json`; older parents lack
+  * both.
   */
 object ProbeMain {
   /** Full JSON-string escape (backslash, quote, ALL control chars):

@@ -1,9 +1,5 @@
 package graft.operators
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.TestListenerBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
@@ -24,21 +20,8 @@ class LoopJobsSpec extends AnyFunSuite {
     * jobs AQE submits for each shuffle are left out: how many of those
     * run varies from run to run of the same plan.
     */
-  private def actions(frame: => DataFrame): Int = {
-    val sc = spark.sparkContext
-    val n = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (TestListenerBus.isAction(e)) n.incrementAndGet()
-    }
-    TestListenerBus.drain(sc)
-    sc.addSparkListener(listener)
-    try {
-      frame.collect()
-      TestListenerBus.drain(sc)
-    } finally sc.removeSparkListener(listener)
-    n.get
-  }
+  private def actions(frame: => DataFrame): Long =
+    graft.QueryMetrics.measure(spark)(frame.collect())._2.actions
 
   private def query(name: String): DataFrame =
     graft.QueryCatalog.all.find(_.name == name).get.fn(spark, sf)

@@ -43,26 +43,15 @@ class LoopSpec extends AnyFunSuite {
   }
 
   test("each round runs one action: its checkpoint job") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    // AQE submits each shuffle's map stage as a job of its own; count
-    // only the actions
-    val actions = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (org.apache.spark.TestListenerBus.isAction(e)) actions.incrementAndGet()
-    }
-    val sc = spark.sparkContext
     val init = spark.range(100).toDF("x")
-    org.apache.spark.TestListenerBus.drain(sc)
-    sc.addSparkListener(listener)
-    val res = try {
-      val r = Loop(init, 4, Loop.Fixed, count_if(col("x") > 50)) { (st, _) =>
+    val (res, metrics) = graft.QueryMetrics.measure(spark) {
+      Loop(init, 4, Loop.Fixed, count_if(col("x") > 50)) { (st, _) =>
         st.groupBy((col("x") + 1).as("x")).count().select(col("x"))
       }
-      org.apache.spark.TestListenerBus.drain(sc)
-      r
-    } finally sc.removeSparkListener(listener)
-    assert(res.rounds == 4 && actions.get == 4)
+    }
+    // AQE submits each shuffle's map stage as a job of its own; count
+    // only the actions
+    assert(res.rounds == 4 && metrics.actions == 4)
   }
 
   private def path(n: Int) = {
