@@ -27,25 +27,23 @@ object Engine {
   )
 
   /** Full transform: returns the unified tagged-record DataFrame
-    * (rtype = object | relation | log). The consolidated phase's
-    * polygon side is reused by the toponym phase — the reference's
-    * build-then-probe barrier falls out of the join's build/probe
-    * contract (SURVEY §2.4 J4).
+    * (rtype = object | relation | log) of
+    * [[graft.operators.InspectorPipeline.records]]. The consolidated
+    * phase's polygon side is reused by the toponym phase — the
+    * reference's build-then-probe barrier falls out of the join's
+    * build/probe contract (SURVEY §2.4 J4).
     *
-    * The two dimension files are read once each, into driver-local
-    * frames: both phases build their sheet lookup from them without a
-    * job of their own.
+    * The two dimension files are read at the same time, once each,
+    * into driver-local frames: the sheet lookup is built from them
+    * without a job of its own.
     */
   def transform(spark: SparkSession, dirs: Dirs): DataFrame = {
     graft.functions.exprs.register(spark)
-    val sheets = onDriver(GeoJson.sheets(spark, dirs.sheets))
-    val layers = onDriver(GeoJson.layerBoroughs(spark, dirs.layerBoroughs))
-    val cons = InspectorPipeline.consolidated(
-      spark, GeoJson.consolidated(spark, dirs.consolidated), sheets, layers)
-    val topo = InspectorPipeline.toponyms(
-      spark, GeoJson.toponyms(spark, dirs.toponyms), sheets, layers,
-      cons.indexedBuildings)
-    cons.records.unionByName(topo)
+    val Seq(sheets, layers) = graft.util.Par(
+      () => onDriver(GeoJson.sheets(spark, dirs.sheets)),
+      () => onDriver(GeoJson.layerBoroughs(spark, dirs.layerBoroughs)))
+    InspectorPipeline.records(GeoJson.consolidated(spark, dirs.consolidated),
+      GeoJson.toponyms(spark, dirs.toponyms), sheets, layers)
   }
 
   /** `df` collected into a `LocalRelation`: later collects of it, and of

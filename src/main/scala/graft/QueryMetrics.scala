@@ -6,8 +6,9 @@ import scala.collection.mutable
 import org.apache.spark.graftbridge.ListenerBridge
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan, SQLExecution}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Scheduler and query-execution counters of one measured span, and
@@ -23,8 +24,13 @@ final class QueryMetrics private (spark: SparkSession)
     var taskRunMs, taskCpuNs, gcMs, deserializeMs, launchMs, waitMs = 0L
     var shuffleWriteB, shuffleReadB, spillB, planningMs = 0L
     val plans = mutable.ArrayBuffer[SparkPlan]()
-    /** Per stage: its call site, its tasks' run times (ms) and CPU (ns). */
-    val stageSite = mutable.Map[Int, String]()
+    /** Per stage: its own graft call site or else its name, the SQL
+      * execution its job serves, its tasks' run times (ms) and CPU (ns).
+      */
+    val stageSite, stageName = mutable.Map[Int, String]()
+    val stageExecution = mutable.Map[Int, Long]()
+    /** Per SQL execution: the graft call site that started it. */
+    val executionSite = mutable.Map[Long, String]()
     val stageTaskMs = mutable.Map[Int, mutable.ArrayBuffer[Long]]()
     val stageCpuNs = mutable.Map[Int, Long]().withDefaultValue(0L)
   }
@@ -56,7 +62,10 @@ final class QueryMetrics private (spark: SparkSession)
   /** The span's figures, under perfbench `Counters.toMap`'s names where
     * it has one. Stage skew is max/p50 of task run time over the stages
     * with more than one task; `top_stages` are the 10 stages with the
-    * slowest task, each with its first graft call site.
+    * slowest task, each with its first graft call site. A stage whose
+    * call site holds no graft frame (AQE submits its stage jobs from its
+    * own thread pool) takes the site of the SQL execution its job
+    * serves, so stages of queries run at the same time stay apart.
     */
   def record: ListMap[String, Any] = {
     drain()
@@ -72,7 +81,9 @@ final class QueryMetrics private (spark: SparkSession)
       val top = ranked.take(10).map { case (id, ts) =>
         ListMap("stage" -> id, "tasks" -> ts.size, "max_ms" -> ts.last,
           "p50_ms" -> p50(ts), "run_s" -> ts.sum / 1e3,
-          "cpu_s" -> c.stageCpuNs(id) / 1e9, "site" -> c.stageSite.getOrElse(id, ""))
+          "cpu_s" -> c.stageCpuNs(id) / 1e9, "site" -> c.stageSite.get(id)
+            .orElse(c.stageExecution.get(id).flatMap(c.executionSite.get))
+            .getOrElse(c.stageName.getOrElse(id, "")))
       }
       ListMap(
         "jobs" -> c.jobs, "actions" -> c.actions, "stages" -> c.stages, "tasks" -> c.tasks,
@@ -96,17 +107,28 @@ final class QueryMetrics private (spark: SparkSession)
   override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
     c.jobs += 1
     if (ListenerBridge.isAction(e)) c.actions += 1
+    Option(e.properties).flatMap(p => Option(p.getProperty(SQLExecution.EXECUTION_ID_KEY)))
+      .foreach(id => e.stageIds.foreach(c.stageExecution(_) = id.toLong))
   }
 
   override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = synchronized {
     c.stages += 1
-    // the first graft frame of the call site that is not a main says
-    // more than the stage name (often an AQE thunk)
     val si = e.stageInfo
-    c.stageSite(si.stageId) = si.details.linesIterator
-      .find(l => l.contains("graft.") && !l.contains(".main("))
-      .getOrElse(si.name.takeWhile(_ != '\n')).trim.take(90)
+    graftSite(si.details).foreach(c.stageSite(si.stageId) = _)
+    c.stageName(si.stageId) = si.name.takeWhile(_ != '\n').trim.take(90)
   }
+
+  override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+    case s: SparkListenerSQLExecutionStart =>
+      synchronized(graftSite(s.details).foreach(c.executionSite(s.executionId) = _))
+    case _ =>
+  }
+
+  /** The first graft frame of a call site that is not a main: it says
+    * more than the stage name (often an AQE thunk).
+    */
+  private def graftSite(callSite: String): Option[String] = callSite.linesIterator
+    .find(l => l.contains("graft.") && !l.contains(".main(")).map(_.trim.take(90))
 
   override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
     c.tasks += 1

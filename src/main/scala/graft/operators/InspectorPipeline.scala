@@ -25,16 +25,25 @@ import graft.sources.GeoJson
   * look up per row; the pre-flight check is an observed metric of that
   * checkpoint job; and one generator emits all of a row's records
   * through a single `inline`, as wide as the checkpoint. The two
-  * dimension tables (sheets, layer-boroughs) are small: each phase
-  * collects them on the driver into one `sheet id → (map_id, layer_id,
+  * dimension tables (sheets, layer-boroughs) are small: they are
+  * collected on the driver into one `sheet id → (map_id, layer_id,
   * year, borough)` lookup ([[sheetDims]]), so no dimension join
   * or broadcast runs per consumer; given driver-local frames, as
-  * `Engine.transform` passes, that collect runs no job. The spatial
+  * `Engine.transform` passes, that collect runs no job.
+  *
+  * The two phases' checkpoint jobs read nothing of each other, so
+  * [[records]] runs them at the same time ([[graft.util.Par]]); the
+  * reference's one real barrier, the building index before the
+  * toponym probe (building-inspector.js:404-409), is kept by building
+  * the toponym records only after both checkpoints exist. The spatial
   * join runs once: a left-outer equi-join on layerId with a bbox
   * prefilter and the exact `st_contains` as residual, whose rows carry
   * all three toponym outcomes — the layerId key gives the same pruning
-  * the reference's per-layer R-tree does (geo-indices.js:22-56), and
-  * skewed layers are handled by AQE.
+  * the reference's per-layer R-tree does (geo-indices.js:22-56). The
+  * index side is broadcast, as the reference holds the whole index in
+  * memory: read from a checkpoint it has no size estimate, and without
+  * the hint it is planned as a sort-merge join whose index side is
+  * hash-shuffled before AQE turns it into a broadcast anyway.
   */
 object InspectorPipeline {
 
@@ -108,9 +117,8 @@ object InspectorPipeline {
     * checkpoint job itself, read from that job's plan once it has run;
     * the sorted sample of missing ids is computed only when it is > 0.
     */
-  private def dedupChecked(rows: DataFrame, key: String, sheets: DataFrame,
-      layers: DataFrame, what: String, parsed: Column*): DataFrame = {
-    val dims = sheetDims(sheets, layers)
+  private def dedupChecked(rows: DataFrame, key: String, dims: Column,
+      what: String, parsed: Column*): DataFrame = {
     val w = Window.partitionBy(col(key)).orderBy(col("ingest_order"))
     val metric = s"$what without a sheet"
     val observed = rows
@@ -137,14 +145,51 @@ object InspectorPipeline {
     deduped
   }
 
-  // ------------------------------------------------------- consolidated
+  // ------------------------------------------------------------ phases
 
+  /** The consolidated phase alone (its dedup checkpoint, then its records
+    * and the index side), as [[records]] runs it.
+    */
   def consolidated(
       spark: SparkSession,
       features: DataFrame,
       sheets: DataFrame,
-      layers: DataFrame): ConsolidatedOut = {
+      layers: DataFrame): ConsolidatedOut =
+    buildingPhase(dedupBuildings(features, sheetDims(sheets, layers)))
 
+  /** The toponym phase alone, probing `indexedBuildings`, as [[records]]
+    * runs it.
+    */
+  def toponyms(
+      spark: SparkSession,
+      features: DataFrame,
+      sheets: DataFrame,
+      layers: DataFrame,
+      indexedBuildings: DataFrame): DataFrame =
+    toponymPhase(dedupToponyms(features, sheetDims(sheets, layers)), indexedBuildings)
+
+  /** Both phases' records, in one frame. The two dedup checkpoints (with
+    * their H4 checks) run at the same time; when both abort, the
+    * consolidated phase's error is the one thrown, as in the reference,
+    * which runs that phase first. The records, the index and the
+    * spatial join are then planned on the two checkpoints.
+    */
+  def records(
+      consolidated: DataFrame,
+      toponyms: DataFrame,
+      sheets: DataFrame,
+      layers: DataFrame): DataFrame = {
+    val dims = sheetDims(sheets, layers)
+    val Seq(buildings, points) = graft.util.Par(
+      () => dedupBuildings(consolidated, dims),
+      () => dedupToponyms(toponyms, dims))
+    val cons = buildingPhase(buildings)
+    cons.records.unionByName(toponymPhase(points, cons.indexedBuildings))
+  }
+
+  // ------------------------------------------------------- consolidated
+
+  private def dedupBuildings(features: DataFrame, dims: Column): DataFrame = {
     val feats = features.select(
       col("ingest_order"),
       col("feature.properties.id").as("building_id"),
@@ -161,9 +206,11 @@ object InspectorPipeline {
     // occurrence is degenerate must stay suppressed (H2;
     // building-inspector.js:92-100 vs :138-140). J1 (inner, fail-fast
     // semantics) + J2 (left outer) are the sheet lookup.
-    val deduped = dedupChecked(feats, "building_id", sheets, layers, "consolidated",
+    dedupChecked(feats, "building_id", dims, "consolidated",
       GeoJson.polygonRings(col("geom0.coordinates")).as("rings"))
+  }
 
+  private def buildingPhase(deduped: DataFrame): ConsolidatedOut = {
     // F6: drop everything (object, relations, log, addresses) when the
     // polygon's outer ring has < 4 points (building-inspector.js:138-140).
     // JS quirk preserved: a non-Polygon geometries[0] (coordinates[0]
@@ -227,13 +274,7 @@ object InspectorPipeline {
 
   // ------------------------------------------------------------ toponyms
 
-  def toponyms(
-      spark: SparkSession,
-      features: DataFrame,
-      sheets: DataFrame,
-      layers: DataFrame,
-      indexedBuildings: DataFrame): DataFrame = {
-
+  private def dedupToponyms(features: DataFrame, dims: Column): DataFrame = {
     val base = features.select(
       col("ingest_order"),
       col("feature.properties.sheet_id").as("sheet_id"),
@@ -254,11 +295,15 @@ object InspectorPipeline {
         base62_encode_hex(md5(js_coord_join_raw(col("geometry.coordinates"))))),
     )
 
-    // D2 + J1 + J2; toponym mapId comes from the SHEET's map_id
-    // (building-inspector.js:218), unlike buildings.
-    val deduped = dedupChecked(withId, "toponym_id", sheets, layers, "toponyms")
+    // D2 + J1 + J2
+    dedupChecked(withId, "toponym_id", dims, "toponyms")
+  }
+
+  private def toponymPhase(deduped: DataFrame, indexedBuildings: DataFrame): DataFrame = {
     val year = col("dim.year")
     val layerId = col("dim.layer_id")
+    // toponym mapId comes from the SHEET's map_id
+    // (building-inspector.js:218), unlike buildings
     val mapId = col("dim.map_id").cast("int")
 
     val toponym = objectRecord(col("toponym_id"), "st:Building", year, col("consensus"),
@@ -286,10 +331,11 @@ object InspectorPipeline {
         layerId.isin(broadcast(indexedBuildings.select(col("b_layer_id")))).as("has_index"),
       )
 
-    // Equi-join on layerId + bbox prefilter, exact contains as residual.
+    // Equi-join on layerId + bbox prefilter, exact contains as residual;
+    // the index side broadcast (see the Scale design above).
     val outcomes = flagged
       .join(
-        indexedBuildings,
+        broadcast(indexedBuildings),
         col("layer_id") === col("b_layer_id") &&
           col("px") >= col("b_xmin") && col("px") <= col("b_xmax") &&
           col("py") >= col("b_ymin") && col("py") <= col("b_ymax") &&

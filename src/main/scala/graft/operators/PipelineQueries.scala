@@ -138,7 +138,7 @@ object PipelineQueries {
     * over the synthesized inputs — shared by the flattened
     * `pipe_end_to_end` gate and the serialized `pipe_ndjson_lines`
     * gate. The synth inputs are localCheckpoint-ed: each is re-read
-    * under several output branches (sheets feeds both phases' dims,
+    * under several output branches (sheets feeds the dims lookup,
     * consolidated feeds 5 record branches + the spatial index), and
     * materializing them once collapses the re-derived join subtrees
     * the round-2 plan audit flagged (59 exchanges).
@@ -153,10 +153,7 @@ object PipelineQueries {
       () => synthSheets(s, d).localCheckpoint(),
       () => synthConsolidated(s, d).localCheckpoint(),
       () => synthToponyms(s, d).localCheckpoint())
-    val cons = InspectorPipeline.consolidated(s, synthCons, sheets, layers)
-    val topo = InspectorPipeline.toponyms(
-      s, synthTopo, sheets, layers, cons.indexedBuildings)
-    cons.records.unionByName(topo)
+    InspectorPipeline.records(synthCons, synthTopo, sheets, layers)
   }
 
   /** The DuckDB replay of the synthesized pipeline, as a WITH prefix

@@ -298,6 +298,38 @@ class InspectorPipelineSpec extends AnyFunSuite {
     assert(listed == (990 to 1009).mkString(", "), e.getMessage)
   }
 
+  private def toponymAt(sheetId: Int): String =
+    s"""{"type":"Feature","properties":{"sheet_id":$sheetId,"consensus":"Lost"},""" +
+      """"geometry":{"type":"Point","coordinates":[1,1]}}"""
+
+  /** The abort `transform` throws on `dirs`, once no job of it is left
+    * running: the two phases' checkpoints run at the same time, and
+    * the one that did not abort must not outlive the call.
+    */
+  private def abortOf(dirs: Engine.Dirs): IllegalStateException = {
+    val e = intercept[IllegalStateException](Engine.transform(spark, dirs).count())
+    org.apache.spark.graftbridge.ListenerBridge.drain(spark.sparkContext)
+    assert(spark.sparkContext.statusTracker.getActiveJobIds.isEmpty,
+      "a job of the aborted transform is still running")
+    e
+  }
+
+  test("H4: a toponym referencing a missing sheet aborts the toponym phase") {
+    val topo = writeTemp("h4-toponym", collection(Seq(toponymAt(862), toponymAt(999))))
+    val e = abortOf(golden.copy(toponyms = topo))
+    assert(e.getMessage.startsWith("toponyms references missing sheet id(s): 999 "), e.getMessage)
+  }
+
+  // The reference runs the consolidated phase first, so its abort is the
+  // one reported whichever phase's check finishes first.
+  test("H4: when both phases reference missing sheets, the consolidated abort wins") {
+    val cons = writeTemp("h4-both-cons", collection(Seq(feature("200", 999))))
+    val topo = writeTemp("h4-both-topo", collection(Seq(toponymAt(998))))
+    val e = abortOf(golden.copy(consolidated = cons, toponyms = topo))
+    assert(e.getMessage.startsWith("consolidated references missing sheet id(s): 999 "),
+      e.getMessage)
+  }
+
   // The no-index outcome hangs on which buildings the index holds:
   // a layer whose buildings are all degenerate (dropped, F6) or have a
   // non-Polygon geometries[0] (kept, but not indexed) has no index.
@@ -330,10 +362,12 @@ class InspectorPipelineSpec extends AnyFunSuite {
   // Each phase is one dedup checkpoint (whose job also counts missing
   // sheets) and one record generator: no cached fan-out, and the
   // point-in-polygon join (the costly part) planned once for all three
-  // toponym outcomes. The dimension files are read once per transform.
+  // toponym outcomes, with its index side broadcast as planned, never
+  // shuffled first. The dimension files are read once per transform.
   test("plan guard: one pass per phase, one st_contains join, no cached scans") {
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.execution.joins.BaseJoinExec
     import org.apache.spark.sql.execution.window.WindowExec
 
@@ -343,7 +377,7 @@ class InspectorPipelineSpec extends AnyFunSuite {
     val helper = new AdaptiveSparkPlanHelper {}
     val executed = metrics.plans
     assert(executed.nonEmpty)
-    assert(metrics.jobs <= 10, s"${metrics.jobs} Spark jobs for one transform")
+    assert(metrics.jobs <= 9, s"${metrics.jobs} Spark jobs for one transform")
     assert(executed.forall(p => helper.find(p)(_.isInstanceOf[InMemoryTableScanExec]).isEmpty),
       "a cached relation is scanned")
     val spatialJoins = executed.flatMap(p => helper.collectWithSubqueries(p) {
@@ -351,6 +385,11 @@ class InspectorPipelineSpec extends AnyFunSuite {
           if j.condition.exists(_.exists(_.isInstanceOf[graft.functions.StContains])) => j
     })
     assert(spatialJoins.size == 1, spatialJoins.mkString("\n"))
+    val indexSide = spatialJoins.head.children
+      .filter(_.output.exists(_.name == "b_rings"))
+    assert(indexSide.size == 1, spatialJoins.head)
+    assert(helper.find(indexSide.head)(_.isInstanceOf[ShuffleExchangeExec]).isEmpty,
+      s"the index side of the st_contains join is shuffled:\n${indexSide.head}")
 
     // Each phase's dedup window reads its exchange N-wide: a sub-MB
     // shuffle that AQE coalesced to one partition would run the window,

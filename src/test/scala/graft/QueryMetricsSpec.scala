@@ -31,6 +31,17 @@ class QueryMetricsSpec extends AnyFunSuite {
     assert(rec("top_stages").asInstanceOf[Seq[_]].nonEmpty)
   }
 
+  // AQE submits a shuffle's stage job from its own thread pool, whose
+  // call site has no graft frame: the stage takes its SQL execution's.
+  test("every top stage of a shuffling query names a graft call site") {
+    val spark = TestSession.spark
+    val frame = spark.range(1000).repartition(4).groupBy(col("id") % 7).count()
+    val (_, m) = QueryMetrics.measure(spark)(frame.collect())
+    val sites = m.record("top_stages").asInstanceOf[Seq[Map[String, Any]]].map(_("site"))
+    assert(sites.size >= 2, sites)
+    assert(sites.forall(_.toString.contains("graft.")), sites.mkString("\n"))
+  }
+
   test("no source file but QueryMetrics defines a Spark or query-execution listener") {
     val allowed = Paths.get("src/main/scala/graft/QueryMetrics.scala")
     val defines = """\b(extends|with|new)\s+(SparkListener|SparkFirehoseListener|SparkListenerInterface|QueryExecutionListener)\b""".r
