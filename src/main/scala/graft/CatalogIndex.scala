@@ -17,8 +17,9 @@ object CatalogIndex {
   val EndMarker = "<!-- CATALOG-INDEX-END -->"
 
   /** File:line of the Q DEFINITION site for each query name: the
-    * quoted literal as the first argument of a `Q(` call — either on
-    * the same line (`Q("name"`) or with `Q(` ending the previous line.
+    * quoted literal as the first argument of a `Q(` call or of a
+    * `…Q(` helper that builds one (`warcRoundtripQ("name", …)`) —
+    * either on the same line or with the call ending the previous line.
     * Anchoring to the constructor (rather than any quoted occurrence)
     * means a usage/doc string mentioning the name in an
     * earlier-sorting file cannot mislabel the column. Falls back to
@@ -40,8 +41,8 @@ object CatalogIndex {
             val lit = "\"" + n + "\""
             if (line.contains(lit)) {
               if (!anySite.contains(n)) anySite(n) = s"${p.toString}:${i + 1}"
-              val sameLine = line.matches(""".*\bQ\(\s*"""" + java.util.regex.Pattern.quote(n) + "\".*")
-              val prevLine = i > 0 && lines(i - 1).matches(""".*\bQ\(\s*""") &&
+              val sameLine = line.matches(""".*\b\w*Q\(\s*"""" + java.util.regex.Pattern.quote(n) + "\".*")
+              val prevLine = i > 0 && lines(i - 1).matches(""".*\b\w*Q\(\s*""") &&
                 line.trim.startsWith(lit)
               if (!defSite.contains(n) && (sameLine || prevLine))
                 defSite(n) = s"${p.toString}:${i + 1}"

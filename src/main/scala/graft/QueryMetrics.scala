@@ -25,14 +25,15 @@ final class QueryMetrics private (spark: SparkSession)
     var shuffleWriteB, shuffleReadB, spillB, planningMs = 0L
     val plans = mutable.ArrayBuffer[SparkPlan]()
     /** Per stage: its own graft call site or else its name, the SQL
-      * execution its job serves, its tasks' run times (ms) and CPU (ns).
+      * execution its job serves, its tasks' run times (ms), CPU (ns) and
+      * deserialization time (ms).
       */
     val stageSite, stageName = mutable.Map[Int, String]()
     val stageExecution = mutable.Map[Int, Long]()
     /** Per SQL execution: the graft call site that started it. */
     val executionSite = mutable.Map[Long, String]()
     val stageTaskMs = mutable.Map[Int, mutable.ArrayBuffer[Long]]()
-    val stageCpuNs = mutable.Map[Int, Long]().withDefaultValue(0L)
+    val stageCpuNs, stageDeserMs = mutable.Map[Int, Long]().withDefaultValue(0L)
   }
   private var c = new Span
 
@@ -62,7 +63,9 @@ final class QueryMetrics private (spark: SparkSession)
   /** The span's figures, under perfbench `Counters.toMap`'s names where
     * it has one. Stage skew is max/p50 of task run time over the stages
     * with more than one task; `top_stages` are the 10 stages with the
-    * slowest task, each with its first graft call site. A stage whose
+    * slowest task, each with its tasks' run, CPU and deserialization
+    * time (`deser_s`: a stage that ships a large closure shows there)
+    * and its first graft call site. A stage whose
     * call site holds no graft frame (AQE submits its stage jobs from its
     * own thread pool) takes the site of the SQL execution its job
     * serves, so stages of queries run at the same time stay apart.
@@ -81,7 +84,8 @@ final class QueryMetrics private (spark: SparkSession)
       val top = ranked.take(10).map { case (id, ts) =>
         ListMap("stage" -> id, "tasks" -> ts.size, "max_ms" -> ts.last,
           "p50_ms" -> p50(ts), "run_s" -> ts.sum / 1e3,
-          "cpu_s" -> c.stageCpuNs(id) / 1e9, "site" -> c.stageSite.get(id)
+          "cpu_s" -> c.stageCpuNs(id) / 1e9, "deser_s" -> c.stageDeserMs(id) / 1e3,
+          "site" -> c.stageSite.get(id)
             .orElse(c.stageExecution.get(id).flatMap(c.executionSite.get))
             .getOrElse(c.stageName.getOrElse(id, "")))
       }
@@ -149,6 +153,7 @@ final class QueryMetrics private (spark: SparkSession)
       c.spillB += m.diskBytesSpilled
       c.stageTaskMs.getOrElseUpdate(e.stageId, mutable.ArrayBuffer()) += m.executorRunTime
       c.stageCpuNs(e.stageId) += m.executorCpuTime
+      c.stageDeserMs(e.stageId) += m.executorDeserializeTime
     }
   }
 

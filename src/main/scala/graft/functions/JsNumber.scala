@@ -12,10 +12,17 @@ package graft.functions
   * switches to E-notation at 1e7/1e-3), so ids would diverge without
   * this reimplementation.
   *
-  * Algorithm: find the fewest significant digits that round-trip
-  * (probe `%.Pe` for P = 0..16), then lay the digits out per the spec's
-  * notation rules. Pinned against node-generated vectors in
-  * JsNumberSpec.
+  * Algorithm: take the significant digits and the decimal exponent
+  * from one `Double.toString` (FloatingDecimal's digits, which read
+  * back as the same double but are not always the fewest: 5e-324 prints
+  * as 4.9E-324). For k = 1, 2, … round those digits half-up to k
+  * digits and keep the first candidate that reads back as the same
+  * double, then lay the digits out per the spec's notation rules. On
+  * JDK 17 `String.format("%.{k-1}e")` rounds the same digits half-up,
+  * so this is the digit search of probing `%.Pe` for P = 0..17, with
+  * one conversion in place of up to 18. Pinned against node-generated
+  * vectors, and against that `String.format` search over a million
+  * seeded doubles, in JsNumberSpec.
   */
 object JsNumber {
 
@@ -26,26 +33,42 @@ object JsNumber {
     if (d == 0.0) return "0" // covers -0.0: JS String(-0) === "0"
     if (d < 0) return "-" + format(-d)
 
-    // Shortest digit string s (no trailing zeros) and exponent n such
-    // that d = 0.s * 10^n.
+    // Double.toString's digits ds (no leading or trailing zeros) and
+    // exponent n0 such that d = 0.ds * 10^n0.
+    val s = java.lang.Double.toString(d)
+    val ePos = s.indexOf('E')
+    val mant = if (ePos < 0) s else s.substring(0, ePos)
+    val dot = mant.indexOf('.')
+    val all = mant.substring(0, dot) + mant.substring(dot + 1)
+    var lead = 0
+    while (all.charAt(lead) == '0') lead += 1
+    var end = all.length
+    while (all.charAt(end - 1) == '0') end -= 1
+    val ds = all.substring(lead, end)
+    val n0 = dot - lead + (if (ePos < 0) 0 else Integer.parseInt(s.substring(ePos + 1)))
+
+    // The fewest digits, ds rounded half-up, that read back as d, and
+    // the exponent n such that d = 0.digits * 10^n. ds itself reads
+    // back as d (Double.toString's contract), so it ends the search.
     var digits: String = null
-    var n = 0
-    var p = 0
-    while (digits == null && p <= 17) {
-      val s = String.format("%." + p + "e", Double.box(d))
-      if (java.lang.Double.parseDouble(s) == d) {
-        val e = s.indexOf('e')
-        val mant = s.substring(0, e).replace(".", "")
-        val exp = Integer.parseInt(s.substring(e + 1))
-        val trimmed = {
-          var end = mant.length
-          while (end > 1 && mant.charAt(end - 1) == '0') end -= 1
-          mant.substring(0, end)
+    var n = n0
+    var len = 1
+    while (digits == null) {
+      if (len >= ds.length || len > 18) digits = ds
+      else {
+        var m = 0L
+        var i = 0
+        while (i < len) { m = m * 10 + (ds.charAt(i) - '0'); i += 1 }
+        if (ds.charAt(len) >= '5') m += 1
+        if (java.lang.Double.parseDouble(s"${m}E${n0 - len}") == d) {
+          val r = java.lang.Long.toString(m) // len + 1 digits after a carry
+          var e = r.length
+          while (r.charAt(e - 1) == '0') e -= 1
+          digits = r.substring(0, e)
+          n = n0 + r.length - len
         }
-        digits = trimmed
-        n = exp + 1
+        len += 1
       }
-      p += 1
     }
     val k = digits.length
     if (k <= n && n <= 21) {

@@ -34,7 +34,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * file's head. Both layouts parse in parallel: a FeatureCollection
   * through the `geojson` source ([[graft.sources.v2.GeoJsonDataSource]]),
   * which splits the file into byte ranges of whole features, one per
-  * core (capped by `spark.sql.files.maxPartitionBytes`), and
+  * core (capped by `spark.sql.files.maxPartitionBytes`), and reads them
+  * with the session's Hadoop conf broadcast once per scan, and
   * [[featuresNdjson]] through Spark's line-split JSON reader.
   */
 object GeoJson {

@@ -8,6 +8,7 @@ import com.fasterxml.jackson.core.{JsonFactory, JsonProcessingException, JsonTok
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -49,9 +50,12 @@ import org.apache.spark.util.SerializableConfiguration
   * `ingest_order` globally exact.
   *
   * Files are read through the session's Hadoop FileSystem, so any
-  * Hadoop path works. A file that is not one JSON object, or ends
-  * before its root object closes (a truncated download), fails the
-  * scan with an error naming the file; a root object without a
+  * Hadoop path works. The reader factory carries that Hadoop conf as a
+  * broadcast made once per scan, as Spark's own file scans do: a task
+  * whose closure reaches the scan ships the broadcast's id, not the
+  * conf (over 100 KB serialized). A file that is not one JSON object,
+  * or ends before its root object closes (a truncated download), fails
+  * the scan with an error naming the file; a root object without a
   * `features` array yields no rows.
   */
 class GeoJsonDataSource extends TableProvider with DataSourceRegister {
@@ -172,7 +176,7 @@ private[v2] class GeoJsonTable(paths: Seq[String]) extends Table with SupportsRe
       override def planInputPartitions(): Array[InputPartition] =
         paths.flatMap(GeoJsonDataSource.partitionsFor(spark, conf, _)).toArray
       override def createReaderFactory(): PartitionReaderFactory =
-        new GeoJsonReaderFactory(new SerializableConfiguration(conf))
+        GeoJsonReaderFactory(spark, conf)
       override def toMicroBatchStream(checkpointLocation: String)
           : org.apache.spark.sql.connector.read.streaming.MicroBatchStream = {
         require(paths.size == 1 && new java.io.File(paths.head).isDirectory,
@@ -225,7 +229,7 @@ private[v2] class GeoJsonMicroBatchStream(dir: String, spark: SparkSession, conf
       .flatMap(GeoJsonDataSource.partitionsFor(spark, conf, _)).toArray
   }
   override def createReaderFactory(): PartitionReaderFactory =
-    new GeoJsonReaderFactory(new SerializableConfiguration(conf))
+    GeoJsonReaderFactory(spark, conf)
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
 }
@@ -240,10 +244,16 @@ private[v2] case class GeoJsonOffset(files: Seq[String])
 private[v2] case class GeoJsonInputPartition(
     path: String, start: Long, end: Long, firstIndex: Long) extends InputPartition
 
-private[v2] class GeoJsonReaderFactory(conf: SerializableConfiguration)
+private[v2] class GeoJsonReaderFactory(conf: Broadcast[SerializableConfiguration])
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new GeoJsonRangeReader(partition.asInstanceOf[GeoJsonInputPartition], conf.value)
+    new GeoJsonRangeReader(partition.asInstanceOf[GeoJsonInputPartition], conf.value.value)
+}
+
+private[v2] object GeoJsonReaderFactory {
+  /** A factory reading with `conf`, broadcast once for the scan. */
+  def apply(spark: SparkSession, conf: Configuration): GeoJsonReaderFactory =
+    new GeoJsonReaderFactory(spark.sparkContext.broadcast(new SerializableConfiguration(conf)))
 }
 
 /** Reads one byte range of consecutive features into a buffer

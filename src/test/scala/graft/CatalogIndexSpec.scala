@@ -29,4 +29,26 @@ class CatalogIndexSpec extends AnyFunSuite {
     // every row resolved a real definition site
     assert(!section.contains("| ? |"), "index has unresolved file:line rows")
   }
+
+  test("each index row's file:line holds its name as the first argument of a Q( or …Q( call") {
+    val f = new java.io.File("COVERAGE.md")
+    assume(f.exists(), "COVERAGE.md absent on this machine")
+    val text = scala.io.Source.fromFile(f, "UTF-8").mkString
+    val section = text.substring(text.indexOf(CatalogIndex.StartMarker),
+      text.indexOf(CatalogIndex.EndMarker))
+    val row = "\\| `([a-z0-9_]+)` \\| [^|]+ \\| ([^|:]+):(\\d+) \\|".r
+    val rows = row.findAllMatchIn(section).map(m => (m.group(1), m.group(2), m.group(3).toInt)).toSeq
+    assert(rows.size == QueryCatalog.all.size)
+    val call = "\\b\\w*Q\\(\\s*"
+    val wrong = rows.filterNot { case (name, file, line) =>
+      val lines = java.nio.file.Files.readAllLines(java.nio.file.Paths.get(file))
+      val lit = "\"" + name + "\""
+      line <= lines.size && (
+        (call + java.util.regex.Pattern.quote(lit)).r.findFirstIn(lines.get(line - 1)).isDefined ||
+          line > 1 && lines.get(line - 1).trim.startsWith(lit) &&
+          (call + "$").r.findFirstIn(lines.get(line - 2)).isDefined)
+    }
+    if (wrong.nonEmpty) fail("rows not at a Q( call with their name (run graft.CatalogIndex): " +
+      wrong.map { case (n, f, l) => s"$n at $f:$l" }.mkString(", "))
+  }
 }

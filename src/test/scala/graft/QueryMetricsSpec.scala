@@ -28,7 +28,13 @@ class QueryMetricsSpec extends AnyFunSuite {
     assert(perfbench.filterNot(rec.contains).isEmpty)
     assert(rec("tasks").asInstanceOf[Long] >= 4 && rec("failed_tasks") == 0L)
     assert(rec("executions") == 1 && rec("exchanges").asInstanceOf[Int] >= 1)
-    assert(rec("top_stages").asInstanceOf[Seq[_]].nonEmpty)
+    val top = rec("top_stages").asInstanceOf[Seq[Map[String, Any]]]
+    assert(top.nonEmpty)
+    // per-stage deserialization: present, and a share of the span's
+    assert(top.forall(_.contains("deser_s")), top)
+    val stageDeser = top.map(_("deser_s").asInstanceOf[Double]).sum
+    assert(stageDeser <= rec("deserialize_s").asInstanceOf[Double] + 1e-9,
+      s"top stages' deser_s sum $stageDeser > deserialize_s ${rec("deserialize_s")}")
   }
 
   // AQE submits a shuffle's stage job from its own thread pool, whose

@@ -98,6 +98,73 @@ class JsNumberSpec extends AnyFunSuite {
       assert(java.lang.Double.parseDouble(JsNumber.format(d)) == d, s"for $d")
     }
   }
+
+  /** The digit search `format` replaced: probe `%.Pe` for P = 0..17
+    * and keep the first that reads back as `d`, then the same notation
+    * layout. Locale.ROOT keeps the probe's decimal point a '.'.
+    */
+  private def formatByStringFormat(d: Double): String = {
+    if (java.lang.Double.isNaN(d)) return "NaN"
+    if (d == java.lang.Double.POSITIVE_INFINITY) return "Infinity"
+    if (d == java.lang.Double.NEGATIVE_INFINITY) return "-Infinity"
+    if (d == 0.0) return "0"
+    if (d < 0) return "-" + formatByStringFormat(-d)
+    var digits: String = null
+    var n = 0
+    var p = 0
+    while (digits == null && p <= 17) {
+      val s = String.format(java.util.Locale.ROOT, "%." + p + "e", Double.box(d))
+      if (java.lang.Double.parseDouble(s) == d) {
+        val e = s.indexOf('e')
+        val mant = s.substring(0, e).replace(".", "")
+        var end = mant.length
+        while (end > 1 && mant.charAt(end - 1) == '0') end -= 1
+        digits = mant.substring(0, end)
+        n = Integer.parseInt(s.substring(e + 1)) + 1
+      }
+      p += 1
+    }
+    val k = digits.length
+    if (k <= n && n <= 21) digits + "0" * (n - k)
+    else if (0 < n && n <= 21) digits.substring(0, n) + "." + digits.substring(n)
+    else if (-6 < n && n <= 0) "0." + "0" * (-n) + digits
+    else (if (k == 1) digits else digits.substring(0, 1) + "." + digits.substring(1)) +
+      "e" + (if (n - 1 >= 0) "+" else "-") + math.abs(n - 1)
+  }
+
+  test("format equals the String.format digit search on a million seeded doubles") {
+    val rnd = new scala.util.Random(20261019)
+    def pow10(e: Int) = java.lang.Double.parseDouble(s"1E$e")
+    val edges = Seq(Double.MinPositiveValue, Double.MaxValue, java.lang.Double.MIN_NORMAL,
+      1e21, 1e-7, 1e-6, 1e7, 1e-3, 0.15, 2.5, 1.005, 0.5, 9.5, 0.45, 1.25e-5) ++
+      Seq(1e21, 1e-7, 1e-6, 1e7, 1e-3).flatMap(x => Seq(math.nextDown(x), math.nextUp(x)))
+    val randomBits = Iterator.continually(java.lang.Double.longBitsToDouble(rnd.nextLong()))
+      .filter(d => !d.isNaN && !d.isInfinite).take(300000)
+    // 1e-20 … 1e21: full-precision fractions, and 1–6 digit decimals
+    val scaled = Iterator.fill(200000) {
+      val e = rnd.nextInt(42) - 20
+      if (rnd.nextBoolean()) rnd.nextDouble() * pow10(e)
+      else java.lang.Double.parseDouble(s"${rnd.nextInt(999999) + 1}E${e - 6}")
+    }
+    // lon/lat with 6–17 significant digits, like the fixtures
+    val lonLat = Iterator.fill(300000) {
+      val places = 4 + rnd.nextInt(12)
+      val v = (rnd.nextDouble() - 0.5) * (if (rnd.nextBoolean()) 360 else 180)
+      math.rint(v * pow10(places)) / pow10(places)
+    }
+    val integers = Iterator.fill(200000) {
+      (rnd.nextLong() >>> (11 + rnd.nextInt(53))).toDouble
+    }
+    val values = (edges.iterator ++ randomBits ++ scaled ++ lonLat ++ integers).toArray
+    assert(values.length >= 1000000)
+    val differ = java.util.Arrays.stream(values).parallel()
+      .filter(d => JsNumber.format(d) != formatByStringFormat(d)).limit(5).toArray
+    if (differ.nonEmpty) fail(differ.map(d =>
+      s"${java.lang.Double.toString(d)}: ${JsNumber.format(d)} != ${formatByStringFormat(d)}")
+      .mkString("; "))
+    assert(JsNumber.format(Double.MinPositiveValue) == "5e-324")
+    assert(JsNumber.format(Double.MaxValue) == "1.7976931348623157e+308")
+  }
 }
 
 class VectorKernelSpec extends AnyFunSuite {

@@ -1,8 +1,10 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.util.SerializableConfiguration
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The DSv2 GeoJSON source, and [[GeoJson.features]] on top of it,
@@ -232,6 +234,24 @@ class GeoJsonV2Spec extends AnyFunSuite {
     val df = GeoJson.features(spark, path, GeoJson.toponymFeatureSchema)
     assert(df.rdd.getNumPartitions >= math.min(spark.sparkContext.defaultParallelism, n))
     assert(df.count() == n)
+  }
+
+  // The Hadoop conf (about 110 KB serialized) rides a broadcast: a
+  // scan's task payload stays near Spark's own `json` reader's (~14 KB).
+  test("a geojson scan's task payload carries no Hadoop conf of its own") {
+    val df = spark.read.format("geojson").load(fixture("consolidated.geojson"))
+    val bytes = new java.io.ByteArrayOutputStream()
+    val out = new java.io.ObjectOutputStream(bytes)
+    try out.writeObject(df.queryExecution.toRdd) finally out.close()
+    assert(bytes.size < 32 * 1024, s"the scan's RDD serializes to ${bytes.size} bytes")
+    val factory = df.queryExecution.executedPlan.collectFirst {
+      case s: BatchScanExec => s.readerFactory
+    }.get
+    val held = factory.getClass.getDeclaredFields.toSeq.map { f =>
+      f.setAccessible(true)
+      f.get(factory)
+    }
+    assert(!held.exists(_.isInstanceOf[SerializableConfiguration]), held)
   }
 
   private def jsonStr(s: String): String =
