@@ -6,11 +6,13 @@ import org.scalatest.funsuite.AnyFunSuite
   * every catalogue query must have exactly one index row, and the
   * index must not list queries that no longer exist — so adding or
   * renaming an operator without re-running `graft.CatalogIndex` fails
-  * here, not in a judge's manual diff.
+  * here, not in a judge's manual diff. Each row's file:line must be
+  * the query's definition site.
   */
 class CatalogIndexSpec extends AnyFunSuite {
 
-  test("COVERAGE.md catalogue index matches QueryCatalog exactly") {
+  /** The generated index section of COVERAGE.md. */
+  private def indexSection(): String = {
     val f = new java.io.File("COVERAGE.md")
     assume(f.exists(), "COVERAGE.md absent on this machine")
     val text = scala.io.Source.fromFile(f, "UTF-8").mkString
@@ -18,7 +20,11 @@ class CatalogIndexSpec extends AnyFunSuite {
     val end = text.indexOf(CatalogIndex.EndMarker)
     assert(start >= 0 && end > start,
       "COVERAGE.md has no generated catalogue index — run graft.CatalogIndex")
-    val section = text.substring(start, end)
+    text.substring(start, end)
+  }
+
+  test("COVERAGE.md catalogue index matches QueryCatalog exactly") {
+    val section = indexSection()
     val listed = "\\| `([a-z0-9_]+)` \\|".r
       .findAllMatchIn(section).map(_.group(1)).toSeq
     val catalogue = QueryCatalog.all.map(_.name)
@@ -31,13 +37,9 @@ class CatalogIndexSpec extends AnyFunSuite {
   }
 
   test("each index row's file:line holds its name as the first argument of a Q( or …Q( call") {
-    val f = new java.io.File("COVERAGE.md")
-    assume(f.exists(), "COVERAGE.md absent on this machine")
-    val text = scala.io.Source.fromFile(f, "UTF-8").mkString
-    val section = text.substring(text.indexOf(CatalogIndex.StartMarker),
-      text.indexOf(CatalogIndex.EndMarker))
     val row = "\\| `([a-z0-9_]+)` \\| [^|]+ \\| ([^|:]+):(\\d+) \\|".r
-    val rows = row.findAllMatchIn(section).map(m => (m.group(1), m.group(2), m.group(3).toInt)).toSeq
+    val rows = row.findAllMatchIn(indexSection())
+      .map(m => (m.group(1), m.group(2), m.group(3).toInt)).toSeq
     assert(rows.size == QueryCatalog.all.size)
     val call = "\\b\\w*Q\\(\\s*"
     val wrong = rows.filterNot { case (name, file, line) =>
