@@ -51,7 +51,8 @@ import org.apache.spark.util.SerializableConfiguration
   *
   * Files are read through the session's Hadoop FileSystem, so any
   * Hadoop path works. The reader factory carries that Hadoop conf as a
-  * broadcast made once per scan, as Spark's own file scans do: a task
+  * broadcast made once per scan (the scan keeps its one factory), as
+  * Spark's own file scans do: a task
   * whose closure reaches the scan ships the broadcast's id, not the
   * conf (over 100 KB serialized). A file that is not one JSON object,
   * or ends before its root object closes (a truncated download), fails
@@ -175,8 +176,9 @@ private[v2] class GeoJsonTable(paths: Seq[String]) extends Table with SupportsRe
       override def toBatch: Batch = this
       override def planInputPartitions(): Array[InputPartition] =
         paths.flatMap(GeoJsonDataSource.partitionsFor(spark, conf, _)).toArray
-      override def createReaderFactory(): PartitionReaderFactory =
-        GeoJsonReaderFactory(spark, conf)
+      // one factory, so one conf broadcast, however often Spark asks
+      private lazy val readerFactory = GeoJsonReaderFactory(spark, conf)
+      override def createReaderFactory(): PartitionReaderFactory = readerFactory
       override def toMicroBatchStream(checkpointLocation: String)
           : org.apache.spark.sql.connector.read.streaming.MicroBatchStream = {
         require(paths.size == 1 && new java.io.File(paths.head).isDirectory,
@@ -228,8 +230,8 @@ private[v2] class GeoJsonMicroBatchStream(dir: String, spark: SparkSession, conf
     end.asInstanceOf[GeoJsonOffset].files.filterNot(seen)
       .flatMap(GeoJsonDataSource.partitionsFor(spark, conf, _)).toArray
   }
-  override def createReaderFactory(): PartitionReaderFactory =
-    GeoJsonReaderFactory(spark, conf)
+  private lazy val readerFactory = GeoJsonReaderFactory(spark, conf)
+  override def createReaderFactory(): PartitionReaderFactory = readerFactory
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
 }

@@ -452,7 +452,7 @@ private[v2] class WarcTable(
       : org.apache.spark.sql.connector.write.WriteBuilder = {
     require(rawPath.nonEmpty && !rawPath.contains(","),
       s"warc sink needs exactly one directory path, got '$rawPath'")
-    new WarcWriteBuilder(info, rawPath)
+    new PartFileWriteBuilder(rawPath, WarcFormat(info))
   }
 }
 

@@ -1,17 +1,20 @@
 package graft.sources.v2
 
-import java.io.{BufferedOutputStream, File, FileOutputStream}
+import java.io.{BufferedOutputStream, OutputStream}
 import java.nio.charset.StandardCharsets
-import java.util.zip.GZIPOutputStream
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.write._
-import org.apache.spark.sql.types.{BinaryType, StringType, StructType}
+import org.apache.spark.sql.connector.write.LogicalWriteInfo
+import org.apache.spark.sql.types.{BinaryType, StringType}
 
-/** DSv2 batch write for WARC part files:
+/** WARC part files for the DSv2 batch write:
   *
   *   df.write.format("warc").option("compression", "gzip")
   *     .mode("overwrite").save(dir)
+  *
+  * `dir` is any Hadoop path: files are made, renamed and deleted by
+  * the shared part-file protocol ([[PartFileWriteBuilder]]), which
+  * also leaves `_SUCCESS` at job commit (readers skip `_` names).
   *
   * Input contract: ONE string column (text payloads,
   * [[graft.sources.Warc.render]]) or ONE binary column (encoded HTTP
@@ -28,18 +31,19 @@ import org.apache.spark.sql.types.{BinaryType, StringType, StructType}
   * Whole-file gzip (what a generic text sink with compression would
   * emit) would destroy that.
   *
-  * Commit protocol: each task writes `part-<partition>-<task>` (task
-  * attempt ids make concurrent speculative attempts write distinct
-  * files), task commit keeps the file, task abort deletes it, job
-  * abort deletes every committed file. Overwrite mode clears prior
-  * part files on the driver before tasks launch (SupportsTruncate).
+  * Each part file `part-<partition>-<task><ext>` gets a sidecar split
+  * index `.part-<partition>-<task><ext>.idx`, committed after it.
   */
-private[v2] class WarcWriteBuilder(info: LogicalWriteInfo, dir: String)
-    extends WriteBuilder with SupportsTruncate {
-  private var doTruncate = false
-  override def truncate(): WriteBuilder = { doTruncate = true; this }
+private[v2] case class WarcFormat(
+    gzip: Boolean, binary: Boolean, warcinfo: Boolean, warcinfoFilename: Option[String])
+    extends PartFormat {
+  val ext: String = if (gzip) ".warc.gz" else ".warc"
+  def open(out: OutputStream, name: String): RecordWriter = new WarcRecordWriter(out, name, this)
+}
 
-  override def build(): Write = {
+private[v2] object WarcFormat {
+  /** The format a write's schema and options ask for. */
+  def apply(info: LogicalWriteInfo): WarcFormat = {
     val schema = info.schema()
     // string for text-payload renders (Warc.render); BINARY for
     // encoded-payload renders (Warc.renderHttpEncoded — gzip bodies
@@ -70,58 +74,8 @@ private[v2] class WarcWriteBuilder(info: LogicalWriteInfo, dir: String)
     val warcinfoFilename = Option(info.options.get("warcinfoFilename"))
     require(warcinfo || warcinfoFilename.isEmpty,
       "warcinfoFilename needs warcinfo=true")
-    new WarcWrite(dir, gzip, doTruncate,
-      binary = schema.head.dataType == BinaryType,
-      warcinfo = warcinfo, warcinfoFilename = warcinfoFilename)
+    WarcFormat(gzip, binary = schema.head.dataType == BinaryType, warcinfo, warcinfoFilename)
   }
-}
-
-private[v2] class WarcWrite(
-    dir: String, gzip: Boolean, truncate: Boolean, binary: Boolean,
-    warcinfo: Boolean = false, warcinfoFilename: Option[String] = None)
-    extends Write with BatchWrite {
-  override def toBatch: BatchWrite = this
-
-  override def createBatchWriterFactory(
-      info: PhysicalWriteInfo): DataWriterFactory = {
-    val d = new File(dir)
-    if (!d.exists()) require(d.mkdirs(), s"cannot create warc sink dir $dir")
-    if (truncate) {
-      // clear committed part files AND orphaned in-progress dotfiles
-      // (a previous run's JVM death leaves the latter behind)
-      val stale = Option(d.listFiles()).getOrElse(Array.empty)
-        .filter(f => f.isFile && (f.getName.startsWith("part-") ||
-          f.getName.startsWith(".part-")))
-      stale.foreach(f => require(f.delete(), s"cannot clear stale $f"))
-    }
-    new WarcWriterFactory(dir, gzip, binary, warcinfo, warcinfoFilename)
-  }
-
-  override def commit(messages: Array[WriterCommitMessage]): Unit = ()
-  override def abort(messages: Array[WriterCommitMessage]): Unit =
-    messages.foreach {
-      case WarcCommitMessage(path) if path.nonEmpty =>
-        val f = new File(path)
-        f.delete()
-        // the companion sidecar index must not outlive its part file:
-        // an orphaned idx next to a later same-named file is exactly
-        // the stale-adoption case the freshness check guards against
-        new File(f.getParentFile, "." + f.getName + ".idx").delete()
-      case _ => ()
-    }
-}
-
-private[v2] case class WarcCommitMessage(path: String)
-    extends WriterCommitMessage
-
-private[v2] class WarcWriterFactory(
-    dir: String, gzip: Boolean, binary: Boolean,
-    warcinfo: Boolean = false, warcinfoFilename: Option[String] = None)
-    extends DataWriterFactory {
-  override def createWriter(
-      partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new WarcDataWriter(dir, gzip, partitionId, taskId, binary,
-      warcinfo, warcinfoFilename)
 }
 
 /** Pass-through stream folding the head/tail content fingerprint
@@ -182,25 +136,15 @@ private[sources] final class FingerprintStream(under: java.io.OutputStream)
   }
 }
 
-private[v2] class WarcDataWriter(
-    dir: String, gzip: Boolean, partitionId: Int, taskId: Long,
-    binary: Boolean = false, warcinfo: Boolean = false,
-    warcinfoFilename: Option[String] = None)
-    extends DataWriter[InternalRow] {
-  private val ext = if (gzip) ".warc.gz" else ".warc"
-  private val path = f"$dir/part-$partitionId%05d-$taskId$ext"
-  // task-commit protocol: write under a DOTTED temp name (expandPaths
-  // never lists dotfiles, so a half-written file is invisible to
-  // readers even if the JVM dies without abort()), rename to the final
-  // name only at task commit — a retried task can then never leave a
-  // partial part file next to its successor's output
-  private val tmpPath = f"$dir/.part-$partitionId%05d-$taskId$ext.inprogress"
-  private val tmpIdxPath = f"$dir/.part-$partitionId%05d-$taskId$ext.idx.inprogress"
-  // opened on the FIRST record: an empty input partition must not
-  // leave an empty part file behind
-  private var out: BufferedOutputStream = _
+/** Writes one part file's records (opened by the protocol at the
+  * partition's first row) and its sidecar index.
+  */
+private[v2] class WarcRecordWriter(raw: OutputStream, name: String, format: WarcFormat)
+    extends RecordWriter {
+  import format.{gzip, binary}
   // fingerprint tap under the buffer (head/tail CRC for the sidecar)
-  private var fp: FingerprintStream = _
+  private val fp = new FingerprintStream(raw)
+  private val out = new BufferedOutputStream(fp, 1 << 20)
   // ONE deflater + CRC per task, reset() per member — a fresh
   // java.util.zip.GZIPOutputStream per record would allocate (and,
   // since finish() does not end() it, LEAK) a native zlib stream per
@@ -270,14 +214,14 @@ private[v2] class WarcDataWriter(
   }
 
   /** The file-head warcinfo record (ISO 28500 §6.2): WARC-Filename
-    * names the part file (or the caller's override — see the builder),
+    * names the part file (or the caller's override, see [[WarcFormat]]),
     * the payload is the fixed [[graft.sources.Warc.WarcinfoFields]],
     * and the record id derives from the filename, so the whole record
     * is deterministic given the name. Emitted through [[emitRecord]],
     * so offsets, sidecar marks, and `record_index` all account for it.
     */
   private def writeWarcinfo(): Unit = {
-    val fname = warcinfoFilename.getOrElse(new File(path).getName)
+    val fname = format.warcinfoFilename.getOrElse(name)
     val payload =
       graft.sources.Warc.WarcinfoFields.getBytes(StandardCharsets.UTF_8)
     val md = java.security.MessageDigest.getInstance("MD5")
@@ -294,14 +238,11 @@ private[v2] class WarcDataWriter(
     emitRecord(head ++ payload ++ "\r\n\r\n".getBytes(StandardCharsets.UTF_8))
   }
 
+  // the writer opens with the partition's first row, so an empty
+  // partition leaves neither a file nor a warcinfo-only one
+  if (format.warcinfo) writeWarcinfo()
+
   override def write(row: InternalRow): Unit = {
-    if (out == null) {
-      fp = new FingerprintStream(new FileOutputStream(tmpPath))
-      out = new BufferedOutputStream(fp, 1 << 20)
-      // lazily with the first data record: an empty partition leaves
-      // no file, so it must not leave a warcinfo-only one either
-      if (warcinfo) writeWarcinfo()
-    }
     val s = if (binary) row.getBinary(0) else row.getUTF8String(0).getBytes
     // the rendered record ends "...payload\r\n"; the writer's CRLF
     // completes the spec's double-CRLF record separator. gz needs the
@@ -317,44 +258,18 @@ private[v2] class WarcDataWriter(
     }
   }
 
-  private def release(): Unit = {
+  override def close(): Unit = {
     if (deflater != null) deflater.end()
-    if (out != null) out.close()
+    out.close()
   }
 
-  override def commit(): WriterCommitMessage = {
-    release()
-    if (out == null) return WarcCommitMessage("")
-    // ORDER MATTERS: move the data file to its final name FIRST, then
-    // write the sidecar (via its own temp+rename) — a final-named idx
-    // must never exist without its final-named data file, or a crash
-    // between the two leaves an orphan for a later same-named part to
-    // adopt (the fingerprint would reject it, but the invariant is
-    // cheaper than the recovery)
-    java.nio.file.Files.move(
-      java.nio.file.Paths.get(tmpPath), java.nio.file.Paths.get(path),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    val f = new File(path)
-    val idx = new File(f.getParentFile, "." + f.getName + ".idx")
+  /** `.{name}.idx`: the magic, byte and record totals and content
+    * fingerprint, then one `offset records` mark per line.
+    */
+  override def sidecar: Option[(String, Array[Byte])] = {
     val lines = new StringBuilder(
       s"${WarcDataSource.SidecarMagic} $bytesOut $recordsOut ${fp.fingerprint}\n")
     for ((off, recs) <- marks.result()) lines.append(s"$off $recs\n")
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(tmpIdxPath), lines.toString.getBytes("UTF-8"))
-    java.nio.file.Files.move(
-      java.nio.file.Paths.get(tmpIdxPath), idx.toPath,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    WarcCommitMessage(path)
+    Some(("." + name + ".idx", lines.toString.getBytes(StandardCharsets.UTF_8)))
   }
-  override def abort(): Unit = {
-    release()
-    // every name this attempt can have created: the in-progress data
-    // file, the in-progress idx, and — when commit() failed between
-    // its two moves — the final-named data file (attempt-unique names,
-    // so this can never delete another attempt's output)
-    new File(tmpPath).delete()
-    new File(tmpIdxPath).delete()
-    new File(path).delete()
-  }
-  override def close(): Unit = release()
 }

@@ -81,6 +81,12 @@ object StreamingOps {
     * `NdjsonSink.lines`. The reference's strictly-sequential write
     * order is not semantic (SURVEY §2.7); lines land partitioned and
     * batched, canonicalized by sort in the parity spec.
+    *
+    * It stays on Spark's `text` file sink, not the batch sink's
+    * part-file writer: the file sink's `_spark_metadata` log records
+    * which files each batch committed, which is what makes a restarted
+    * query's output exactly-once, and the batch writer keeps no such
+    * log.
     */
   def writeNdjsonStream(
       records: DataFrame, path: String, checkpoint: String) =

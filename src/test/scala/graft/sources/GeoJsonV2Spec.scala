@@ -254,6 +254,16 @@ class GeoJsonV2Spec extends AnyFunSuite {
     assert(!held.exists(_.isInstanceOf[SerializableConfiguration]), held)
   }
 
+  // Spark asks a scan for its reader factory more than once; each
+  // factory broadcasts the conf, so the scan keeps the one it made.
+  test("a planned geojson scan hands out one reader factory") {
+    val df = spark.read.format("geojson").load(fixture("consolidated.geojson"))
+    val batch = df.queryExecution.executedPlan.collectFirst {
+      case s: BatchScanExec => s.batch
+    }.get
+    assert(batch.createReaderFactory() eq batch.createReaderFactory())
+  }
+
   private def jsonStr(s: String): String =
     "\"" + s.flatMap {
       case '"' => "\\\""

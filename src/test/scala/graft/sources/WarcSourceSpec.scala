@@ -902,6 +902,26 @@ class WarcSourceSpec extends AnyFunSuite {
     } finally rm(dir)
   }
 
+  test("write: a file: URI lands at its path, like a plain path") {
+    import spark.implicits._
+    // a rendered row ends in the payload's CRLF; the writer adds the second
+    val rows = (1 to 50).map(i => new String(
+      record(s"http://a.example/$i", s"page $i".getBytes(StandardCharsets.UTF_8)),
+      StandardCharsets.UTF_8).dropRight(2)).toDF("record").repartition(3)
+    val dir = Files.createTempDirectory("warc-spec-uri")
+    try {
+      for (target <- Seq(dir.resolve("plain").toString, dir.resolve("uri").toUri.toString))
+        rows.write.format("warc").mode("overwrite").save(target)
+      def read(sub: String) = spark.read.format("warc").load(dir.resolve(sub).toString)
+        .selectExpr("record_id", "payload").collect()
+        .map(r => (r.getString(0), new String(r.getAs[Array[Byte]](1), StandardCharsets.UTF_8)))
+        .toSeq.sorted
+      val plain = read("plain")
+      assert(plain.size == 50)
+      assert(read("uri") == plain)
+    } finally rm(dir)
+  }
+
   private def rm(p: Path): Unit = {
     if (Files.isDirectory(p)) {
       val l = Files.list(p)
