@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Q
 import graft.model.Tables
+import graft.sources.Warc
 
 /** Driver-gated END-TO-END run of the inspector pipeline: the full
   * consolidated + toponym dataflow ([[InspectorPipeline]], the same
@@ -1272,8 +1273,7 @@ object PipelineQueries {
       val base = EventQueries.gateTempDir("graft-warc-gate")
       try {
         val dir = s"$base/warc"
-        if (gz) graft.sources.Warc.writeGzip(Tables.documents(s, d), dir)
-        else graft.sources.Warc.write(Tables.documents(s, d), dir)
+        Warc.save(Warc.render(Tables.documents(s, d)), dir, gzip = gz)
         s.read.format("warc")
           .option("chunkBytes", (256 * 1024).toString)
           .load(dir)
@@ -1315,9 +1315,9 @@ object PipelineQueries {
   private val warcRoundtrip = warcRoundtripQ("pipe_warc_roundtrip", gz = false)
 
   // The same gate replayed over a `.warc.gz` fixture (per-record gzip
-  // members — the Common Crawl layout): [[graft.sources.Warc.writeGzip]]
-  // renders one gzip member per record through the DSv2 warc sink, the
-  // splittable member-walking reader parses them back under forced
+  // members — the Common Crawl layout): [[graft.sources.Warc.save]]
+  // with `gzip` writes one gzip member per record through the DSv2 warc
+  // sink, the splittable member-walking reader parses them back under forced
   // multi-split planning, and the SAME oracle proves every payload byte
   // survived graft → gzip members → graft.
   private val warcGzRoundtrip = warcRoundtripQ("pipe_warc_gz_roundtrip", gz = true)
@@ -1341,8 +1341,7 @@ object PipelineQueries {
       val base = EventQueries.gateTempDir("graft-warc-url")
       try {
         val dir = s"$base/warc"
-        if (gz) graft.sources.Warc.writeGzip(Tables.documents(s, d), dir)
-        else graft.sources.Warc.write(Tables.documents(s, d), dir)
+        Warc.save(Warc.render(Tables.documents(s, d)), dir, gzip = gz)
         s.read.format("warc")
           .option("chunkBytes", (256 * 1024).toString)
           .load(dir)
@@ -1389,7 +1388,7 @@ object PipelineQueries {
       val base = EventQueries.gateTempDir("graft-warc-http")
       try {
         val dir = s"$base/warc"
-        graft.sources.Warc.writeHttp(Tables.documents(s, d), dir)
+        Warc.save(Warc.renderHttp(Tables.documents(s, d)), dir)
         s.read.format("warc")
           .option("chunkBytes", (256 * 1024).toString)
           .load(dir)
@@ -1473,7 +1472,7 @@ object PipelineQueries {
         // path: without it the probe re-scans the corpus on every
         // timed rep).
         requireLatin1Corpus(s, d)
-        graft.sources.Warc.writeHttpEncoded(Tables.documents(s, d), dir)
+        Warc.save(Warc.renderHttpEncoded(Tables.documents(s, d)), dir)
         s.read.format("warc")
           .option("chunkBytes", (256 * 1024).toString)
           .load(dir)
@@ -1551,7 +1550,7 @@ object PipelineQueries {
       val base = EventQueries.gateTempDir("graft-warc-defl")
       try {
         val dir = s"$base/warc"
-        graft.sources.Warc.writeHttpDeflate(Tables.documents(s, d), dir)
+        Warc.save(Warc.renderHttpDeflate(Tables.documents(s, d)), dir)
         s.read.format("warc")
           .option("chunkBytes", (256 * 1024).toString)
           .load(dir)
@@ -1613,7 +1612,7 @@ object PipelineQueries {
       val base = EventQueries.gateTempDir("graft-warc-wet")
       try {
         val dir = s"$base/warc"
-        graft.sources.Warc.writeHttpGzip(Tables.documents(s, d), dir)
+        Warc.save(Warc.renderHttp(Tables.documents(s, d)), dir, gzip = true)
         s.read.format("warc")
           .option("chunkBytes", (256 * 1024).toString)
           .load(dir)
@@ -1673,7 +1672,7 @@ object PipelineQueries {
         val fetches = docs.withColumn("fetch_id", $"doc_id" * 2)
           .unionAll(docs.filter($"doc_id" % 7 === 3)
             .withColumn("fetch_id", $"doc_id" * 2 + 1))
-        graft.sources.Warc.writeRevisits(fetches, dir)
+        Warc.save(Warc.renderWithRevisits(fetches), dir)
         def archive = s.read.format("warc")
           .option("chunkBytes", (256 * 1024).toString)
           .load(dir)
@@ -1765,7 +1764,7 @@ object PipelineQueries {
         val fetches = docs.withColumn("fetch_id", $"doc_id" * 2)
           .unionAll(docs.filter($"doc_id" % 7 === 3)
             .withColumn("fetch_id", $"doc_id" * 2 + 1))
-        graft.sources.Warc.writeRevisits(fetches, dir)
+        Warc.save(Warc.renderWithRevisits(fetches), dir)
         s.read.format("warc")
           .option("chunkBytes", (256 * 1024).toString)
           .load(dir)
@@ -1836,7 +1835,7 @@ object PipelineQueries {
       val base = EventQueries.gateTempDir("graft-warc-rq")
       try {
         val dir = s"$base/warc"
-        graft.sources.Warc.writeRequests(Tables.documents(s, d), dir)
+        Warc.save(Warc.renderWithRequests(Tables.documents(s, d)), dir)
         def archive = s.read.format("warc")
           .option("chunkBytes", (256 * 1024).toString)
           .load(dir)
@@ -1896,8 +1895,8 @@ object PipelineQueries {
         // hash-repartition so the staged corpus lands as SEVERAL
         // segment files (the arrival shape the stream models); the
         // per-source aggregate is assignment-insensitive
-        graft.sources.Warc.write(
-          Tables.documents(s, d).repartition(4, $"doc_id"), stage)
+        Warc.save(Warc.render(
+          Tables.documents(s, d).repartition(4, $"doc_id")), stage)
         val parts = new java.io.File(stage).listFiles()
           .filter(f => f.isFile && f.getName.endsWith(".warc"))
           .map(_.toPath).sortBy(_.getFileName.toString)
@@ -1978,8 +1977,8 @@ object PipelineQueries {
       val base = EventQueries.gateTempDir("graft-warc-info")
       try {
         val dir = s"$base/warc"
-        graft.sources.Warc.writeWithWarcinfo(
-          Tables.documents(s, d).repartition(InfoParts, $"doc_id"), dir)
+        Warc.save(Warc.render(
+          Tables.documents(s, d).repartition(InfoParts, $"doc_id")), dir, warcinfo = true)
         // the oracle's `_warcinfo` row hardcodes InfoParts; an empty
         // hash partition writes NO file (lazy open, by design), which
         // would otherwise surface as an opaque hash mismatch — abort
@@ -2105,9 +2104,9 @@ object PipelineQueries {
       val base = EventQueries.gateTempDir("graft-warc-cdx")
       try {
         val dir = s"$base/warc"
-        graft.sources.Warc.writeWithWarcinfo(
-          Tables.documents(s, d).orderBy($"doc_id").coalesce(1), dir,
-          filenameField = Some(CdxInfoName))
+        Warc.save(Warc.render(
+          Tables.documents(s, d).orderBy($"doc_id").coalesce(1)), dir,
+          warcinfo = true, warcinfoFilename = Some(CdxInfoName))
         s.read.format("warc")
           .option("chunkBytes", (256 * 1024).toString)
           .load(dir)
@@ -2169,9 +2168,9 @@ object PipelineQueries {
         java.nio.file.Files.createDirectories(segsDir)
         for (g <- Seq(0, 1)) {
           val name = f"segment-$g%05d.warc"
-          graft.sources.Warc.writeWithWarcinfo(
-            docs.filter($"doc_id" % 2 === g).orderBy($"doc_id").coalesce(1),
-            s"$base/w$g", filenameField = Some(name))
+          Warc.save(Warc.render(
+            docs.filter($"doc_id" % 2 === g).orderBy($"doc_id").coalesce(1)),
+            s"$base/w$g", warcinfo = true, warcinfoFilename = Some(name))
           val segDir = new java.io.File(s"$base/w$g")
           val part = segDir.listFiles()
             .filter(f => f.isFile && f.getName.endsWith(".warc") &&
@@ -2255,8 +2254,8 @@ object PipelineQueries {
       val base = EventQueries.gateTempDir("graft-warc-seg")
       try {
         val dir = s"$base/warc"
-        graft.sources.Warc.writeSegmented(
-          Tables.documents(s, d), dir, SegChars)
+        Warc.save(
+          Warc.renderSegmented(Tables.documents(s, d), SegChars), dir)
         def archive = s.read.format("warc")
           .option("chunkBytes", (256 * 1024).toString)
           .load(dir)
@@ -2330,8 +2329,8 @@ object PipelineQueries {
       val base = EventQueries.gateTempDir("graft-warc-trunc")
       try {
         val dir = s"$base/warc"
-        graft.sources.Warc.writeTruncated(
-          Tables.documents(s, d), dir, TruncChars)
+        Warc.save(
+          Warc.renderTruncated(Tables.documents(s, d), TruncChars), dir)
         s.read.format("warc")
           .option("chunkBytes", (256 * 1024).toString)
           .load(dir)
@@ -2386,7 +2385,7 @@ object PipelineQueries {
       val base = EventQueries.gateTempDir("graft-warc-md")
       try {
         val dir = s"$base/warc"
-        graft.sources.Warc.writeMetadata(Tables.documents(s, d), dir)
+        Warc.save(Warc.renderWithMetadata(Tables.documents(s, d)), dir)
         def archive = s.read.format("warc")
           .option("chunkBytes", (256 * 1024).toString)
           .load(dir)
@@ -2450,7 +2449,7 @@ object PipelineQueries {
       try {
         val httpDir = s"$base/http"
         val wetDir = s"$base/wet"
-        graft.sources.Warc.writeHttpGzip(Tables.documents(s, d), httpDir)
+        Warc.save(Warc.renderHttp(Tables.documents(s, d)), httpDir, gzip = true)
         val pages = s.read.format("warc")
           .option("chunkBytes", (256 * 1024).toString)
           .load(httpDir)
@@ -2464,7 +2463,7 @@ object PipelineQueries {
             $"p".substr(instr($"p", "\r\n\r\n") + lit(4), length($"p")))
           .withColumn("wet", regexp_replace($"body", "<[^>]*>", ""))
           .select($"doc_id", $"source", $"wet")
-        graft.sources.Warc.writeConversionsGzip(pages, wetDir)
+        Warc.save(Warc.renderConversions(pages), wetDir, gzip = true)
         s.read.format("warc")
           .option("chunkBytes", (256 * 1024).toString)
           .load(wetDir)
@@ -2526,7 +2525,7 @@ object PipelineQueries {
       val base = EventQueries.gateTempDir("graft-warc-lid")
       try {
         val dir = s"$base/warc"
-        graft.sources.Warc.writeHttpGzip(Tables.documents(s, d), dir)
+        Warc.save(Warc.renderHttp(Tables.documents(s, d)), dir, gzip = true)
         s.read.format("warc")
           .option("chunkBytes", (256 * 1024).toString)
           .load(dir)
@@ -2573,7 +2572,7 @@ object PipelineQueries {
       val base = EventQueries.gateTempDir("graft-warc-lid2")
       try {
         val dir = s"$base/warc"
-        graft.sources.Warc.writeHttpGzip(Tables.documents(s, d), dir)
+        Warc.save(Warc.renderHttp(Tables.documents(s, d)), dir, gzip = true)
         s.read.format("warc")
           .option("chunkBytes", (256 * 1024).toString)
           .load(dir)
@@ -2625,7 +2624,7 @@ object PipelineQueries {
         val dir = s"$base/warc"
         val docs = Tables.documents(s, d)
           .withColumn("text", TextQueries.scriptText($"text", $"lang"))
-        graft.sources.Warc.writeHttpGzip(docs, dir)
+        Warc.save(Warc.renderHttp(docs), dir, gzip = true)
         s.read.format("warc")
           .option("chunkBytes", (256 * 1024).toString)
           .load(dir)

@@ -34,11 +34,11 @@ import org.apache.spark.sql.functions._
   * containing `\r\n\r\n` or header-looking lines parses fine; the
   * reader never scans payload bytes).
   *
-  * The rendered record is ONE string column; the text writer with
-  * `lineSep = \r\n` appends the record's final CRLF, completing the
-  * spec's double-CRLF record separator. String rendering restricts
-  * THIS sink to text payloads (the training-corpus case); the reader
-  * side is fully binary and accepts any payload bytes.
+  * Each `render…` returns the records as ONE column (string, or binary
+  * for encoded HTTP bodies), and the one [[save]] writes any of them:
+  * the `warc` sink appends the record's final CRLF, completing the
+  * spec's double-CRLF record separator. The caller picks the renderer
+  * and the options (gzip members, a warcinfo head).
   *
   * Scale shape: rendering is one zero-shuffle projection (everything
   * in-row, whole-stage codegen); files parallelize by the input's
@@ -242,11 +242,6 @@ object Warc {
     envelopeBinary(docs, http, "application/http; msgtype=response")
   }
 
-  /** [[renderHttpDeflate]] written as plain WARC part files. */
-  def writeHttpDeflate(docs: DataFrame, path: String): Unit =
-    renderHttpDeflate(docs).write.format("warc").option("compression", "none")
-      .mode("overwrite").save(path)
-
   /** [[envelope]] for BINARY payloads: the SAME [[headerBlock]]
     * expression, assembled as a binary concat (ASCII header text
     * encodes transparently), so payload bytes that are not valid
@@ -264,11 +259,6 @@ object Warc {
         docUri), "utf-8"),
       payload, encode(lit("\r\n"), "utf-8"),
     ).as("value"))
-
-  /** [[renderHttpEncoded]] written as plain WARC part files. */
-  def writeHttpEncoded(docs: DataFrame, path: String): Unit =
-    renderHttpEncoded(docs).write.format("warc").option("compression", "none")
-      .mode("overwrite").save(path)
 
   /** Crawl-side payload dedup, rendered the way real crawls ship it
     * (ISO 28500 §6.7; Common Crawl): of all fetches sharing a payload
@@ -319,11 +309,6 @@ object Warc {
     responses.unionAll(revisits)
   }
 
-  /** [[renderWithRevisits]] written as plain WARC part files. */
-  def writeRevisits(fetches: DataFrame, path: String): Unit =
-    renderWithRevisits(fetches).write.format("warc")
-      .option("compression", "none").mode("overwrite").save(path)
-
   /** Render robots.txt fetches as response records — target URI
     * `http://<host>/robots.txt`, the address every polite crawler
     * (RFC 9309) fetches before a domain's pages. Input columns:
@@ -365,11 +350,6 @@ object Warc {
     requests.unionAll(renderHttp(docs))
   }
 
-  /** [[renderWithRequests]] written as plain WARC part files. */
-  def writeRequests(docs: DataFrame, path: String): Unit =
-    renderWithRequests(docs).write.format("warc")
-      .option("compression", "none").mode("overwrite").save(path)
-
   /** Render `metadata` records next to each [[renderHttp]] response —
     * the per-capture fetch telemetry real crawls store (ISO 28500
     * §6.6: `application/warc-fields` payload, `WARC-Concurrent-To`
@@ -393,11 +373,6 @@ object Warc {
         lit(">\r\n")))
     metadata.unionAll(renderHttp(docs))
   }
-
-  /** [[renderWithMetadata]] written as plain WARC part files. */
-  def writeMetadata(docs: DataFrame, path: String): Unit =
-    renderWithMetadata(docs).write.format("warc")
-      .option("compression", "none").mode("overwrite").save(path)
 
   /** Render documents as SEGMENTED records (ISO 28500 §5.8 — how
     * records larger than a writer's buffer ship in real crawls): a
@@ -454,11 +429,6 @@ object Warc {
             .otherwise(lit("")))))
   }
 
-  /** [[renderSegmented]] written as plain WARC part files. */
-  def writeSegmented(docs: DataFrame, path: String, segChars: Int): Unit =
-    renderSegmented(docs, segChars).write.format("warc")
-      .option("compression", "none").mode("overwrite").save(path)
-
   /** Render documents with TRUNCATION (ISO 28500 §5.13 — the other
     * oversized-payload device next to [[renderSegmented]], and the
     * one real crawlers actually default to: store only a prefix and
@@ -480,11 +450,6 @@ object Warc {
         .otherwise(lit("")))
   }
 
-  /** [[renderTruncated]] written as plain WARC part files. */
-  def writeTruncated(docs: DataFrame, path: String, capChars: Int): Unit =
-    renderTruncated(docs, capChars).write.format("warc")
-      .option("compression", "none").mode("overwrite").save(path)
-
   /** Render WET-style `conversion` records (ISO 28500 §6.8 — the
     * record type Common Crawl's WET sidecar files consist of): one
     * text/plain record per page whose payload is the EXTRACTED text,
@@ -505,57 +470,33 @@ object Warc {
           .cast("binary")),
         lit(">\r\n")))
 
-  /** [[renderConversions]] written as `.warc.gz` (the WET layout). */
-  def writeConversionsGzip(pages: DataFrame, path: String): Unit =
-    renderConversions(pages).write.format("warc")
-      .option("compression", "gzip").mode("overwrite").save(path)
-
-  /** Write documents as WARC part files under `path` (overwrite) —
-    * via the DSv2 sink (byte-identical record stream to the text
-    * writer with lineSep=CRLF, which this replaced), so plain archives
-    * also carry the sidecar split index and planning reads marks
-    * instead of skimming headers.
+  /** Writes a rendered frame (any `render…` above) as WARC part files
+    * under `path`, replacing what is there, through the DSv2 `warc`
+    * sink, so every part file also carries its sidecar split index and
+    * planning reads marks instead of skimming headers:
+    * {{{
+    *   Warc.save(Warc.renderHttp(docs), dir, gzip = true)
+    * }}}
+    *
+    *  - `gzip`: `.warc.gz` with one gzip MEMBER per record — the Common
+    *    Crawl layout. Members are self-delimiting, so the archive stays
+    *    splittable (the reader's member walk starts at any member
+    *    boundary); a generic text sink with gzip compression would
+    *    emit ONE member per file and destroy that.
+    *  - `warcinfo`: every part file LEADS with a warcinfo record (the
+    *    real crawl-segment profile — ISO 28500 §6.2; Common Crawl
+    *    segments all begin with one).
+    *  - `warcinfoFilename` (with `warcinfo`): overrides that record's
+    *    WARC-Filename VALUE, for single-partition segments whose
+    *    consumers must replay the record's bytes without knowing the
+    *    sink's task-id-bearing part name (the CDX oracle).
     */
-  def write(docs: DataFrame, path: String): Unit =
-    render(docs).write.format("warc").option("compression", "none")
-      .mode("overwrite").save(path)
-
-  /** [[write]] with every part file LED by a warcinfo record (the
-    * real crawl-segment profile — ISO 28500 §6.2; Common Crawl
-    * segments all begin with one). `filenameField` overrides the
-    * warcinfo record's WARC-Filename VALUE for single-partition
-    * segments whose consumers must replay the record's bytes without
-    * knowing the sink's task-id-bearing part name (the CDX oracle).
-    */
-  def writeWithWarcinfo(
-      docs: DataFrame, path: String,
-      filenameField: Option[String] = None): Unit = {
-    val w = render(docs).write.format("warc")
-      .option("compression", "none").option("warcinfo", "true")
-    filenameField.fold(w)(f => w.option("warcinfoFilename", f))
-      .mode("overwrite").save(path)
+  def save(
+      records: DataFrame, path: String, gzip: Boolean = false,
+      warcinfo: Boolean = false, warcinfoFilename: Option[String] = None): Unit = {
+    val w = records.write.format("warc")
+      .option("compression", if (gzip) "gzip" else "none")
+      .option("warcinfo", warcinfo)
+    warcinfoFilename.fold(w)(w.option("warcinfoFilename", _)).mode("overwrite").save(path)
   }
-
-  /** Write documents as `.warc.gz` part files (overwrite): one gzip
-    * MEMBER per record — the Common Crawl layout — via the DSv2 warc
-    * sink, so the archives stay splittable (members are
-    * self-delimiting; the reader's member walk starts at any member
-    * boundary). A generic text sink with gzip compression would emit
-    * ONE member per file and destroy splittability.
-    */
-  def writeGzip(docs: DataFrame, path: String): Unit =
-    render(docs).write.format("warc").option("compression", "gzip")
-      .mode("overwrite").save(path)
-
-  /** Write documents as application/http WARC records (plain, via the
-    * DSv2 sink — byte-identical envelope discipline to [[write]]).
-    */
-  def writeHttp(docs: DataFrame, path: String): Unit =
-    renderHttp(docs).write.format("warc").option("compression", "none")
-      .mode("overwrite").save(path)
-
-  /** [[writeHttp]] as per-record gzip members. */
-  def writeHttpGzip(docs: DataFrame, path: String): Unit =
-    renderHttp(docs).write.format("warc").option("compression", "gzip")
-      .mode("overwrite").save(path)
 }

@@ -181,7 +181,7 @@ private[v2] class GeoJsonTable(paths: Seq[String]) extends Table with SupportsRe
       override def createReaderFactory(): PartitionReaderFactory = readerFactory
       override def toMicroBatchStream(checkpointLocation: String)
           : org.apache.spark.sql.connector.read.streaming.MicroBatchStream = {
-        require(paths.size == 1 && new java.io.File(paths.head).isDirectory,
+        require(paths.size == 1 && Landing.isDirectory(paths.head, conf),
           s"streaming geojson needs a single landing DIRECTORY to watch, got $paths")
         new GeoJsonMicroBatchStream(paths.head, spark, conf)
       }
@@ -196,9 +196,11 @@ private[v2] class GeoJsonTable(paths: Seq[String]) extends Table with SupportsRe
   * array), so a batch is exactly the newly-landed files, each planned
   * with the same byte-range splitting as the batch scan; per-file
   * `ingest_order` and the (path, ingest_order) dedup contract carry
-  * over unchanged. Files must land atomically (write-then-rename, the
-  * standard landing-dir discipline) — a file is picked up when listed.
-  * The directory is listed on the local filesystem.
+  * over unchanged. The directory is listed by [[Landing.list]] on its
+  * Hadoop `FileSystem`, keeping `.geojson` files. Files must land
+  * atomically (write-then-rename under a hidden temp name, the
+  * standard landing-dir discipline): a file is picked up when listed,
+  * and a name starting with `.` or `_` is never listed.
   *
   * Known limit: offsets carry the complete file set, so offset JSON
   * and the per-batch set-diff grow O(files ever landed) — right for a
@@ -214,12 +216,8 @@ private[v2] class GeoJsonMicroBatchStream(dir: String, spark: SparkSession, conf
 
   private val mapper = new ObjectMapper()
 
-  private def listFiles(): Seq[String] = {
-    val fs = new java.io.File(dir).listFiles()
-    if (fs == null) Seq.empty
-    else fs.filter(f => f.isFile && f.getName.endsWith(".geojson"))
-      .map(_.getAbsolutePath).sorted.toSeq
-  }
+  private def listFiles(): Seq[String] =
+    Landing.list(dir, conf)(_.getPath.getName.endsWith(".geojson"))
 
   override def initialOffset(): Offset = GeoJsonOffset(Seq.empty)
   override def latestOffset(): Offset = GeoJsonOffset(listFiles())

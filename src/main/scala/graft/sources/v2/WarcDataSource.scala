@@ -1,10 +1,14 @@
 package graft.sources.v2
 
-import java.io.{BufferedInputStream, EOFException, FileInputStream}
+import java.io.{BufferedInputStream, EOFException}
 import java.util
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -14,6 +18,7 @@ import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 
 /** DataSource V2 WARC (ISO 28500) reader — the web-crawl archive
   * format (Common Crawl segments) that is the de-facto input of
@@ -34,6 +39,16 @@ import org.apache.spark.unsafe.types.UTF8String
   * Counterpart of
   * the [[graft.sources.Warc]] sink; together they round-trip a corpus
   * graft → WARC → graft byte-exactly (gated by `pipe_warc_roundtrip`).
+  *
+  * FILES: any Hadoop path (a plain path, a `file:` URI, HDFS), listed
+  * and opened through [[Landing]], the one file layer of the sources.
+  * A directory means its non-empty data files under the one listing
+  * rule ([[Landing.list]]: regular files whose names do not start with
+  * `.` or `_`, sorted by name for a stable `record_index` base), so
+  * a directory the `warc` sink wrote reads back as its part files.
+  * With more than one file the split planning runs as a Spark job;
+  * that job and the reader tasks get the Hadoop conf as one broadcast
+  * per scan.
   *
   * FRAMING, NOT SCANNING: records are advanced strictly by the
   * mandatory Content-Length header — payload bytes are never
@@ -82,11 +97,10 @@ class WarcDataSource extends TableProvider with DataSourceRegister {
     val paths = rawPath.split(",").toSeq.map(_.trim).filter(_.nonEmpty)
     val chunkBytes = Option(properties.get("chunkBytes"))
       .map(_.toLong).getOrElse(WarcDataSource.DefaultChunkBytes)
-    val planVia = Option(properties.get("planVia")).getOrElse("auto")
     val offsetMode = Option(properties.get("offsetMode")).getOrElse("set")
     require(offsetMode == "set" || offsetMode == "watermark",
       s"warc offsetMode must be set|watermark, got '$offsetMode'")
-    new WarcTable(paths, chunkBytes, planVia, schema, rawPath, offsetMode)
+    new WarcTable(paths, chunkBytes, schema, rawPath, offsetMode)
   }
 }
 
@@ -137,23 +151,12 @@ object WarcDataSource {
     StructField("payload", BinaryType, nullable = false),
   ))
 
-  /** A directory path means its non-hidden regular files (sorted by
-    * name for a stable record_index base), a file path means itself.
+  /** A directory path means its non-empty data files
+    * ([[Landing.list]]), a file path means itself.
     */
-  private[sources] def expandPaths(paths: Seq[String]): Seq[String] =
+  private[sources] def expandPaths(paths: Seq[String], conf: Configuration): Seq[String] =
     paths.flatMap { p =>
-      val f = new java.io.File(p)
-      if (f.isDirectory) {
-        // listFiles is null (not empty) on an I/O error or a directory
-        // that became unreadable — fail with the path, not an NPE
-        val children = Option(f.listFiles()).getOrElse(
-          throw new IllegalArgumentException(
-            s"WARC path $p is a directory but cannot be listed"))
-        children.toSeq
-          .filter(c => c.isFile && c.length() > 0 &&
-            !c.getName.startsWith("_") && !c.getName.startsWith("."))
-          .map(_.getPath).sorted
-      } else Seq(p)
+      if (Landing.isDirectory(p, conf)) Landing.list(p, conf)(_.getLen > 0) else Seq(p)
     }
 
   /** One parsed header block: field map (lower-cased names), the byte
@@ -264,10 +267,13 @@ object WarcDataSource {
     * exactly why the skim runs distributed.
     */
   private[v2] def indexSplits(
-      path: String, chunkBytes: Long): Seq[(Long, Long, Long)] =
-    sidecarSplits(path, chunkBytes).getOrElse {
-      if (isGzip(path)) indexSplitsGz(path, chunkBytes)
-      else indexSplitsPlain(path, chunkBytes)
+      path: String, chunkBytes: Long, conf: Configuration): Seq[(Long, Long, Long)] =
+    sidecarSplits(path, chunkBytes, conf).getOrElse {
+      val in = Landing.open(path, conf)
+      try {
+        if (isGzip(path)) indexSplitsGz(in, path, chunkBytes)
+        else indexSplitsPlain(new BufferedInputStream(in, 64 * 1024), path, chunkBytes)
+      } finally in.close()
     }
 
   /** Sidecar magic + mark granularity shared with the DSv2 writer. */
@@ -296,19 +302,18 @@ object WarcDataSource {
   }
 
   /** [[contentFingerprint]] recomputed from the file itself. */
-  private[sources] def fileFingerprint(f: java.io.File): Long = {
-    val n = f.length()
-    val raf = new java.io.RandomAccessFile(f, "r")
+  private[sources] def fileFingerprint(path: String, conf: Configuration): Long = {
+    val n = Landing.length(path, conf)
+    val in = Landing.open(path, conf)
     try {
       val headLen = math.min(n, FingerprintBytes.toLong).toInt
       val head = new Array[Byte](headLen)
-      raf.readFully(head)
+      in.readFully(0L, head)
       val tailLen = headLen // min(n, FingerprintBytes) too
       val tail = new Array[Byte](tailLen)
-      raf.seek(n - tailLen)
-      raf.readFully(tail)
+      in.readFully(n - tailLen, tail)
       contentFingerprint(head, headLen, tail, tailLen)
-    } finally raf.close()
+    } finally in.close()
   }
 
   /** Split planning from a sink-written sidecar index (`.{name}.idx`:
@@ -320,19 +325,20 @@ object WarcDataSource {
     * planning-side decompression entirely.
     */
   private[sources] def sidecarSplits(
-      path: String, chunkBytes: Long): Option[Seq[(Long, Long, Long)]] = {
-    val f = new java.io.File(path)
-    val idx = new java.io.File(f.getParentFile, "." + f.getName + ".idx")
-    if (!idx.isFile) return None
+      path: String, chunkBytes: Long, conf: Configuration): Option[Seq[(Long, Long, Long)]] = {
+    val f = new Path(path)
+    val idx = new Path(f.getParent, "." + f.getName + ".idx").toString
     try {
-      val lines = java.nio.file.Files.readAllLines(idx.toPath)
-      val head = lines.get(0).split(" ")
+      val in = Landing.open(idx, conf) // no sidecar: the catch below
+      val lines = try new String(in.readAllBytes(), "UTF-8").linesIterator.toIndexedSeq
+        finally in.close()
+      val head = lines(0).split(" ")
       if (head.length != 4 || head(0) != SidecarMagic) return None
       val fileBytes = head(1).toLong
-      if (fileBytes != f.length()) return None // stale index
-      if (head(3).toLong != fileFingerprint(f)) return None // rewritten
-      val marks = Seq((0L, 0L)) ++ (1 until lines.size).map { i =>
-        val p = lines.get(i).split(" "); (p(0).toLong, p(1).toLong)
+      if (fileBytes != Landing.length(path, conf)) return None // stale index
+      if (head(3).toLong != fileFingerprint(path, conf)) return None // rewritten
+      val marks = Seq((0L, 0L)) ++ lines.drop(1).map { l =>
+        val p = l.split(" "); (p(0).toLong, p(1).toLong)
       } ++ Seq((fileBytes, -1L)) // terminal boundary; count unused
       val splits = Seq.newBuilder[(Long, Long, Long)]
       var start = 0L
@@ -349,31 +355,28 @@ object WarcDataSource {
   }
 
   private def indexSplitsPlain(
-      path: String, chunkBytes: Long): Seq[(Long, Long, Long)] = {
-    val in = new BufferedInputStream(new FileInputStream(path), 64 * 1024)
-    try {
-      val splits = Seq.newBuilder[(Long, Long, Long)]
-      var offset = 0L
-      var idx = 0L
-      var splitStart = -1L
-      var splitFirstIdx = 0L
-      var h = readHeader(in, path, offset)
-      while (h.isDefined) {
-        val len = h.get.contentLength(path)
-        skipFully(in, len, path, offset)
-        expectRecordEnd(in, path, offset)
-        if (splitStart < 0) { splitStart = offset; splitFirstIdx = idx }
-        offset = h.get.payloadStart + len + 4
-        idx += 1
-        if (offset - splitStart >= chunkBytes) {
-          splits += ((splitStart, offset, splitFirstIdx))
-          splitStart = -1L
-        }
-        h = readHeader(in, path, offset)
+      in: BufferedInputStream, path: String, chunkBytes: Long): Seq[(Long, Long, Long)] = {
+    val splits = Seq.newBuilder[(Long, Long, Long)]
+    var offset = 0L
+    var idx = 0L
+    var splitStart = -1L
+    var splitFirstIdx = 0L
+    var h = readHeader(in, path, offset)
+    while (h.isDefined) {
+      val len = h.get.contentLength(path)
+      skipFully(in, len, path, offset)
+      expectRecordEnd(in, path, offset)
+      if (splitStart < 0) { splitStart = offset; splitFirstIdx = idx }
+      offset = h.get.payloadStart + len + 4
+      idx += 1
+      if (offset - splitStart >= chunkBytes) {
+        splits += ((splitStart, offset, splitFirstIdx))
+        splitStart = -1L
       }
-      if (splitStart >= 0) splits += ((splitStart, offset, splitFirstIdx))
-      splits.result()
-    } finally in.close()
+      h = readHeader(in, path, offset)
+    }
+    if (splitStart >= 0) splits += ((splitStart, offset, splitFirstIdx))
+    splits.result()
   }
 
   /** Count the WARC records inside one decompressed gzip member. */
@@ -394,8 +397,7 @@ object WarcDataSource {
   }
 
   private def indexSplitsGz(
-      path: String, chunkBytes: Long): Seq[(Long, Long, Long)] = {
-    val in = new BufferedInputStream(new FileInputStream(path), 64 * 1024)
+      in: java.io.InputStream, path: String, chunkBytes: Long): Seq[(Long, Long, Long)] = {
     val gz = new GzipMemberStream(in, path)
     try {
       val splits = Seq.newBuilder[(Long, Long, Long)]
@@ -418,14 +420,13 @@ object WarcDataSource {
       }
       if (splitStart >= 0) splits += ((splitStart, gz.offset, splitFirstIdx))
       splits.result()
-    } finally { gz.end(); in.close() }
+    } finally gz.end()
   }
 }
 
 private[v2] class WarcTable(
-    paths: Seq[String], chunkBytes: Long, planVia: String = "auto",
-    tableSchema: StructType = WarcDataSource.schema, rawPath: String = "",
-    offsetMode: String = "set")
+    paths: Seq[String], chunkBytes: Long, tableSchema: StructType, rawPath: String,
+    offsetMode: String)
     extends Table with SupportsRead
     with org.apache.spark.sql.connector.catalog.SupportsWrite {
   override def name(): String = s"warc(${paths.mkString(",")})"
@@ -444,8 +445,10 @@ private[v2] class WarcTable(
     // target may not exist yet and must not be listed. The RAW paths
     // ride along for the streaming side, which watches the directory
     // itself instead of freezing one listing.
-    new WarcScanBuilder(WarcDataSource.expandPaths(paths), chunkBytes,
-      planVia, paths, offsetMode)
+    val spark = SparkSession.active
+    val conf = spark.sessionState.newHadoopConf()
+    new WarcScanBuilder(WarcDataSource.expandPaths(paths, conf), chunkBytes,
+      paths, offsetMode, spark, conf)
   }
   override def newWriteBuilder(
       info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
@@ -457,66 +460,59 @@ private[v2] class WarcTable(
 }
 
 private[v2] class WarcScanBuilder(
-    paths: Seq[String], chunkBytes: Long, planVia: String,
-    watchPaths: Seq[String] = Seq.empty, offsetMode: String = "set")
+    paths: Seq[String], chunkBytes: Long, watchPaths: Seq[String],
+    offsetMode: String, spark: SparkSession, conf: Configuration)
     extends ScanBuilder with SupportsPushDownRequiredColumns {
   private var required: StructType = WarcDataSource.schema
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = requiredSchema
   override def build(): Scan =
-    new WarcScan(paths, chunkBytes, planVia, required, watchPaths,
-      offsetMode)
+    new WarcScan(paths, chunkBytes, required, watchPaths, offsetMode, spark, conf)
 }
 
 private[v2] class WarcScan(
-    paths: Seq[String], chunkBytes: Long, planVia: String,
-    required: StructType, watchPaths: Seq[String] = Seq.empty,
-    offsetMode: String = "set")
+    paths: Seq[String], chunkBytes: Long, required: StructType,
+    watchPaths: Seq[String], offsetMode: String, spark: SparkSession,
+    conf: Configuration)
     extends Scan with Batch {
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
 
   override def toMicroBatchStream(checkpointLocation: String)
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream = {
-    require(watchPaths.size == 1 &&
-        new java.io.File(watchPaths.head).isDirectory,
+    require(watchPaths.size == 1 && Landing.isDirectory(watchPaths.head, conf),
       s"streaming warc needs a single landing DIRECTORY to watch, " +
         s"got $watchPaths")
     new WarcMicroBatchStream(watchPaths.head, chunkBytes, required,
-      offsetMode)
+      offsetMode, spark, conf)
   }
+
+  // one conf broadcast per scan, shared by the planning job and the
+  // reader factory (Spark asks for the factory more than once)
+  private lazy val sharedConf =
+    spark.sparkContext.broadcast(new SerializableConfiguration(conf))
+  private lazy val readerFactory = new WarcReaderFactory(required, sharedConf)
 
   /** Split planning. The per-file skim reads every header block and
     * seeks over payloads — I/O ∝ headers — but it is still work
     * ∝ record count, and a crawl archive is THOUSANDS of multi-GB
     * segments: serialized on the driver, planning would dominate the
     * query (the round-11 scale caveat). So with more than one file the
-    * skim runs as a SPARK JOB, one task per file (`planVia=job`; the
-    * collected result is one tuple per ~chunkBytes split — the same
-    * order of driver memory Spark already spends holding the
-    * InputPartition array). A single file keeps the driver-side skim
-    * (`planVia=driver`) — a one-task job would only add scheduling
-    * latency. `planVia=auto` (default) picks as above; the explicit
-    * values exist for the parity spec and for diagnostics.
+    * skim runs as a SPARK JOB, one task per file (the collected result
+    * is one tuple per ~chunkBytes split — the same order of driver
+    * memory Spark already spends holding the InputPartition array). A
+    * single file keeps the driver-side skim — a one-task job would
+    * only add scheduling latency.
     */
   override def planInputPartitions(): Array[InputPartition] = {
     val chunk = chunkBytes
-    val useJob = planVia match {
-      case "job" => true
-      case "driver" => false
-      case _ => paths.size > 1
-    }
     val perFile: Seq[(String, Seq[(Long, Long, Long)])] =
-      if (!useJob) paths.map(p => p -> WarcDataSource.indexSplits(p, chunk))
+      if (paths.size <= 1) paths.map(p => p -> WarcDataSource.indexSplits(p, chunk, conf))
       else {
-        // planInputPartitions is a DRIVER-side planning hook, so the
-        // active session is the right (and only) way to reach the
-        // context here — but this lookup must never move into task
-        // code (no active session exists on executors)
-        val sc = org.apache.spark.sql.SparkSession.active.sparkContext
+        val taskConf = sharedConf
         // sort AFTER collect: task completion order is nondeterministic
-        sc.parallelize(paths, paths.size)
-          .map(p => p -> WarcDataSource.indexSplits(p, chunk))
+        spark.sparkContext.parallelize(paths, paths.size)
+          .map(p => p -> WarcDataSource.indexSplits(p, chunk, taskConf.value.value))
           .collect().toSeq.sortBy(_._1)
       }
     perFile.flatMap { case (p, splits) =>
@@ -525,8 +521,7 @@ private[v2] class WarcScan(
       }
     }.toArray
   }
-  override def createReaderFactory(): PartitionReaderFactory =
-    new WarcReaderFactory(required)
+  override def createReaderFactory(): PartitionReaderFactory = readerFactory
 }
 
 private[v2] case class WarcInputPartition(
@@ -537,32 +532,32 @@ private[v2] case class WarcInputPartition(
   * the shape crawl archives actually ARRIVE in (a fetcher fleet lands
   * finished `.warc.gz` segments one by one; Common Crawl publishes
   * thousands of segment files per crawl). The GeoJson source's device
-  * (GeoJsonDataSource.scala:163-181): an offset is the SET of files
+  * ([[GeoJsonMicroBatchStream]]): an offset is the SET of files
   * ingested so far, a batch is exactly the newly-landed files, each
   * planned with the SAME splitting as the batch scan (sidecar index
   * when the graft sink wrote one, header skim otherwise), so
   * `record_index` and every per-record column are identical between
-  * batch and stream reads of the same bytes. Files must land
-  * atomically (write-then-rename — dotted temp names are never
-  * listed); the same O(files-ever-landed) offset caveat and
-  * monotone-name compaction note as the GeoJson stream applies.
+  * batch and stream reads of the same bytes. The directory is listed
+  * by [[Landing.list]] on its Hadoop `FileSystem`, keeping non-empty
+  * `.warc` and `.warc.gz` files. Files must land atomically
+  * (write-then-rename — dotted temp names are never listed); the same
+  * O(files-ever-landed) offset caveat and monotone-name compaction
+  * note as the GeoJson stream applies.
   */
 private[v2] class WarcMicroBatchStream(
     dir: String, chunkBytes: Long, required: StructType,
-    offsetMode: String = "set")
+    offsetMode: String, spark: SparkSession, conf: Configuration)
     extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream {
   import org.apache.spark.sql.connector.read.streaming.Offset
 
   private val mapper = WarcOffsets.mapper
 
-  private def listFiles(): Seq[String] = {
-    val fs = new java.io.File(dir).listFiles()
-    if (fs == null) Seq.empty
-    else fs.filter(f => f.isFile && f.length() > 0 &&
-        !f.getName.startsWith(".") && !f.getName.startsWith("_") &&
-        (f.getName.endsWith(".warc") || f.getName.endsWith(".warc.gz")))
-      .map(_.getAbsolutePath).sorted.toSeq
+  private def listFiles(): Seq[String] = Landing.list(dir, conf) { s =>
+    val n = s.getPath.getName
+    s.getLen > 0 && (n.endsWith(".warc") || n.endsWith(".warc.gz"))
   }
+
+  private def name(path: String): String = new Path(path).getName
 
   private def watermark = offsetMode == "watermark"
 
@@ -606,7 +601,7 @@ private[v2] class WarcMicroBatchStream(
   override def latestOffset(): Offset =
     if (watermark) {
       val files = listFiles()
-      val names = files.map(p => new java.io.File(p).getName)
+      val names = files.map(name)
       val off =
         if (names.isEmpty) WarcWatermarkOffset("", 0L, 0L)
         else {
@@ -651,7 +646,7 @@ private[v2] class WarcMicroBatchStream(
         // means a FRESH checkpoint (with offsetMode=set if landing
         // names stay non-monotone), which re-ingests the directory;
         // downstream must tolerate those duplicates or be rebuilt.
-        val names = files.map(p => new java.io.File(p).getName)
+        val names = files.map(name)
         val (below, belowSum) = belowCk(names, s.wm)
         require(below == s.n && belowSum == s.ck,
           s"warc stream watermark violated: files at or below watermark " +
@@ -661,20 +656,21 @@ private[v2] class WarcMicroBatchStream(
             "checkpoint (re-ingests everything; use offsetMode=set if " +
             "names stay non-monotone)")
         files.filter { p =>
-          val n = new java.io.File(p).getName
+          val n = name(p)
           n > s.wm && n <= e.wm
         }
       case other => throw new IllegalStateException(
         s"mixed warc stream offset kinds: $other")
     }
     batch.flatMap { p =>
-      WarcDataSource.indexSplits(p, chunkBytes).map {
+      WarcDataSource.indexSplits(p, chunkBytes, conf).map {
         case (s, e, i) => WarcInputPartition(p, s, e, i): InputPartition
       }
     }.toArray
   }
-  override def createReaderFactory(): PartitionReaderFactory =
-    new WarcReaderFactory(required)
+  private lazy val readerFactory = new WarcReaderFactory(required,
+    spark.sparkContext.broadcast(new SerializableConfiguration(conf)))
+  override def createReaderFactory(): PartitionReaderFactory = readerFactory
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
 }
@@ -710,13 +706,22 @@ private[v2] case class WarcWatermarkOffset(wm: String, n: Long, ck: Long)
   }
 }
 
-private[v2] class WarcReaderFactory(required: StructType)
+/** Opens each task's range with the scan's Hadoop conf, held as a
+  * broadcast made once per scan (as [[GeoJsonReaderFactory]] does), so
+  * a task carries the broadcast's id, not the conf.
+  */
+private[v2] class WarcReaderFactory(
+    required: StructType, conf: Broadcast[SerializableConfiguration])
     extends PartitionReaderFactory {
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
     val part = p.asInstanceOf[WarcInputPartition]
-    if (WarcDataSource.isGzip(part.path))
-      new GzipWarcPartitionReader(part, required)
-    else new WarcPartitionReader(part, required)
+    val in = Landing.open(part.path, conf.value.value)
+    try {
+      in.seek(part.start)
+      if (WarcDataSource.isGzip(part.path))
+        new GzipWarcPartitionReader(part, required, in)
+      else new WarcPartitionReader(part, required, in)
+    } catch { case e: Throwable => in.close(); throw e }
   }
 }
 
@@ -786,13 +791,12 @@ private[v2] final class WarcRowBuilder(required: StructType, path: String) {
   * its headers.
   */
 private[v2] class WarcPartitionReader(
-    part: WarcInputPartition, required: StructType)
+    part: WarcInputPartition, required: StructType, file: java.io.InputStream)
     extends PartitionReader[InternalRow] {
   import WarcDataSource._
 
-  private val in = new BufferedInputStream(
-    new FileInputStream(part.path), 64 * 1024)
-  skipFully(in, part.start, part.path, 0L)
+  // `file` is positioned at the range start
+  private val in = new BufferedInputStream(file, 64 * 1024)
   private var offset = part.start
   private var idx = part.firstIdx
   private val builder = new WarcRowBuilder(required, part.path)
@@ -833,13 +837,11 @@ private[v2] class WarcPartitionReader(
   * and its payload cap is the same 2 GiB as the plain reader).
   */
 private[v2] class GzipWarcPartitionReader(
-    part: WarcInputPartition, required: StructType)
+    part: WarcInputPartition, required: StructType, fileIn: java.io.InputStream)
     extends PartitionReader[InternalRow] {
   import WarcDataSource._
 
-  private val fileIn = new BufferedInputStream(
-    new FileInputStream(part.path), 64 * 1024)
-  skipFully(fileIn, part.start, part.path, 0L)
+  // `fileIn` is positioned at the range start
   private val gz = new GzipMemberStream(fileIn, part.path, part.start)
   private var memberIn: BufferedInputStream = _
   private var memberAt = part.start

@@ -182,6 +182,48 @@ class GeoJsonV2Spec extends AnyFunSuite {
     } finally q.stop()
   }
 
+  private val page0 =
+    collection(Seq("""{"type": "Feature", "properties": {"id": "f0"}, "geometry": null}"""))
+
+  /** Streams the `geojson` source over `watch` into a memory table,
+    * runs `land` between two triggers, and returns the table's
+    * (file name, feature id) rows.
+    */
+  private def streamed(watch: String, table: String)(land: => Unit): Seq[(String, String)] = {
+    val q = spark.readStream.format("geojson").load(watch)
+      .writeStream.outputMode("append").format("memory").queryName(table).start()
+    try {
+      q.processAllAvailable()
+      land
+      q.processAllAvailable()
+    } finally q.stop()
+    spark.table(table).selectExpr("regexp_extract(path, '[^/]+$', 0)",
+      "get_json_object(feature_json, '$.properties.id')")
+      .collect().map(r => (r.getString(0), r.getString(1))).toSeq.sorted
+  }
+
+  test("the geojson stream never reads a hidden, still-landing file") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-geojson-hidden")
+    val got = streamed(dir.toString, "geojson_hidden_sink") {
+      // temp names of a write-then-rename landing, caught mid-write
+      for (name <- Seq(".partial.geojson", "_page-7.geojson"))
+        java.nio.file.Files.writeString(dir.resolve(name),
+          """{"type": "FeatureCollection", "features": [{"type": "Fea""")
+      java.nio.file.Files.writeString(dir.resolve("page1.geojson"), page0)
+    }
+    assert(got == Seq(("page1.geojson", "f0")))
+  }
+
+  test("the geojson stream watches a file: URI landing directory") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-geojson-uri")
+    val got = streamed(dir.toUri.toString, "geojson_uri_sink") {
+      val tmp = dir.resolve(".page1.geojson.tmp")
+      java.nio.file.Files.writeString(tmp, page0)
+      java.nio.file.Files.move(tmp, dir.resolve("page1.geojson"))
+    }
+    assert(got == Seq(("page1.geojson", "f0")))
+  }
+
   private def topoFeature(i: Int, name: String = "", extraProps: String = ""): String =
     s"""{"type":"Feature","properties":{"sheet_id":${860 + i % 3},""" +
       s""""consensus":${jsonStr(s"t$i$name")}$extraProps},""" +

@@ -16,6 +16,7 @@ import graft.sources.v2.WarcDataSource
 class WarcSourceSpec extends AnyFunSuite {
 
   private lazy val spark = graft.TestSession.spark
+  private def hadoopConf = spark.sessionState.newHadoopConf()
 
   private def record(
       uri: String, payload: Array[Byte],
@@ -127,7 +128,7 @@ class WarcSourceSpec extends AnyFunSuite {
     ).toDF("doc_id", "source", "text", "fetch_id")
     val dir = Files.createTempDirectory("warc-spec-rvw")
     try {
-      Warc.writeRevisits(fetches, dir.toString + "/w")
+      Warc.save(Warc.renderWithRevisits(fetches), dir.toString + "/w")
       val rows = spark.read.format("warc").load(dir.toString + "/w")
         .selectExpr("warc_type", "record_id", "refers_to",
           "CAST(payload AS STRING) AS text", "content_length")
@@ -193,8 +194,9 @@ class WarcSourceSpec extends AnyFunSuite {
   }
 
   test("job-side split planning matches the driver skim on a multi-file fixture") {
-    // >1 file → planVia=auto runs the skim as a Spark job (one task
-    // per file); this pins that the job planner and the driver skim
+    // >1 file runs the skim as a Spark job (one task per file), one
+    // file the driver-side skim; this pins that the job planner over
+    // the directory and the driver skim over each file on its own
     // produce IDENTICAL partitions and rows — the round-11 scale
     // caveat (driver-serial planning ∝ total records) closed without
     // changing semantics.
@@ -205,18 +207,18 @@ class WarcSourceSpec extends AnyFunSuite {
           (s"payload-$f-" * 10 + i).getBytes(StandardCharsets.UTF_8)))
         Files.write(dir.resolve(s"$f.warc"), recs.flatten.toArray)
       }
-      def load(via: String) = spark.read.format("warc")
-        .option("chunkBytes", "512").option("planVia", via)
-        .load(dir.toString)
-      val (drv, job) = (load("driver"), load("job"))
-      assert(job.rdd.getNumPartitions == drv.rdd.getNumPartitions &&
-        job.rdd.getNumPartitions > 3,
+      def load(path: String) = spark.read.format("warc")
+        .option("chunkBytes", "512").load(path)
+      val job = load(dir.toString)
+      val drv = (0 until 3).map(f => load(dir.resolve(s"$f.warc").toString))
+      val drvParts = drv.map(_.rdd.getNumPartitions).sum
+      assert(job.rdd.getNumPartitions == drvParts && drvParts > 3,
         s"planners disagree on partitioning: job=${job.rdd.getNumPartitions} " +
-          s"driver=${drv.rdd.getNumPartitions}")
+          s"driver=$drvParts")
       def rows(df: org.apache.spark.sql.DataFrame) = df
         .selectExpr("path", "record_index", "target_uri", "md5(payload) AS ck")
-        .collect().map(_.toString).sorted.toSeq
-      assert(rows(job) == rows(drv))
+        .collect().map(_.toString).toSeq
+      assert(rows(job).sorted == drv.flatMap(rows).sorted)
     } finally rm(dir)
   }
 
@@ -361,7 +363,7 @@ class WarcSourceSpec extends AnyFunSuite {
     val docs = graft.model.Tables.documents(spark, "/root/testdata/sf0.001")
     val dir = Files.createTempDirectory("warc-spec-wgz")
     try {
-      Warc.writeGzip(docs, dir.toString + "/w")
+      Warc.save(Warc.render(docs), dir.toString + "/w", gzip = true)
       val files = new java.io.File(dir.toString + "/w").listFiles()
         .filter(_.getName.endsWith(".warc.gz"))
       assert(files.nonEmpty, "writeGzip must emit .warc.gz part files")
@@ -396,7 +398,7 @@ class WarcSourceSpec extends AnyFunSuite {
     val docs = graft.model.Tables.documents(spark, "/root/testdata/sf0.001")
     val dir = Files.createTempDirectory("warc-spec-idx")
     try {
-      Warc.writeGzip(docs, dir.toString + "/w")
+      Warc.save(Warc.render(docs), dir.toString + "/w", gzip = true)
       val d = new java.io.File(dir.toString + "/w")
       val parts = d.listFiles().filter(_.getName.endsWith(".warc.gz"))
       val sidecars = d.listFiles().filter(_.getName.endsWith(".idx"))
@@ -429,11 +431,11 @@ class WarcSourceSpec extends AnyFunSuite {
     val docs = graft.model.Tables.documents(spark, "/root/testdata/sf0.001")
     val dir = Files.createTempDirectory("warc-spec-fresh")
     try {
-      Warc.write(docs, dir.toString + "/w")
+      Warc.save(Warc.render(docs), dir.toString + "/w")
       val d = new java.io.File(dir.toString + "/w")
       val f = d.listFiles().filter(_.getName.endsWith(".warc")).minBy(_.getName)
       // fresh file + idx: the planner trusts the sidecar
-      assert(WarcDataSource.sidecarSplits(f.getPath, 65536).isDefined,
+      assert(WarcDataSource.sidecarSplits(f.getPath, 65536, hadoopConf).isDefined,
         "a fresh sidecar must be used")
       // in-place SAME-LENGTH rewrite: flip the first payload byte (the
       // byte after the first CRLFCRLF) — framing intact, length
@@ -443,7 +445,7 @@ class WarcSourceSpec extends AnyFunSuite {
       val at = bytes.indexOfSlice("\r\n\r\n".getBytes("UTF-8")) + 4
       bytes(at) = (bytes(at) ^ 0x01).toByte
       Files.write(f.toPath, bytes)
-      assert(WarcDataSource.sidecarSplits(f.getPath, 65536).isEmpty,
+      assert(WarcDataSource.sidecarSplits(f.getPath, 65536, hadoopConf).isEmpty,
         "a same-length rewritten part file must fall back to the skim")
       // and the skim still reads the (valid) modified archive fine
       val n = spark.read.format("warc")
@@ -474,7 +476,7 @@ class WarcSourceSpec extends AnyFunSuite {
           fp.write(chunk, 0, n)
         }
         fp.close()
-        assert(fp.fingerprint == WarcDataSource.fileFingerprint(p.toFile),
+        assert(fp.fingerprint == WarcDataSource.fileFingerprint(p.toString, hadoopConf),
           s"writer-side and file-side fingerprints must agree ($name)")
       }
     } finally rm(dir)
@@ -484,7 +486,7 @@ class WarcSourceSpec extends AnyFunSuite {
     val docs = graft.model.Tables.documents(spark, "/root/testdata/sf0.001")
     val dir = Files.createTempDirectory("warc-spec-rt")
     try {
-      Warc.write(docs, dir.toString + "/w")
+      Warc.save(Warc.render(docs), dir.toString + "/w")
       val back = spark.read.format("warc")
         .option("chunkBytes", "65536")
         .load(dir.toString + "/w")
@@ -627,8 +629,7 @@ class WarcSourceSpec extends AnyFunSuite {
     for (gz <- Seq(false, true)) {
       val dir = Files.createTempDirectory("warc-spec-off")
       try {
-        if (gz) Warc.writeGzip(docs, dir.toString + "/w")
-        else Warc.write(docs, dir.toString + "/w")
+        Warc.save(Warc.render(docs), dir.toString + "/w", gzip = gz)
         val rows = spark.read.format("warc")
           .option("chunkBytes", "65536").load(dir.toString + "/w")
           .selectExpr("path", "record_offset", "record_id",
@@ -681,7 +682,7 @@ class WarcSourceSpec extends AnyFunSuite {
     val docs = graft.model.Tables.documents(spark, "/root/testdata/sf0.001")
     val dir = Files.createTempDirectory("warc-spec-prune")
     try {
-      Warc.writeMetadata(docs, dir.toString + "/w")
+      Warc.save(Warc.renderWithMetadata(docs), dir.toString + "/w")
       def archive = spark.read.format("warc").load(dir.toString + "/w")
       val meta = archive.filter(col("warc_type") === "metadata")
         .select(col("concurrent_to"),
@@ -805,7 +806,7 @@ class WarcSourceSpec extends AnyFunSuite {
       .toDF("doc_id", "text", "source")
     val dir = Files.createTempDirectory("warc-spec-seg")
     try {
-      Warc.writeSegmented(docs.coalesce(1), dir.toString + "/w", segChars = 4)
+      Warc.save(Warc.renderSegmented(docs.coalesce(1), segChars = 4), dir.toString + "/w")
       val rows = spark.read.format("warc").load(dir.toString + "/w")
         .selectExpr("warc_type", "record_id", "segment_number",
           "segment_origin_id", "CAST(payload AS STRING) AS p",
@@ -850,7 +851,7 @@ class WarcSourceSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("warc-spec-digest")
     try {
       val fetches = docs.withColumn("fetch_id", $"doc_id")
-      Warc.writeRevisits(fetches, dir.toString + "/w")
+      Warc.save(Warc.renderWithRevisits(fetches), dir.toString + "/w")
       def audit() = spark.read.format("warc").load(dir.toString + "/w")
         .filter($"warc_type" === "response")
         .select($"record_id", $"path", $"record_offset",
@@ -896,7 +897,7 @@ class WarcSourceSpec extends AnyFunSuite {
       Files.write(dir.resolve("a.warc"), record("u", Array[Byte](1)))
       Files.write(dir.resolve("_SUCCESS"), Array[Byte](1))
       Files.write(dir.resolve(".hidden"), Array[Byte](1))
-      val got = WarcDataSource.expandPaths(Seq(dir.toString))
+      val got = WarcDataSource.expandPaths(Seq(dir.toString), hadoopConf)
       assert(got.map(p => p.substring(p.lastIndexOf('/') + 1)) ==
         Seq("a.warc", "b.warc"))
     } finally rm(dir)
@@ -919,6 +920,73 @@ class WarcSourceSpec extends AnyFunSuite {
       val plain = read("plain")
       assert(plain.size == 50)
       assert(read("uri") == plain)
+    } finally rm(dir)
+  }
+
+  test("read: a sink-written directory as a file: URI reads like the plain path") {
+    import spark.implicits._
+    val docs = (1 to 300).map(i => (i.toLong, s"page $i " * (i % 7 + 1), "w"))
+      .toDF("doc_id", "text", "source").repartition(3)
+    val dir = Files.createTempDirectory("warc-spec-read-uri")
+    def rows(path: String) = spark.read.format("warc").option("chunkBytes", "4096").load(path)
+      .selectExpr("regexp_extract(path, '[^/]+$', 0) AS file", "record_index", "warc_type",
+        "record_id", "target_uri", "warc_date", "content_type", "content_length",
+        "record_offset", "md5(payload) AS ck")
+      .collect().map(_.toString).sorted.toSeq
+    try {
+      for (gz <- Seq(false, true)) {
+        val w = dir.resolve(if (gz) "gz" else "plain")
+        Warc.save(Warc.render(docs), w.toString, gzip = gz)
+        for (sidecar <- Seq(true, false)) {
+          if (!sidecar) Files.list(w).toArray.map(_.asInstanceOf[Path])
+            .filter(_.getFileName.toString.contains(".idx")).foreach(Files.delete)
+          val plain = rows(w.toString)
+          assert(plain.size == 300, s"gz=$gz sidecar=$sidecar")
+          assert(rows(w.toUri.toString) == plain, s"gz=$gz sidecar=$sidecar")
+        }
+      }
+    } finally rm(dir)
+  }
+
+  test("streaming: a file: URI landing directory picks up a landed segment") {
+    val dir = Files.createTempDirectory("warc-spec-stream-uri")
+    try {
+      val q = spark.readStream.format("warc").load(dir.toUri.toString)
+        .selectExpr("target_uri").writeStream.format("memory")
+        .queryName("warc_stream_uri_spec").start()
+      try {
+        q.processAllAvailable()
+        val tmp = dir.resolve(".a.warc.tmp")
+        Files.write(tmp, (0 until 3).map(i =>
+          record(s"http://u.example/$i", s"p$i".getBytes(StandardCharsets.UTF_8))).reduce(_ ++ _))
+        Files.move(tmp, dir.resolve("a.warc"), java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+        q.processAllAvailable()
+        assert(spark.table("warc_stream_uri_spec").collect().map(_.getString(0)).sorted.toSeq ==
+          (0 until 3).map(i => s"http://u.example/$i"))
+      } finally q.stop()
+    } finally rm(dir)
+  }
+
+  // The Hadoop conf (about 110 KB serialized) rides a broadcast made
+  // once per scan, as in the geojson source.
+  test("a warc scan's task payload carries no Hadoop conf of its own") {
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    val dir = writeFixture(record("http://a.example/1", "abc".getBytes(StandardCharsets.UTF_8)))
+    try {
+      val df = spark.read.format("warc").load(dir.toString)
+      val bytes = new java.io.ByteArrayOutputStream()
+      val out = new java.io.ObjectOutputStream(bytes)
+      try out.writeObject(df.queryExecution.toRdd) finally out.close()
+      assert(bytes.size < 32 * 1024, s"the scan's RDD serializes to ${bytes.size} bytes")
+      val scan = df.queryExecution.executedPlan.collectFirst { case s: BatchScanExec => s }.get
+      val factory = scan.readerFactory
+      assert(scan.batch.createReaderFactory() eq scan.batch.createReaderFactory())
+      val held = factory.getClass.getDeclaredFields.toSeq.map { f =>
+        f.setAccessible(true)
+        f.get(factory)
+      }
+      assert(!held.exists(_.isInstanceOf[org.apache.spark.util.SerializableConfiguration]), held)
+      assert(held.exists(_.isInstanceOf[org.apache.spark.broadcast.Broadcast[_]]), held)
     } finally rm(dir)
   }
 

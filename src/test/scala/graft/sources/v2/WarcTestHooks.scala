@@ -9,9 +9,11 @@ import org.apache.spark.sql.connector.read.streaming.MicroBatchStream
   */
 object WarcTestHooks {
   def microBatchStream(
-      dir: String, chunkBytes: Long, offsetMode: String): MicroBatchStream =
+      dir: String, chunkBytes: Long, offsetMode: String): MicroBatchStream = {
+    val spark = graft.TestSession.spark
     new WarcMicroBatchStream(dir, chunkBytes, WarcDataSource.schema,
-      offsetMode)
+      offsetMode, spark, spark.sessionState.newHadoopConf())
+  }
 
   def partitionPath(p: InputPartition): String =
     p.asInstanceOf[WarcInputPartition].path
