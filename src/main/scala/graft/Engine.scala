@@ -1,7 +1,5 @@
 package graft
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.operators.InspectorPipeline
@@ -33,24 +31,17 @@ object Engine {
     * reference's build-then-probe barrier falls out of the join's
     * build/probe contract (SURVEY §2.4 J4).
     *
-    * The two dimension files are read at the same time, once each,
-    * into driver-local frames: the sheet lookup is built from them
-    * without a job of its own.
+    * The two dimension files are read once each, on the driver, into
+    * driver-local frames ([[graft.sources.GeoJson.sheets]],
+    * [[graft.sources.GeoJson.layerBoroughs]]): the sheet lookup is
+    * built from them without planning a scan or running a job.
     */
   def transform(spark: SparkSession, dirs: Dirs): DataFrame = {
     graft.functions.exprs.register(spark)
-    val Seq(sheets, layers) = graft.util.Par(
-      () => onDriver(GeoJson.sheets(spark, dirs.sheets)),
-      () => onDriver(GeoJson.layerBoroughs(spark, dirs.layerBoroughs)))
     InspectorPipeline.records(GeoJson.consolidated(spark, dirs.consolidated),
-      GeoJson.toponyms(spark, dirs.toponyms), sheets, layers)
+      GeoJson.toponyms(spark, dirs.toponyms), GeoJson.sheets(spark, dirs.sheets),
+      GeoJson.layerBoroughs(spark, dirs.layerBoroughs))
   }
-
-  /** `df` collected into a `LocalRelation`: later collects of it, and of
-    * projections of it, run no job.
-    */
-  private def onDriver(df: DataFrame): DataFrame =
-    df.sparkSession.createDataFrame(df.collect().toSeq.asJava, df.schema)
 
   def transformToNdjson(spark: SparkSession, dirs: Dirs, out: String): Unit =
     NdjsonSink.write(transform(spark, dirs), out)

@@ -3,7 +3,8 @@ package graft
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.{CodegenSupport, InputAdapter, LocalTableScanExec, SparkPlan,
+  WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
@@ -169,6 +170,32 @@ object Plans {
       case w: WindowExec => w.partitionSpec.isEmpty
       case _ => false
     }
+
+  /** Operators that can run inside whole-stage codegen
+    * (`CodegenSupport`) but run outside a stage, so each task builds
+    * and runs their projections on its own: a `CodegenFallback`
+    * expression or a lambda function (`filter`, `transform`) keeps its
+    * whole operator out. A driver-local scan, which Spark never makes a
+    * stage of, does not count.
+    */
+  def outsideCodegen(root: SparkPlan): Seq[SparkPlan] = {
+    val inStage = java.util.Collections.newSetFromMap(
+      new java.util.IdentityHashMap[SparkPlan, java.lang.Boolean]())
+    def stage(p: SparkPlan): Unit = p match {
+      case _: InputAdapter =>
+      case _ => inStage.add(p); p.children.foreach(stage)
+    }
+    val nodes = executedNodes(root)
+    nodes.foreach {
+      case w: WholeStageCodegenExec => stage(w.child)
+      case _ =>
+    }
+    nodes.filter {
+      case _: WholeStageCodegenExec | _: InputAdapter | _: LocalTableScanExec => false
+      case p: CodegenSupport => !inStage.contains(p)
+      case _ => false
+    }
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")

@@ -10,7 +10,8 @@ import graft.util.Json
 
 /** Per-query execution profile on [[Session.local]], after Bench's
   * warmup: one JSON line per run with wall time, rows, the
-  * [[QueryMetrics]] record and the plan's unpartitioned windows, so
+  * [[QueryMetrics]] record, the plan's unpartitioned windows and its
+  * operators outside whole-stage codegen ([[Plans.outsideCodegen]]), so
   * many tiny stages (driver bound) separate from heavy task work and
   * one hot key from a balanced join. Run:
   *
@@ -52,10 +53,11 @@ object Profile {
             val df = q.fn(spark, sfDir)
             val rows = df.count()
             val sec = (System.nanoTime() - t0) / 1e9
+            val plan = df.queryExecution.executedPlan
             ListMap("sec" -> math.rint(sec * 1000) / 1000, "rows" -> rows) ++
               metrics.record ++
-              ListMap("unpartitioned_windows" ->
-                Plans.unpartitionedWindows(df.queryExecution.executedPlan))
+              ListMap("unpartitioned_windows" -> Plans.unpartitionedWindows(plan),
+                "outside_codegen" -> Plans.outsideCodegen(plan).size)
           } catch {
             case e: Throwable => ListMap("error" -> e.toString.takeWhile(_ != '\n').take(200))
           }

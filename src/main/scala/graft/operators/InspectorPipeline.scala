@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -24,7 +24,9 @@ import graft.sources.GeoJson
   * and localCheckpoint-ed with everything the later steps parse or
   * look up per row; the pre-flight check is an observed metric of that
   * checkpoint job; and one generator emits all of a row's records
-  * through a single `inline`, as wide as the checkpoint. The two
+  * through a single `inline`, as wide as the checkpoint, and a filter
+  * drops the records a row lacks (no lambda function, so the toponym
+  * generator compiles into its whole-stage codegen stage). The two
   * dimension tables (sheets, layer-boroughs) are small: they are
   * collected on the driver into one `sheet id → (map_id, layer_id,
   * year, borough)` lookup ([[sheetDims]]), so no dimension join
@@ -35,8 +37,11 @@ import graft.sources.GeoJson
   * [[records]] runs them at the same time ([[graft.util.Par]]); the
   * reference's one real barrier, the building index before the
   * toponym probe (building-inspector.js:404-409), is kept by building
-  * the toponym records only after both checkpoints exist. The spatial
-  * join runs once: a left-outer equi-join on layerId with a bbox
+  * the toponym records only after both checkpoints exist. The set of
+  * layers the index covers, which decides the no-index outcome, is a
+  * second observed metric of the consolidated checkpoint job, so it
+  * costs no job of its own. The spatial join runs once: a left-outer
+  * equi-join on layerId with a bbox
   * prefilter and the exact `st_contains` as residual, whose rows carry
   * all three toponym outcomes — the layerId key gives the same pruning
   * the reference's per-layer R-tree does (geo-indices.js:22-56). The
@@ -116,9 +121,11 @@ object InspectorPipeline {
     * count of rows without a sheet is an observed metric of the
     * checkpoint job itself, read from that job's plan once it has run;
     * the sorted sample of missing ids is computed only when it is > 0.
+    * The observed row holds that count, then each of `metrics`, also
+    * over the deduped rows.
     */
-  private def dedupChecked(rows: DataFrame, key: String, dims: Column,
-      what: String, parsed: Column*): DataFrame = {
+  private def dedupChecked(rows: DataFrame, key: String, dims: Column, what: String,
+      parsed: Seq[Column], metrics: Column*): (DataFrame, Row) = {
     val w = Window.partitionBy(col(key)).orderBy(col("ingest_order"))
     val metric = s"$what without a sheet"
     val observed = rows
@@ -127,9 +134,10 @@ object InspectorPipeline {
       .filter(col("rn") === 1)
       .select(rows.columns.map(col).toIndexedSeq ++
         (try_element_at(dims, col("sheet_id").cast("long")).as("dim") +: parsed): _*)
-      .observe(metric, count_if(col("dim").isNull))
+      .observe(metric, count_if(col("dim").isNull), metrics: _*)
     val deduped = observed.localCheckpoint()
-    if (observed.queryExecution.observedMetrics(metric).getLong(0) > 0) {
+    val figures = observed.queryExecution.observedMetrics(metric)
+    if (figures.getLong(0) > 0) {
       val ids = deduped
         .filter(col("dim").isNull)
         .select(col("sheet_id"))
@@ -142,8 +150,14 @@ object InspectorPipeline {
         s"$what references missing sheet id(s): ${ids.mkString(", ")} " +
           "(reference aborts: building-inspector.js:103-104 + stopOnError)")
     }
-    deduped
+    (deduped, figures)
   }
+
+  /** A phase's deduped rows, checkpointed, and the layer ids of the
+    * buildings among them that the spatial index holds (none for the
+    * toponym phase).
+    */
+  private final case class Deduped(rows: DataFrame, indexLayers: Seq[Long] = Nil)
 
   // ------------------------------------------------------------ phases
 
@@ -155,18 +169,24 @@ object InspectorPipeline {
       features: DataFrame,
       sheets: DataFrame,
       layers: DataFrame): ConsolidatedOut =
-    buildingPhase(dedupBuildings(features, sheetDims(sheets, layers)))
+    buildingPhase(dedupBuildings(features, sheetDims(sheets, layers)).rows)
 
   /** The toponym phase alone, probing `indexedBuildings`, as [[records]]
-    * runs it.
+    * runs it. The layers the index holds are collected from
+    * `indexedBuildings` here (one job); [[records]] observes them on
+    * the consolidated checkpoint instead.
     */
   def toponyms(
       spark: SparkSession,
       features: DataFrame,
       sheets: DataFrame,
       layers: DataFrame,
-      indexedBuildings: DataFrame): DataFrame =
-    toponymPhase(dedupToponyms(features, sheetDims(sheets, layers)), indexedBuildings)
+      indexedBuildings: DataFrame): DataFrame = {
+    val indexLayers = indexedBuildings.select(col("b_layer_id")).where(col("b_layer_id").isNotNull)
+      .distinct().collect().map(_.getLong(0)).toSeq
+    toponymPhase(dedupToponyms(features, sheetDims(sheets, layers)).rows, indexedBuildings,
+      indexLayers)
+  }
 
   /** Both phases' records, in one frame. The two dedup checkpoints (with
     * their H4 checks) run at the same time; when both abort, the
@@ -183,13 +203,27 @@ object InspectorPipeline {
     val Seq(buildings, points) = graft.util.Par(
       () => dedupBuildings(consolidated, dims),
       () => dedupToponyms(toponyms, dims))
-    val cons = buildingPhase(buildings)
-    cons.records.unionByName(toponymPhase(points, cons.indexedBuildings))
+    val cons = buildingPhase(buildings.rows)
+    cons.records.unionByName(toponymPhase(points.rows, cons.indexedBuildings, buildings.indexLayers))
   }
 
   // ------------------------------------------------------- consolidated
 
-  private def dedupBuildings(features: DataFrame, dims: Column): DataFrame = {
+  /** F6: a building whose polygon's outer ring has < 4 points is dropped
+    * with everything it would emit (object, relations, log, addresses;
+    * building-inspector.js:138-140). JS quirk preserved: a non-Polygon
+    * geometries[0] (coordinates[0] is a number; undefined < 4 === false)
+    * is NOT dropped.
+    */
+  private val kept: Column =
+    col("rings").isNull || size(try_element_at(col("rings"), lit(1))) >= 4
+
+  /** Of the kept buildings, those the spatial index holds: only
+    * st:Building objects with Polygon geometry (geo-indices.js:14-16, 25-36).
+    */
+  private val polygon: Column = col("geom0.type") === "Polygon" && col("rings").isNotNull
+
+  private def dedupBuildings(features: DataFrame, dims: Column): Deduped = {
     val feats = features.select(
       col("ingest_order"),
       col("feature.properties.id").as("building_id"),
@@ -206,17 +240,14 @@ object InspectorPipeline {
     // occurrence is degenerate must stay suppressed (H2;
     // building-inspector.js:92-100 vs :138-140). J1 (inner, fail-fast
     // semantics) + J2 (left outer) are the sheet lookup.
-    dedupChecked(feats, "building_id", dims, "consolidated",
-      GeoJson.polygonRings(col("geom0.coordinates")).as("rings"))
+    val (rows, figures) = dedupChecked(feats, "building_id", dims, "consolidated",
+      Seq(GeoJson.polygonRings(col("geom0.coordinates")).as("rings")),
+      collect_set(when(kept && polygon, col("dim.layer_id"))))
+    Deduped(rows, figures.getSeq[Long](1))
   }
 
   private def buildingPhase(deduped: DataFrame): ConsolidatedOut = {
-    // F6: drop everything (object, relations, log, addresses) when the
-    // polygon's outer ring has < 4 points (building-inspector.js:138-140).
-    // JS quirk preserved: a non-Polygon geometries[0] (coordinates[0]
-    // is a number; undefined < 4 === false) is NOT dropped.
-    val ok = deduped
-      .filter(col("rings").isNull || size(try_element_at(col("rings"), lit(1))) >= 4)
+    val ok = deduped.filter(kept)
     val year = col("dim.year")
     val layerId = col("dim.layer_id")
     def data(number: Column, colors: Column): Column = dataStruct(
@@ -247,18 +278,15 @@ object InspectorPipeline {
         when(length(col("consensus_color")) > 0, split(col("consensus_color"), ","))),
       rawGeometryJson(col("geom0")))
 
-    val records = ok.select(inline(filter(
-      concat(
-        array(withEdges(building, col("building_id"), col("map_id"), layerId,
-          col("dim.borough")): _*),
-        addressRecords),
-      _.isNotNull)))
+    val records = emit(ok, concat(
+      array(withEdges(building, col("building_id"), col("map_id"), layerId,
+        col("dim.borough")): _*),
+      addressRecords))
 
-    // Spatial index side: only st:Building objects with Polygon
-    // geometry are indexed (geo-indices.js:14-16, 25-36).
+    // Spatial index side.
     val ring0 = try_element_at(col("rings"), lit(1))
     val indexed = ok
-      .filter(col("geom0.type") === "Polygon" && col("rings").isNotNull)
+      .filter(polygon)
       .select(
         layerId.as("b_layer_id"),
         col("building_id").as("b_id"),
@@ -274,7 +302,7 @@ object InspectorPipeline {
 
   // ------------------------------------------------------------ toponyms
 
-  private def dedupToponyms(features: DataFrame, dims: Column): DataFrame = {
+  private def dedupToponyms(features: DataFrame, dims: Column): Deduped = {
     val base = features.select(
       col("ingest_order"),
       col("feature.properties.sheet_id").as("sheet_id"),
@@ -296,10 +324,14 @@ object InspectorPipeline {
     )
 
     // D2 + J1 + J2
-    dedupChecked(withId, "toponym_id", dims, "toponyms")
+    Deduped(dedupChecked(withId, "toponym_id", dims, "toponyms", Nil)._1)
   }
 
-  private def toponymPhase(deduped: DataFrame, indexedBuildings: DataFrame): DataFrame = {
+  /** The toponym records of `deduped`, probing `indexedBuildings`;
+    * `indexLayers` are the layer ids the index holds.
+    */
+  private def toponymPhase(deduped: DataFrame, indexedBuildings: DataFrame,
+      indexLayers: Seq[Long]): DataFrame = {
     val year = col("dim.year")
     val layerId = col("dim.layer_id")
     // toponym mapId comes from the SHEET's map_id
@@ -310,17 +342,16 @@ object InspectorPipeline {
       dataStruct(lit(null).cast(StringType), col("sheet_id"), layerId, mapId,
         lit(null).cast(ArrayType(StringType)), col("dim.borough")),
       rawGeometryJson(col("geometry")))
-    val records = deduped.select(inline(filter(
-      array(withEdges(toponym, col("toponym_id"), mapId, layerId, col("dim.borough")): _*),
-      _.isNotNull)))
+    val records = emit(deduped,
+      array(withEdges(toponym, col("toponym_id"), mapId, layerId, col("dim.borough")): _*))
 
     // J3: per-layer point-in-polygon probe, Points only
     // (geo-indices.js:18-20,38-50; building-inspector.js:280-313).
     // "No geospatial index for layer" = the toponym's layer has no
     // indexed polygons at all (geo-indices.js:44-46). The flag is an
-    // IN over the index's layer ids, planned as a broadcast existence
-    // join (no aggregate; a null layer id reads as no index), and rides
-    // along so one left-outer join yields every outcome.
+    // IN over the index's layer ids, a driver-side set (a null layer id
+    // reads as no index), and rides along so one left-outer join yields
+    // every outcome.
     val flagged = deduped
       .filter(col("geometry.type") === "Point" && col("coords").isNotNull)
       .select(
@@ -328,7 +359,7 @@ object InspectorPipeline {
         element_at(col("coords"), 1).as("px"),
         element_at(col("coords"), 2).as("py"),
         col("coords"),
-        layerId.isin(broadcast(indexedBuildings.select(col("b_layer_id")))).as("has_index"),
+        layerId.isin(indexLayers: _*).as("has_index"),
       )
 
     // Equi-join on layerId + bbox prefilter, exact contains as residual;
@@ -356,6 +387,14 @@ object InspectorPipeline {
   }
 
   // ----------------------------------------------------------- helpers
+
+  /** One row per non-null element of each row's `records` array:
+    * `inline` turns a null element into a row of nulls, which the filter
+    * drops. A lambda function (`filter(records, _.isNotNull)`) would keep
+    * the generator out of whole-stage codegen.
+    */
+  private def emit(rows: DataFrame, records: Column): DataFrame =
+    rows.select(inline(records)).filter(col("rtype").isNotNull)
 
   /** Superset `data` payload; to_json omits nulls, matching how JS
     * `undefined` fields vanish from the reference's NDJSON.

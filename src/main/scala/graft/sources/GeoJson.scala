@@ -3,15 +3,18 @@ package graft.sources
 import com.fasterxml.jackson.core.{JsonFactory, JsonToken}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.json.{JacksonParser, JSONOptions}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.json.{JacksonParser, JSONOptions, JSONOptionsInRead}
 import org.apache.spark.sql.catalyst.util.{FailureSafeParser, PermissiveMode}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
+
+import graft.sources.v2.{GeoJsonDataSource, Landing}
 
 /** GeoJSON landing-file readers (SURVEY.md §2.1 S4/S5/S6).
   *
@@ -37,6 +40,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * core (capped by `spark.sql.files.maxPartitionBytes`), and reads them
   * with the session's Hadoop conf broadcast once per scan, and
   * [[featuresNdjson]] through Spark's line-split JSON reader.
+  *
+  * The two dimension files ([[sheets]], [[layerBoroughs]]) are a few
+  * dozen rows each. They are read on the driver into driver-local
+  * frames, with the parsers a Spark read of them uses, so neither plans
+  * a scan or runs a job, and collecting them (or a projection of them)
+  * runs none either.
   */
 object GeoJson {
 
@@ -136,20 +145,45 @@ object GeoJson {
   def toponyms(spark: SparkSession, path: String): DataFrame =
     features(spark, path, toponymFeatureSchema)
 
-  def sheets(spark: SparkSession, path: String): DataFrame =
-    features(spark, path, sheetFeatureSchema)
+  /** The sheets FeatureCollection as [[features]] reads it, read on the
+    * driver: the `geojson` source's range reader over the whole file,
+    * then [[FeatureFromJson]] on each feature.
+    */
+  def sheets(spark: SparkSession, path: String): DataFrame = {
+    val parse = FeatureFromJson(BoundReference(2, StringType, nullable = false), sheetFeatureSchema)
+    val rows = GeoJsonDataSource.readLocal(path, spark.sessionState.newHadoopConf())
+      .map(r => InternalRow(r.getLong(1), parse.eval(r)))
+    Bridge.localFrame(spark, StructType(Seq(
+      StructField("ingest_order", LongType, nullable = false),
+      StructField("feature", sheetFeatureSchema))), rows)
+  }
+
+  val layerBoroughsSchema: StructType = StructType(Seq(
+    StructField("id", LongType),
+    StructField("borough", StringType),
+  ))
 
   /** layer-boroughs.json: plain JSON array of {id, borough}
-    * (reference: layer-boroughs.json, loaded building-inspector.js:388).
+    * (reference: layer-boroughs.json, loaded building-inspector.js:388),
+    * read on the driver as `spark.read.schema(layerBoroughsSchema)
+    * .option("multiLine", true).json(path)` reads it: the whole file is
+    * one record for Spark's `JacksonParser`, a root array yields one
+    * row per element, and a malformed file yields what Spark's
+    * PERMISSIVE mode yields.
     */
-  def layerBoroughs(spark: SparkSession, path: String): DataFrame =
-    spark.read
-      .schema(StructType(Seq(
-        StructField("id", LongType),
-        StructField("borough", StringType),
-      )))
-      .option("multiLine", value = true)
-      .json(path)
+  def layerBoroughs(spark: SparkSession, path: String): DataFrame = {
+    val conf = spark.sessionState.conf
+    val options = new JSONOptionsInRead(Map("multiLine" -> "true"),
+      conf.sessionLocalTimeZone, conf.columnNameOfCorruptRecord)
+    val parser = new JacksonParser(layerBoroughsSchema, options, allowArrayAsStructs = true)
+    val records = new FailureSafeParser[Array[Byte]](
+      bytes => parser.parse(bytes, (f: JsonFactory, b: Array[Byte]) => f.createParser(b),
+        UTF8String.fromBytes),
+      options.parseMode, layerBoroughsSchema, options.columnNameOfCorruptRecord)
+    val in = Landing.open(path, spark.sessionState.newHadoopConf())
+    val bytes = try in.readAllBytes() finally in.close()
+    Bridge.localFrame(spark, layerBoroughsSchema, records.parse(bytes).toList)
+  }
 
   /** Parse a raw Polygon coordinates subtree to typed rings. */
   def polygonRings(raw: Column): Column =
@@ -168,9 +202,12 @@ object GeoJson {
   * `from_json` re-prints it (no whitespace, floats through
   * `Double.toString`); a JSON `null` is a null feature, not a struct of
   * nulls. Malformed text gives a struct of nulls, as in `from_json`.
+  *
+  * Generated code calls [[parse]] on this expression, so a projection
+  * holding it compiles into its whole-stage codegen stage.
   */
 private[sources] case class FeatureFromJson(child: Expression, schema: StructType)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression {
   override def dataType: DataType = schema
   override def nullable: Boolean = true
 
@@ -185,13 +222,21 @@ private[sources] case class FeatureFromJson(child: Expression, schema: StructTyp
       PermissiveMode, schema, options.columnNameOfCorruptRecord)
   }
 
-  override protected def nullSafeEval(input: Any): Any = {
-    val text = input.asInstanceOf[UTF8String]
+  /** The feature `text` holds; null for the JSON literal `null`. */
+  def parse(text: UTF8String): InternalRow =
     if (text == FeatureFromJson.JsonNull) null
     else {
       val rows = parser.parse(text.getBytes)
       if (rows.hasNext) rows.next() else null
     }
+
+  override protected def nullSafeEval(input: Any): Any = parse(input.asInstanceOf[UTF8String])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val self = ctx.addReferenceObj("featureFromJson", this)
+    nullSafeCodeGen(ctx, ev, text =>
+      s"""${ev.value} = $self.parse($text);
+         |${ev.isNull} = ${ev.value} == null;""".stripMargin)
   }
 
   override protected def withNewChildInternal(newChild: Expression): FeatureFromJson =

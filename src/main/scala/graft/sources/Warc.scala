@@ -64,13 +64,6 @@ object Warc {
     "('software: graft-warc/1.0' || chr(13) || chr(10) || " +
       "'format: WARC File Format 1.0' || chr(13) || chr(10))"
 
-  /** The record's complete header block (version line through the
-    * blank line) as ONE string expression — every derived header is
-    * deterministic row arithmetic so a DuckDB oracle can replay the
-    * bytes without reading the files back, and it is the single
-    * definition behind both the string and the binary envelope, so a
-    * header change can never reach one renderer and miss the other.
-    */
   /** The default target URI: the corpus page address every renderer
     * except [[renderRobots]] uses.
     */
@@ -78,6 +71,13 @@ object Warc {
     concat(lit("http://"), col("source"), lit(".example/doc/"),
       col("doc_id").cast("string"))
 
+  /** The record's complete header block (version line through the
+    * blank line) as ONE string expression — every derived header is
+    * deterministic row arithmetic so a DuckDB oracle can replay the
+    * bytes without reading the files back, and it is the single
+    * definition behind both the string and the binary envelope, so a
+    * header change can never reach one renderer and miss the other.
+    */
   private def headerBlock(
       payload: org.apache.spark.sql.Column,
       contentType: String,

@@ -49,6 +49,9 @@ import org.apache.spark.util.SerializableConfiguration
   * literals — and each split carries its first feature index, keeping
   * `ingest_order` globally exact.
   *
+  * A scan skims each file once: it keeps its planned partitions, as it
+  * keeps its reader factory, however often Spark asks for them.
+  *
   * Files are read through the session's Hadoop FileSystem, so any
   * Hadoop path works. The reader factory carries that Hadoop conf as a
   * broadcast made once per scan (the scan keeps its one factory), as
@@ -151,6 +154,17 @@ object GeoJsonDataSource {
     } finally parser.close()
   }
 
+  /** Every row a scan of the one file `path` yields, in file order,
+    * read on the calling thread: one skim, then the range reader over
+    * the whole features array. No scan is planned and no job runs.
+    */
+  private[sources] def readLocal(path: String, conf: Configuration): Seq[InternalRow] =
+    indexSplits(path, conf, Long.MaxValue).flatMap { case (start, end, first) =>
+      val reader = new GeoJsonRangeReader(GeoJsonInputPartition(path, start, end, first), conf)
+      try Iterator.continually(reader.next()).takeWhile(identity).map(_ => reader.get()).toList
+      finally reader.close()
+    }
+
   /** Byte offset just past the array element whose first token is
     * the parser's current token.
     */
@@ -174,9 +188,11 @@ private[v2] class GeoJsonTable(paths: Seq[String]) extends Table with SupportsRe
       override def build(): Scan = this
       override def readSchema(): StructType = GeoJsonDataSource.schema
       override def toBatch: Batch = this
-      override def planInputPartitions(): Array[InputPartition] =
+      // one skim per file and one conf broadcast per scan, however
+      // often Spark asks (planning alone asks for the partitions twice)
+      private lazy val partitions =
         paths.flatMap(GeoJsonDataSource.partitionsFor(spark, conf, _)).toArray
-      // one factory, so one conf broadcast, however often Spark asks
+      override def planInputPartitions(): Array[InputPartition] = partitions
       private lazy val readerFactory = GeoJsonReaderFactory(spark, conf)
       override def createReaderFactory(): PartitionReaderFactory = readerFactory
       override def toMicroBatchStream(checkpointLocation: String)

@@ -3,12 +3,13 @@ package graft.sources.v2
 import java.io.FileNotFoundException
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{ChecksumFileSystem, FSDataInputStream, FileStatus, Path}
+import org.apache.hadoop.fs.{ChecksumFileSystem, FSDataInputStream, FileStatus, FileSystem, Path}
 
 /** The one file layer of the `warc` and `geojson` readers: which files
   * of a landing directory are data, and how a file is opened, on the
   * path's Hadoop `FileSystem`, so any Hadoop path works (a plain path,
-  * a `file:` URI, HDFS).
+  * a `file:` URI, HDFS). The part-file writer writes on the same
+  * [[fileSystem]].
   */
 private[sources] object Landing {
 
@@ -42,18 +43,23 @@ private[sources] object Landing {
     p.getFileSystem(conf).getFileStatus(p).getLen
   }
 
-  /** Opens `path` for reading, seekable. On a checksummed file system
-    * (Hadoop's local one) the bytes are read as stored, without its
-    * `.crc` side files: a WARC archive carries its own integrity
-    * checks (framing, gzip member CRCs, payload digests), and a file
-    * edited in place is read as it now is.
+  /** Opens `path` for reading, seekable, on its [[fileSystem]]: the
+    * bytes are read as stored, without `.crc` side files. A WARC
+    * archive carries its own integrity checks (framing, gzip member
+    * CRCs, payload digests), and a file edited in place is read as it
+    * now is.
     */
   def open(path: String, conf: Configuration): FSDataInputStream = {
     val p = new Path(path)
-    val fs = p.getFileSystem(conf) match {
-      case c: ChecksumFileSystem => c.getRawFileSystem
-      case other => other
-    }
-    fs.open(p)
+    fileSystem(p, conf).open(p)
+  }
+
+  /** The file system of `p` without checksums: on a checksummed file
+    * system (Hadoop's local one) its raw file system, which neither
+    * reads nor writes `.crc` side files.
+    */
+  def fileSystem(p: Path, conf: Configuration): FileSystem = p.getFileSystem(conf) match {
+    case c: ChecksumFileSystem => c.getRawFileSystem
+    case other => other
   }
 }

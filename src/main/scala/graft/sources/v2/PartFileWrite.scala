@@ -37,13 +37,16 @@ private[sources] trait RecordWriter {
 /** DSv2 batch write of one directory of part files on the output
   * path's Hadoop `FileSystem`, so any Hadoop path works (a plain
   * path, a `file:` URI, HDFS). Both file sinks go through it: NDJSON
-  * ([[graft.sources.NdjsonSink]]) and WARC ([[WarcFormat]]).
+  * ([[graft.sources.NdjsonSink]]) and WARC ([[WarcFormat]]). Files are
+  * written as [[Landing.open]] reads them, without checksums: on
+  * Hadoop's local file system no `.crc` file is made beside each one.
   *
   * Commit protocol, the one copy in the source tree:
   *   - on the driver, before any task starts, the directory is made;
   *     overwrite (`SupportsTruncate`) deletes old `part-*` files,
   *     dotted `.part-*` files (sidecars, and temp files a dead JVM
-  *     left) and `_SUCCESS`;
+  *     left), `_SUCCESS`, and the `.crc` files of any of them that a
+  *     checksummed write left;
   *   - each task writes `.part-<partition>-<task><ext>.inprogress`,
   *     opened at its first row, so an empty partition leaves no file;
   *     readers never list dotted names, and task attempt ids keep
@@ -73,7 +76,7 @@ private[v2] class PartFileWrite(dir: String, format: PartFormat, clear: Boolean)
   private val spark = SparkSession.active
   private val conf = spark.sessionState.newHadoopConf()
   private val path = new Path(dir)
-  private def fs = path.getFileSystem(conf)
+  private def fs = Landing.fileSystem(path, conf)
 
   override def toBatch: BatchWrite = this
 
@@ -97,15 +100,15 @@ private[v2] class PartFileWrite(dir: String, format: PartFormat, clear: Boolean)
 }
 
 private[v2] object PartFileWrite {
-  /** Files an overwrite clears: parts, dotted temp files and sidecars
-    * (and the `.crc` files a checksummed file system keeps beside them).
+  /** Files an overwrite clears: parts, dotted temp files, sidecars,
+    * `_SUCCESS`, and the dotted `.crc` file of any of them.
     */
-  def stale(name: String): Boolean =
-    name.dropWhile(_ == '.').startsWith("part-") || name == "_SUCCESS"
+  def stale(name: String): Boolean = {
+    val file = name.dropWhile(_ == '.').stripSuffix(".crc")
+    file.startsWith("part-") || file == "_SUCCESS"
+  }
 
-  /** Deletes `p` if it exists (a checksummed file system deletes a
-    * file's `.crc` with it, so a listed `.crc` may be gone already).
-    */
+  /** Deletes `p` if it exists. */
   def delete(fs: FileSystem, p: Path): Unit =
     if (!fs.delete(p, false) && fs.exists(p)) throw new IOException(s"cannot delete $p")
 }
@@ -124,7 +127,7 @@ private[v2] class PartFileWriterFactory(
 private[v2] class PartFileWriter(
     dir: Path, format: PartFormat, conf: Configuration, name: String)
     extends DataWriter[InternalRow] {
-  private val fs = dir.getFileSystem(conf)
+  private val fs = Landing.fileSystem(dir, conf)
   private var records: RecordWriter = _
   // every path this attempt has made, temp or final, for abort
   private var made = List.empty[Path]

@@ -1,15 +1,27 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.classic
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.types.StructType
 
 /** Column ⇄ Expression bridge. Spark 4 moved the classic converters
   * behind `private[sql]`, so this one-file shim lives under the
   * org.apache.spark.sql package namespace to reach them; all engine
-  * code goes through these two methods only.
+  * code goes through these methods only.
   */
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** `rows` of `schema` as a driver-local frame (a `LocalRelation`):
+    * collecting it, or a projection of it, runs no job.
+    */
+  def localFrame(spark: SparkSession, schema: StructType, rows: Seq[InternalRow]): DataFrame =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession],
+      LocalRelation(DataTypeUtils.toAttributes(schema), rows))
 }

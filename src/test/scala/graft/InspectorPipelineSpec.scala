@@ -165,6 +165,21 @@ class InspectorPipelineSpec extends AnyFunSuite {
   private def recordMultiset(dirs: Engine.Dirs): Map[String, Int] =
     multisetOf(NdjsonSink.lines(Engine.transform(spark, dirs)).collect().map(_.getString(0)).toSeq)
 
+  // The benchmark's traced layers call the two phases one at a time;
+  // the toponym phase then reads the indexed layers from the index.
+  test("the phases called one at a time give the full transform's records") {
+    import graft.operators.InspectorPipeline
+    import graft.sources.GeoJson
+    val sheets = GeoJson.sheets(spark, golden.sheets)
+    val layers = GeoJson.layerBoroughs(spark, golden.layerBoroughs)
+    val cons = InspectorPipeline.consolidated(spark,
+      GeoJson.consolidated(spark, golden.consolidated), sheets, layers)
+    val topo = InspectorPipeline.toponyms(spark, GeoJson.toponyms(spark, golden.toponyms),
+      sheets, layers, cons.indexedBuildings)
+    val lines = NdjsonSink.lines(cons.records.unionByName(topo)).collect().map(_.getString(0))
+    assertSameRecords(multisetOf(lines.toSeq), recordMultiset(golden))
+  }
+
   // The download step lands consolidated as NDJSON; transform must
   // read that file as landed, with the same first-seen dedup order.
   test("download-landed NDJSON consolidated transforms like the FeatureCollection golden") {
@@ -363,7 +378,10 @@ class InspectorPipelineSpec extends AnyFunSuite {
   // sheets) and one record generator: no cached fan-out, and the
   // point-in-polygon join (the costly part) planned once for all three
   // toponym outcomes, with its index side broadcast as planned, never
-  // shuffled first. The dimension files are read once per transform.
+  // shuffled first. The dimension files are read on the driver and the
+  // no-index flag is observed on the consolidated checkpoint: 6 jobs,
+  // the two checkpoints with their shuffles, the index broadcast and
+  // the write.
   test("plan guard: one pass per phase, one st_contains join, no cached scans") {
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
@@ -377,7 +395,7 @@ class InspectorPipelineSpec extends AnyFunSuite {
     val helper = new AdaptiveSparkPlanHelper {}
     val executed = metrics.plans
     assert(executed.nonEmpty)
-    assert(metrics.jobs <= 9, s"${metrics.jobs} Spark jobs for one transform")
+    assert(metrics.jobs <= 6, s"${metrics.jobs} Spark jobs for one transform")
     assert(executed.forall(p => helper.find(p)(_.isInstanceOf[InMemoryTableScanExec]).isEmpty),
       "a cached relation is scanned")
     val spatialJoins = executed.flatMap(p => helper.collectWithSubqueries(p) {
@@ -407,6 +425,24 @@ class InspectorPipelineSpec extends AnyFunSuite {
       assert(n == math.min(spark.sparkContext.defaultParallelism, distinctKeys(key)),
         s"the $key dedup window runs $n tasks")
     }
+  }
+
+  // A CodegenFallback expression or a lambda function (`filter`,
+  // `transform`) keeps its whole operator out of whole-stage codegen,
+  // where each task builds its projections again.
+  test("the feature parse and the toponym records run in whole-stage codegen") {
+    import org.apache.spark.sql.execution.{GenerateExec, SparkPlan}
+
+    val out = java.nio.file.Files.createTempDirectory("codegen").resolve("ndjson").toString
+    val (_, metrics) = QueryMetrics.measure(spark)(Engine.transformToNdjson(spark, golden, out))
+    def parse(p: SparkPlan) =
+      p.expressions.exists(_.exists(_.getClass.getSimpleName == "FeatureFromJson"))
+    def toponymRecords(p: SparkPlan) =
+      p.isInstanceOf[GenerateExec] && p.references.exists(_.name == "toponym_id")
+    val executed = metrics.plans.flatMap(Plans.executedNodes)
+    assert(executed.exists(parse) && executed.exists(toponymRecords), metrics.plans.mkString("\n"))
+    val outside = metrics.plans.flatMap(Plans.outsideCodegen)
+    assert(!outside.exists(p => parse(p) || toponymRecords(p)), outside.mkString("\n"))
   }
 
   private val emptyCollection = """{"type":"FeatureCollection","features":[]}"""

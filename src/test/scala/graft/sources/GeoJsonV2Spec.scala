@@ -306,6 +306,18 @@ class GeoJsonV2Spec extends AnyFunSuite {
     assert(batch.createReaderFactory() eq batch.createReaderFactory())
   }
 
+  // Spark asks a scan for its partitions more than once while planning
+  // a query; each ask skimmed the file again.
+  test("planning a geojson query reads each file once") {
+    val paths = Seq(fixture("consolidated.geojson"), fixture("toponyms.geojson"))
+    val stats = org.apache.hadoop.fs.FileSystem.getGlobalStorageStatistics.get("file")
+    def bytesRead = stats.getLong("bytesRead").longValue
+    val df = spark.read.format("geojson").load(paths.mkString(","))
+    val before = bytesRead
+    df.queryExecution.executedPlan
+    assert(bytesRead - before == paths.map(new java.io.File(_).length()).sum)
+  }
+
   private def jsonStr(s: String): String =
     "\"" + s.flatMap {
       case '"' => "\\\""

@@ -114,6 +114,34 @@ class PartFileWriteSpec extends AnyFunSuite {
     assert(spark.read.format("warc").load(warc.getPath).count() == 1)
   }
 
+  // Parts go through the raw local file system, as the readers open
+  // them: no checksum file beside each committed file.
+  test("a committed NDJSON or WARC directory holds no .crc file") {
+    val ndjson = new File(tempDir("ndjson-crc"), "out")
+    NdjsonSink.write(records, ndjson.getPath)
+    val warc = new File(tempDir("warc-crc"), "out")
+    import spark.implicits._
+    Warc.save((1 to 4).map(i =>
+      s"WARC/1.0\r\nWARC-Type: resource\r\nContent-Length: 1\r\n\r\n$i\r\n").toDF("record")
+      .repartition(2), warc.getPath)
+    for (dir <- Seq(ndjson, warc)) {
+      assert(names(dir).exists(_.startsWith("part-")), names(dir))
+      assert(!names(dir).exists(_.endsWith(".crc")), names(dir))
+    }
+  }
+
+  // A directory an older, checksummed write left holds a `.crc` beside
+  // each part, sidecar and `_SUCCESS`.
+  test("an overwrite clears the .crc files an older write left") {
+    val dir = new File(tempDir("ndjson-old-crc"), "out")
+    NdjsonSink.write(records, dir.getPath)
+    val old = names(dir).filterNot(_.startsWith(".")).map(n => s".$n.crc") :+ "..part-x.idx.crc"
+    old.foreach(n => Files.write(new File(dir, n).toPath, Array[Byte](0, 1)))
+    NdjsonSink.write(records, dir.getPath)
+    assert(!names(dir).exists(_.endsWith(".crc")), names(dir))
+    assert(writtenLines(dir) == expected)
+  }
+
   // The Hadoop conf (about 110 KB serialized) rides a broadcast made
   // once per write, as the geojson reader's does.
   test("an NDJSON write's task factory carries no Hadoop conf of its own") {
